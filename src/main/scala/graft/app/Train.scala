@@ -12,8 +12,9 @@ import graft.sources.SentimentCsv
   * `model_naive_bayes.py:44-214`, `model_svm.py:73-309`) unified behind a
   * model-kind argument (they share everything but the classifier stage):
   *
-  *   cleaned CSV → dropna → 80/20 split (seed 42) → Pipeline.fit
-  *   (tokenize → stopwords → TF-IDF [or NGram branch] → classifier) →
+  *   cleaned CSV → dropna → 80/20 split (seed 42) → SentimentPipeline.fit
+  *   (tokenize → stopwords → TF-IDF [or NGram branch] → classifier; LR
+  *   and SVM fit on the columns the IDF keeps, then widen to 2^18) →
   *   transform(test) → in-engine evaluate (accuracy/F1/AUC + confusion) →
   *   metrics JSON sink + model save.
   *
@@ -57,8 +58,7 @@ object Train {
       useNgram: Boolean = false, ngramN: Int = 2): Result = {
     val df = labeled.withColumn("label", col("label").cast("double"))
     val (train, test) = SentimentPipeline.split(df)
-    val model = SentimentPipeline
-      .pipeline(classifier(kind), useNgram, ngramN).fit(train)
+    val model = SentimentPipeline.fit(classifier(kind), train, useNgram, ngramN)
     // Persisted: evaluate runs four aggregation jobs over the scored
     // frame and --charts adds a fifth; without the persist each one
     // re-runs the full model.transform over the test set.

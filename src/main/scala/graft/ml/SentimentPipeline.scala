@@ -1,9 +1,12 @@
 package graft.ml
 
 import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
-import org.apache.spark.ml.classification.{LinearSVC, LogisticRegression, NaiveBayes}
+import org.apache.spark.ml.classification.{LinearModels, LinearSVC,
+  LinearSVCModel, LogisticRegression, LogisticRegressionModel, NaiveBayes}
 import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, MulticlassClassificationEvaluator}
 import org.apache.spark.ml.feature._
+import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.param.{ParamMap, Params}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -25,10 +28,18 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: all transformers are row-local; the fits are
   * treeAggregate jobs (IDF/NB one pass, LR/SVC one pass per L-BFGS/OWLQN
-  * iteration over cached instances). Evaluation is in-engine — the
-  * reference's collect-to-sklearn confusion matrix
-  * (`model_logistic_regression.py:217-218`) is replaced by a
-  * groupBy(label, prediction) aggregate, and ROC/AUC by the binned
+  * iteration over cached instances). LR and LinearSVC on the TF-IDF
+  * branch fit only the columns the fitted IDF keeps ([[fit]]): IDF
+  * zeroes every hash bucket with docFreq < minDocFreq, so each dropped
+  * column is 0 in every row and its coefficient is exactly 0 either
+  * way, while every loss evaluation would otherwise broadcast, build and
+  * reduce 2^18-wide coefficient and gradient vectors. The model is then
+  * widened back to 2^18 and saved as the same 5-stage pipeline. The gain
+  * is the share of buckets the IDF drops; on a corpus where nearly every
+  * bucket is active it is neutral (same jobs, an O(nnz) projection).
+  * Evaluation is in-engine — the reference's collect-to-sklearn
+  * confusion matrix (`model_logistic_regression.py:217-218`) is replaced
+  * by a groupBy(label, prediction) aggregate, and ROC/AUC by the binned
   * in-engine form in [[BinaryMetrics]].
   */
 object SentimentPipeline {
@@ -80,6 +91,91 @@ object SentimentPipeline {
     new Pipeline().setStages(feats :+ classifier)
   }
 
+  /** Fit the pipeline of [[pipeline]] on `train`. LR and LinearSVC on
+    * the TF-IDF branch fit through [[fitKept]] on the fitted feature
+    * stages; NB (whose smoothing depends on the feature width) and the
+    * N-gram branch (a compact CountVectorizer space already) fit the
+    * plain pipeline. Either way the result is the same PipelineModel:
+    * feature stages followed by a full-width classifier model. */
+  def fit(classifier: PipelineStage, train: DataFrame,
+      useNgram: Boolean = false, ngramN: Int = 2): PipelineModel = {
+    def withFeatures(fitClf: (IDFModel, DataFrame) => PipelineStage) = {
+      val feats = new Pipeline().setStages(tfidfStages()).fit(train)
+      val idf = feats.stages.last.asInstanceOf[IDFModel]
+      val clf = fitClf(idf, feats.transform(train))
+      // all stages are fitted: Pipeline.fit only assembles, no job
+      new Pipeline().setStages(feats.stages :+ clf).fit(train)
+    }
+    classifier match {
+      case lr: LogisticRegression if !useNgram =>
+        withFeatures(fitKept(lr, _, _))
+      case svc: LinearSVC if !useNgram =>
+        withFeatures(fitKept(svc, _, _))
+      case _ => pipeline(classifier, useNgram, ngramN).fit(train)
+    }
+  }
+
+  /** The feature columns a fitted IDF keeps (idf != 0); every other
+    * column is 0 in every row it transforms. */
+  def keptColumns(idf: IDFModel): Array[Int] =
+    idf.idf.toArray.zipWithIndex.collect { case (w, j) if w != 0.0 => j }
+
+  /** LR fitted on the columns `idf` keeps of the TF-IDF `features`,
+    * widened back to the IDF's width. */
+  def fitKept(lr: LogisticRegression, idf: IDFModel,
+      features: DataFrame): LogisticRegressionModel = {
+    val kept = keptColumns(idf)
+    val m = narrowed(features, lr.getFeaturesCol, kept, idf.idf.size)(lr.fit)
+    LinearModels.logisticRegression(m.uid,
+      widen(m.coefficients, kept, idf.idf.size), m.intercept, m.numClasses)
+      .copy(setParams(m))
+  }
+
+  /** LinearSVC fitted on the columns `idf` keeps of the TF-IDF
+    * `features`, widened back to the IDF's width. */
+  def fitKept(svc: LinearSVC, idf: IDFModel,
+      features: DataFrame): LinearSVCModel = {
+    val kept = keptColumns(idf)
+    val m = narrowed(features, svc.getFeaturesCol, kept, idf.idf.size)(svc.fit)
+    LinearModels.linearSvc(m.uid,
+      widen(m.coefficients, kept, idf.idf.size), m.intercept)
+      .copy(setParams(m))
+  }
+
+  /** Run `fit` on `df` with vector column `c` projected onto the `kept`
+    * columns, in order: an O(nnz) map per row through a broadcast
+    * position array (VectorSlicer's sorted slice walks the kept list per
+    * row instead). An empty kept set maps to one all-zero column, since
+    * LR and LinearSVC reject 0-wide vectors. */
+  private def narrowed[T](df: DataFrame, c: String, kept: Array[Int],
+      width: Int)(fit: DataFrame => T): T = {
+    val pos = Array.fill(width)(-1)
+    kept.indices.foreach(i => pos(kept(i)) = i)
+    val narrowWidth = math.max(1, kept.length)
+    val bPos = df.sparkSession.sparkContext.broadcast(pos)
+    val project = udf { (v: Vector) =>
+      val p = bPos.value
+      val idx = Array.newBuilder[Int]
+      val vals = Array.newBuilder[Double]
+      v.foreachActive { (j, x) =>
+        if (p(j) >= 0) { idx += p(j); vals += x }
+      }
+      Vectors.sparse(narrowWidth, idx.result(), vals.result())
+    }
+    try fit(df.withColumn(c, project(col(c))))
+    finally bPos.destroy()
+  }
+
+  /** Narrow coefficients back at their `kept` columns of a `width`-wide
+    * vector (the empty kept set's single column has nowhere to go). */
+  private def widen(coef: Vector, kept: Array[Int], width: Int): Vector =
+    Vectors.sparse(width, kept, coef.toArray.take(kept.length))
+
+  /** The params explicitly set on `m`, so the rebuilt model carries (and
+    * saves) exactly what a direct fit would. */
+  private def setParams(m: Params): ParamMap =
+    ParamMap(m.extractParamMap().toSeq.filter(p => m.isSet(p.param)): _*)
+
   /** 80/20 split with the reference's seed (`model_*.py`: seed=42). */
   def split(df: DataFrame): (DataFrame, DataFrame) = {
     val Array(tr, te) = df.randomSplit(Array(0.8, 0.2), seed = 42)
@@ -91,7 +187,10 @@ object SentimentPipeline {
 
   /** In-engine evaluation: evaluators for accuracy/F1/AUC + a
     * groupBy(label, prediction) confusion matrix (never collect the
-    * predictions themselves). */
+    * predictions themselves). AUC uses exact thresholds (numBins 0)
+    * instead of the evaluator's default 1,000 bins, whose edges follow
+    * a range-partition sample seeded from the RDD id, so a binned AUC
+    * differs between two evaluations of the same frame. */
   def evaluate(predictions: DataFrame,
       rawCol: String = "rawPrediction"): Metrics = {
     val acc = new MulticlassClassificationEvaluator().setLabelCol("label")
@@ -102,7 +201,7 @@ object SentimentPipeline {
       .evaluate(predictions)
     val auc = new BinaryClassificationEvaluator().setLabelCol("label")
       .setRawPredictionCol(rawCol).setMetricName("areaUnderROC")
-      .evaluate(predictions)
+      .setNumBins(0).evaluate(predictions)
     val confusion = confusionMatrix(predictions).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     Metrics(acc, f1, auc, confusion)

@@ -1,6 +1,7 @@
 package graft.ml
 
 import org.apache.spark.ml.Pipeline
+import org.apache.spark.ml.feature.IDFModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.SessionCache
@@ -23,15 +24,19 @@ import graft.util.SessionCache
   */
 object SharedFeatures {
 
-  private val cache = new SessionCache[(DataFrame, DataFrame)]
+  /** Prepared (doc_id, label, features) frames and the IDF fitted on
+    * `train`, whose kept columns [[SentimentPipeline.fitKept]] fits on. */
+  final case class TrainTest(train: DataFrame, test: DataFrame, idf: IDFModel)
 
-  /** (trainFeatures, testFeatures) for the sf-dir's documents table with
+  private val cache = new SessionCache[TrainTest]
+
+  /** Train and test features for the sf-dir's documents table with
     * the deterministic lang-derived label, split 80/20 seed 42. Cached
     * per (session, directory) — persisted frames die with their
     * SparkContext, so a dataset key alone would hand a later session
     * frames owned by a stopped context; the weak session keying lets
     * the whole entry go when the session does. */
-  def trainTest(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+  def trainTest(spark: SparkSession, dir: String): TrainTest =
     cache.getOrElseUpdate(spark, dir) {
       val docs = graft.Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"),
@@ -52,6 +57,7 @@ object SharedFeatures {
           .select(col("doc_id"), col("label"), col("features"))
           .coalesce(parts)
           .persist()
-      (prep(train), prep(test))
+      TrainTest(prep(train), prep(test),
+        featModel.stages.last.asInstanceOf[IDFModel])
     }
 }

@@ -176,6 +176,7 @@ object Bm25 {
       .write.mode("overwrite").parquet(s"$path/doclens")
     corpusStats(docs, textCol, Nil)
       .write.mode("overwrite").parquet(s"$path/stats")
+    invalidateTwinMeta(path); invalidateStatsMeta(path)
   }
 
   /** Incremental index maintenance: fold a batch of NEW documents into

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.ml.{BinaryMetrics, SentimentPipeline}
+import graft.ml.{BinaryMetrics, SentimentPipeline, SharedFeatures}
 
 /** ML pipeline queries (SURVEY.md §2.5). Model fits are RNG/float-
   * iteration dependent → rows-only checks + golden-tolerance specs
@@ -34,20 +34,22 @@ object MLQueries extends QueryModule {
     new graft.util.SessionCache[org.apache.spark.ml.classification.NaiveBayesModel]
   private val svcCache =
     new graft.util.SessionCache[org.apache.spark.ml.classification.LinearSVCModel]
+  // LR and LinearSVC fit through the same kept-column path as
+  // graft.app.Train (SentimentPipeline.fitKept).
   private def lrModel(s: org.apache.spark.sql.SparkSession, d: String) =
     lrCache.getOrElseUpdate(s, d) {
-      SentimentPipeline.logisticRegression()
-        .fit(graft.ml.SharedFeatures.trainTest(s, d)._1)
+      val f = SharedFeatures.trainTest(s, d)
+      SentimentPipeline.fitKept(SentimentPipeline.logisticRegression(),
+        f.idf, f.train)
     }
   private def nbModel(s: org.apache.spark.sql.SparkSession, d: String) =
     nbCache.getOrElseUpdate(s, d) {
-      SentimentPipeline.naiveBayes()
-        .fit(graft.ml.SharedFeatures.trainTest(s, d)._1)
+      SentimentPipeline.naiveBayes().fit(SharedFeatures.trainTest(s, d).train)
     }
   private def svcModel(s: org.apache.spark.sql.SparkSession, d: String) =
     svcCache.getOrElseUpdate(s, d) {
-      SentimentPipeline.linearSvc()
-        .fit(graft.ml.SharedFeatures.trainTest(s, d)._1)
+      val f = SharedFeatures.trainTest(s, d)
+      SentimentPipeline.fitKept(SentimentPipeline.linearSvc(), f.idf, f.train)
     }
 
   override val warmups: Map[String, (org.apache.spark.sql.SparkSession,
@@ -133,7 +135,7 @@ object MLQueries extends QueryModule {
     // shared with the NB/SVC queries below (SharedFeatures): identical
     // semantics, one featurization instead of three.
     "q_ml_lr_predictions" -> ((s, d) => {
-      val test = graft.ml.SharedFeatures.trainTest(s, d)._2
+      val test = SharedFeatures.trainTest(s, d).test
       lrModel(s, d).transform(test)
         .select(col("doc_id"), col("label").cast("long").as("label"),
           col("prediction").cast("long").as("prediction"),
@@ -145,14 +147,14 @@ object MLQueries extends QueryModule {
     // memoized fit — the query times transform + aggregate).
     "q_ml_nb_confusion" -> ((s, d) =>
       SentimentPipeline.confusionMatrix(
-        nbModel(s, d).transform(graft.ml.SharedFeatures.trainTest(s, d)._2))),
+        nbModel(s, d).transform(SharedFeatures.trainTest(s, d).test))),
 
     // LinearSVC pipeline confusion matrix (rows-only; shared
     // featurization, memoized fit — the 20-iteration hinge fit runs once
     // per session under `warmups`, not inside the timed query).
     "q_ml_svc_confusion" -> ((s, d) =>
       SentimentPipeline.confusionMatrix(
-        svcModel(s, d).transform(graft.ml.SharedFeatures.trainTest(s, d)._2)))
+        svcModel(s, d).transform(SharedFeatures.trainTest(s, d).test)))
   )
 
   val oracle: Map[String, String] = Map(

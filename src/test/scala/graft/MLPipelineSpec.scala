@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.classification.{LinearSVCModel, LogisticRegressionModel}
+import org.apache.spark.ml.feature.IDFModel
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.DataFrame
@@ -112,6 +114,86 @@ class MLPipelineSpec extends SparkSpec {
       (0.9, 0.0, 1.0 / 3), (0.8, 0.5, 2.0 / 3),
       (0.4, 0.5, 1.0), (0.3, 1.0, 1.0))
     assert(got === want)
+  }
+
+  /** Coefficients of a pipeline's linear classifier stage. */
+  private def coefficients(m: PipelineModel): org.apache.spark.ml.linalg.Vector =
+    m.stages.last match {
+      case lr: LogisticRegressionModel => lr.coefficients
+      case svc: LinearSVCModel => svc.coefficients
+    }
+
+  Seq("lr" -> SentimentPipeline.logisticRegression(),
+      "svm" -> SentimentPipeline.linearSvc()).foreach { case (kind, clf) =>
+    test(s"$kind kept-column fit equals the full-width pipeline fit") {
+      val (tr, te) = SentimentPipeline.split(corpus)
+      val full = SentimentPipeline.pipeline(clf).fit(tr)
+      val kept = SentimentPipeline.fit(clf, tr)
+      def preds(m: PipelineModel) = m.transform(te).orderBy($"text")
+        .select($"prediction").as[Double].collect().toSeq
+      assert(preds(kept) === preds(full))
+
+      val (a, b) = (coefficients(full), coefficients(kept))
+      assert(b.size == SentimentPipeline.NumFeatures)
+      assert(b.getClass == a.getClass, "the fit's compressed storage")
+      val maxDiff = (0 until a.size).map(j => math.abs(a(j) - b(j))).max
+      assert(maxDiff <= 1e-12, s"max |coef diff| $maxDiff")
+      val keptCols = SentimentPipeline.keptColumns(
+        kept.stages(3).asInstanceOf[IDFModel]).toSet
+      assert(keptCols.nonEmpty && keptCols.size < 100)
+      assert(b.toSparse.indices.toSet.subsetOf(keptCols),
+        "a nonzero coefficient outside the kept columns")
+
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-kept-$kind")
+        .toString
+      kept.write.overwrite().save(dir)
+      val reloaded = PipelineModel.load(dir)
+      assert(reloaded.stages.map(_.getClass.getSimpleName).toSeq === Seq(
+        "Tokenizer", "StopWordsRemover", "HashingTF", "IDFModel",
+        clf.getClass.getSimpleName + "Model"))
+      assert(coefficients(reloaded) === b)
+      val clfModel = reloaded.stages.last
+      clf.extractParamMap().toSeq.filter(p => clf.isSet(p.param)).foreach { p =>
+        assert(clfModel.getOrDefault(clfModel.getParam(p.param.name)) == p.value,
+          s"$kind param ${p.param.name}")
+      }
+      assert(preds(reloaded) === preds(full))
+    }
+  }
+
+  test("kept-column fit with no kept column fits and predicts") {
+    // 6 docs: no term reaches minDocFreq 5, so the IDF keeps nothing
+    val tiny = Seq(("good day", 1.0), ("bad day", 0.0), ("great fun", 1.0),
+      ("awful mess", 0.0), ("lovely view", 1.0), ("poor show", 0.0))
+      .toDF("text", "label")
+    Seq(SentimentPipeline.logisticRegression(),
+        SentimentPipeline.linearSvc()).foreach { clf =>
+      val m = SentimentPipeline.fit(clf, tiny)
+      assert(SentimentPipeline.keptColumns(
+        m.stages(3).asInstanceOf[IDFModel]).isEmpty)
+      val coef = coefficients(m)
+      assert(coef.size == SentimentPipeline.NumFeatures && coef.numNonzeros == 0)
+      assert(m.transform(tiny).select($"prediction").as[Double].collect()
+        .length == 6)
+    }
+  }
+
+  test("evaluate's AUC is reproducible on the same frame") {
+    // 20k distinct scores in 8 partitions: enough for the evaluator's
+    // default 1,000 bins to group the sorted scores, whose range
+    // partition bounds are sampled with a seed taken from the RDD id
+    val scored = spark.range(0, 20000, 1, 8)
+      .select(when(rand(1) < 0.5, 1.0).otherwise(0.0).as("label"),
+        rand(2).as("noise"))
+      .select($"label", ($"noise" + $"label" * 0.3).as("rawPrediction"))
+      .withColumn("prediction",
+        when($"rawPrediction" > 0.65, 1.0).otherwise(0.0))
+      .persist()
+    try {
+      val (a, b) = (SentimentPipeline.evaluate(scored).rocAuc,
+        SentimentPipeline.evaluate(scored).rocAuc)
+      assert(math.abs(a - b) <= 1e-12, s"auc $a vs $b")
+    } finally scored.unpersist()
   }
 
   test("metrics JSON has the reference shape") {

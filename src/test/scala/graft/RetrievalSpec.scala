@@ -449,6 +449,32 @@ class RetrievalSpec extends SparkSpec {
     assert(remaining === Set(1L, 3L))
   }
 
+  test("rebuilding postings at the same path serves the new corpus's stats") {
+    val base = java.nio.file.Files
+      .createTempDirectory("graft-rebuild").toString + "/idx"
+    val first = Seq((1L, "red fox"), (2L, "red red dog"), (3L, "blue fox"))
+      .toDF("doc_id", "text")
+    val second = Seq((1L, "red fox jumps high"), (2L, "green dog"),
+      (3L, "blue fox"), (4L, "red cat sleeps"), (5L, "grey owl"))
+      .toDF("doc_id", "text")
+    def probe() = Bm25.scoreFromPostings(spark, base, Seq("red"), nBuckets = 4)
+      .orderBy($"doc_id").as[(Long, Double)].collect().toSeq
+    Bm25.buildPostings(first, "doc_id", "text", base, nBuckets = 4)
+    val statsDir = java.nio.file.Paths.get(base, "stats")
+    val firstMtime = java.nio.file.Files.getLastModifiedTime(statsDir)
+    assert(probe().map(_._1) === Seq(1L, 2L))
+    Bm25.buildPostings(second, "doc_id", "text", base, nBuckets = 4)
+    // a filesystem with coarse mtimes can hand the rewritten stats/ its
+    // old modification time: the rebuild itself must drop the memo
+    java.nio.file.Files.setLastModifiedTime(statsDir, firstMtime)
+    val fresh = base + "-fresh"
+    Bm25.buildPostings(second, "doc_id", "text", fresh, nBuckets = 4)
+    val want = Bm25.scoreFromPostings(spark, fresh, Seq("red"), nBuckets = 4)
+      .orderBy($"doc_id").as[(Long, Double)].collect().toSeq
+    assert(want.map(_._1) === Seq(1L, 4L))
+    assert(probe() === want)
+  }
+
   test("rerank: scores bounded by the weight mass; ranking is deterministic") {
     val out = graft.queries.RetrievalQueries.queries("q_rerank_linear")(spark, sf001)
       .as[(Long, Double)].collect()
