@@ -14,9 +14,9 @@ import graft.sources.SentimentCsv
   *
   *   cleaned CSV → dropna → 80/20 split (seed 42) → SentimentPipeline.fit
   *   (tokenize → stopwords → TF-IDF [or NGram branch] → classifier; LR
-  *   and SVM fit on the columns the IDF keeps, then widen to 2^18) →
-  *   transform(test) → in-engine evaluate (accuracy/F1/AUC + confusion) →
-  *   metrics JSON sink + model save.
+  *   and SVM fit on the IDF-weighted columns the IDF keeps, then widen
+  *   to 2^18) → transform(test) → in-engine evaluate (confusion counts →
+  *   accuracy/F1, AUC) → metrics JSON sink + model save.
   *
   * Differences from the reference, by design: evaluation never collects
   * predictions (the reference's `toPandas` + sklearn confusion matrix at
@@ -59,9 +59,10 @@ object Train {
     val df = labeled.withColumn("label", col("label").cast("double"))
     val (train, test) = SentimentPipeline.split(df)
     val model = SentimentPipeline.fit(classifier(kind), train, useNgram, ngramN)
-    // Persisted: evaluate runs four aggregation jobs over the scored
-    // frame and --charts adds a fifth; without the persist each one
-    // re-runs the full model.transform over the test set.
+    // Persisted: evaluate aggregates the scored frame twice (AUC over
+    // several jobs, then confusion counts) and --charts adds a ROC pass;
+    // without the persist each one re-runs model.transform over the
+    // test set.
     val predictions = model.transform(test).persist()
     // LinearSVC emits no probability column; AUC always uses rawPrediction.
     Result(model, SentimentPipeline.evaluate(predictions), predictions)

@@ -292,11 +292,13 @@ object KMeansAssignExprs {
         }
       }
       // register-once: the SHA-256 content-hashed name pins the matrix,
-      // so a LIVE name is by construction the same builder — skip the
-      // replace (registry work + "replaced function" log churn per
+      // so a registered name is by construction the same builder — skip
+      // the replace (registry work + "replaced function" log churn per
       // Column construction, r18 verdict #9) and only refresh its LRU
-      // position; an evicted (absent) name re-registers.
-      if (!q.contains(name))
+      // position. The registry, not the queue, decides: an evicted or
+      // externally dropped (DROP TEMPORARY FUNCTION) name re-registers.
+      if (!registry(spark).functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
         registry(spark).createOrReplaceTempFunction(name, builder, "scala_udf")
       // LRU, not FIFO: a re-registered live name moves to the tail so a
       // constantly-reused model is the LAST evicted, not the first.

@@ -3,10 +3,11 @@ package graft.ml
 import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
 import org.apache.spark.ml.classification.{LinearModels, LinearSVC,
   LinearSVCModel, LogisticRegression, LogisticRegressionModel, NaiveBayes}
-import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, MulticlassClassificationEvaluator}
+import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.feature._
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.param.{ParamMap, Params}
+import org.apache.spark.mllib.evaluation.MulticlassMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -37,10 +38,19 @@ import org.apache.spark.sql.functions._
   * widened back to 2^18 and saved as the same 5-stage pipeline. The gain
   * is the share of buckets the IDF drops; on a corpus where nearly every
   * bucket is active it is neutral (same jobs, an O(nnz) projection).
+  * The fit also applies the IDF itself, inside that projection, to the
+  * HashingTF output, so no iterative job's task carries the IDFModel:
+  * `IDFModel.transform`'s UDF captures the whole model (2^18 idf
+  * doubles + 2^18 docFreq longs), each loss evaluation serializes the
+  * full lineage of MLlib's cached instances into both of its stages'
+  * task binaries, and with that UDF in the lineage every stage shipped
+  * and deserialized ~4 MiB. The projection reads one broadcast (kept
+  * positions and weights) per executor per fit instead, independent of
+  * the number of rows and iterations.
   * Evaluation is in-engine — the reference's collect-to-sklearn
   * confusion matrix (`model_logistic_regression.py:217-218`) is replaced
-  * by a groupBy(label, prediction) aggregate, and ROC/AUC by the binned
-  * in-engine form in [[BinaryMetrics]].
+  * by a groupBy(label, prediction) aggregate that accuracy and F1 are
+  * read from, and ROC/AUC by the exact in-engine evaluator.
   */
 object SentimentPipeline {
 
@@ -92,17 +102,18 @@ object SentimentPipeline {
   }
 
   /** Fit the pipeline of [[pipeline]] on `train`. LR and LinearSVC on
-    * the TF-IDF branch fit through [[fitKept]] on the fitted feature
-    * stages; NB (whose smoothing depends on the feature width) and the
-    * N-gram branch (a compact CountVectorizer space already) fit the
-    * plain pipeline. Either way the result is the same PipelineModel:
-    * feature stages followed by a full-width classifier model. */
+    * the TF-IDF branch fit through [[fitKept]] on the HashingTF output
+    * of the fitted feature stages; NB (whose smoothing depends on the
+    * feature width) and the N-gram branch (a compact CountVectorizer
+    * space already) fit the plain pipeline. Either way the result is the
+    * same PipelineModel: feature stages followed by a full-width
+    * classifier model. */
   def fit(classifier: PipelineStage, train: DataFrame,
       useNgram: Boolean = false, ngramN: Int = 2): PipelineModel = {
     def withFeatures(fitClf: (IDFModel, DataFrame) => PipelineStage) = {
       val feats = new Pipeline().setStages(tfidfStages()).fit(train)
       val idf = feats.stages.last.asInstanceOf[IDFModel]
-      val clf = fitClf(idf, feats.transform(train))
+      val clf = fitClf(idf, hashed(feats, train))
       // all stages are fitted: Pipeline.fit only assembles, no job
       new Pipeline().setStages(feats.stages :+ clf).fit(train)
     }
@@ -115,55 +126,64 @@ object SentimentPipeline {
     }
   }
 
+  /** `df` through every fitted TF-IDF stage but the IDF: the HashingTF
+    * `raw_features` that [[fitKept]] fits on. */
+  def hashed(feats: PipelineModel, df: DataFrame): DataFrame =
+    feats.stages.init.foldLeft(df)((d, t) => t.transform(d))
+
   /** The feature columns a fitted IDF keeps (idf != 0); every other
     * column is 0 in every row it transforms. */
   def keptColumns(idf: IDFModel): Array[Int] =
     idf.idf.toArray.zipWithIndex.collect { case (w, j) if w != 0.0 => j }
 
-  /** LR fitted on the columns `idf` keeps of the TF-IDF `features`,
-    * widened back to the IDF's width. */
+  /** LR fitted on the columns `idf` keeps, IDF-weighted from its input
+    * column of `raw`, widened back to the IDF's width. */
   def fitKept(lr: LogisticRegression, idf: IDFModel,
-      features: DataFrame): LogisticRegressionModel = {
+      raw: DataFrame): LogisticRegressionModel = {
     val kept = keptColumns(idf)
-    val m = narrowed(features, lr.getFeaturesCol, kept, idf.idf.size)(lr.fit)
+    val m = narrowed(raw, idf, kept, lr.getFeaturesCol)(lr.fit)
     LinearModels.logisticRegression(m.uid,
       widen(m.coefficients, kept, idf.idf.size), m.intercept, m.numClasses)
       .copy(setParams(m))
   }
 
-  /** LinearSVC fitted on the columns `idf` keeps of the TF-IDF
-    * `features`, widened back to the IDF's width. */
+  /** LinearSVC fitted on the columns `idf` keeps, IDF-weighted from its
+    * input column of `raw`, widened back to the IDF's width. */
   def fitKept(svc: LinearSVC, idf: IDFModel,
-      features: DataFrame): LinearSVCModel = {
+      raw: DataFrame): LinearSVCModel = {
     val kept = keptColumns(idf)
-    val m = narrowed(features, svc.getFeaturesCol, kept, idf.idf.size)(svc.fit)
+    val m = narrowed(raw, idf, kept, svc.getFeaturesCol)(svc.fit)
     LinearModels.linearSvc(m.uid,
       widen(m.coefficients, kept, idf.idf.size), m.intercept)
       .copy(setParams(m))
   }
 
-  /** Run `fit` on `df` with vector column `c` projected onto the `kept`
-    * columns, in order: an O(nnz) map per row through a broadcast
-    * position array (VectorSlicer's sorted slice walks the kept list per
-    * row instead). An empty kept set maps to one all-zero column, since
-    * LR and LinearSVC reject 0-wide vectors. */
-  private def narrowed[T](df: DataFrame, c: String, kept: Array[Int],
-      width: Int)(fit: DataFrame => T): T = {
-    val pos = Array.fill(width)(-1)
+  /** Run `fit` on `raw` with vector column `c` set to the `kept` columns
+    * of `idf`'s input column, in order, each active entry x of column j
+    * weighted x * idf(j) — the product IDFModel.transform forms, so the
+    * vectors equal its output restricted to `kept`. One O(nnz) map per
+    * row through a broadcast of the position array and the kept weights
+    * (VectorSlicer's sorted slice walks the kept list per row instead).
+    * An empty kept set maps to one all-zero column, since LR and
+    * LinearSVC reject 0-wide vectors. */
+  private def narrowed[T](raw: DataFrame, idf: IDFModel, kept: Array[Int],
+      c: String)(fit: DataFrame => T): T = {
+    val pos = Array.fill(idf.idf.size)(-1)
     kept.indices.foreach(i => pos(kept(i)) = i)
     val narrowWidth = math.max(1, kept.length)
-    val bPos = df.sparkSession.sparkContext.broadcast(pos)
+    val b = raw.sparkSession.sparkContext.broadcast((pos, kept.map(idf.idf(_))))
     val project = udf { (v: Vector) =>
-      val p = bPos.value
+      val (p, w) = b.value
       val idx = Array.newBuilder[Int]
       val vals = Array.newBuilder[Double]
       v.foreachActive { (j, x) =>
-        if (p(j) >= 0) { idx += p(j); vals += x }
+        val i = p(j)
+        if (i >= 0) { idx += i; vals += x * w(i) }
       }
       Vectors.sparse(narrowWidth, idx.result(), vals.result())
     }
-    try fit(df.withColumn(c, project(col(c))))
-    finally bPos.destroy()
+    try fit(raw.withColumn(c, project(col(idf.getInputCol))))
+    finally b.destroy()
   }
 
   /** Narrow coefficients back at their `kept` columns of a `width`-wide
@@ -185,26 +205,33 @@ object SentimentPipeline {
   final case class Metrics(accuracy: Double, f1: Double, rocAuc: Double,
       confusion: Map[(Long, Long), Long])
 
-  /** In-engine evaluation: evaluators for accuracy/F1/AUC + a
-    * groupBy(label, prediction) confusion matrix (never collect the
-    * predictions themselves). AUC uses exact thresholds (numBins 0)
-    * instead of the evaluator's default 1,000 bins, whose edges follow
-    * a range-partition sample seeded from the RDD id, so a binned AUC
-    * differs between two evaluations of the same frame. */
+  /** In-engine evaluation: a groupBy(label, prediction) confusion
+    * matrix (never collect the predictions themselves), accuracy and
+    * weighted F1 from it, and AUC from the evaluator. Accuracy and F1
+    * come from one MulticlassMetrics over the (prediction, label) cells
+    * weighted by their counts: the class sums the evaluators form over
+    * the scored rows, reached without two more passes over them. AUC
+    * uses exact thresholds (numBins 0) instead of the evaluator's
+    * default 1,000 bins, whose edges follow a range-partition sample
+    * seeded from the RDD id, so a binned AUC differs between two
+    * evaluations of the same frame. The exact AUC still varies in its
+    * last ulps with the RDD id: the sort's range partitions, sampled the
+    * same way, group the trapezoid sum. */
   def evaluate(predictions: DataFrame,
       rawCol: String = "rawPrediction"): Metrics = {
-    val acc = new MulticlassClassificationEvaluator().setLabelCol("label")
-      .setPredictionCol("prediction").setMetricName("accuracy")
-      .evaluate(predictions)
-    val f1 = new MulticlassClassificationEvaluator().setLabelCol("label")
-      .setPredictionCol("prediction").setMetricName("f1")
-      .evaluate(predictions)
+    // AUC first: on a persisted, not yet materialized frame its RDD job
+    // fills the cache, where an adaptive query reading it first would
+    // run one more job to materialize it
     val auc = new BinaryClassificationEvaluator().setLabelCol("label")
       .setRawPredictionCol(rawCol).setMetricName("areaUnderROC")
       .setNumBins(0).evaluate(predictions)
     val confusion = confusionMatrix(predictions).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    Metrics(acc, f1, auc, confusion)
+    val cells = confusion.toSeq.map { case ((l, p), n) =>
+      (p.toDouble, l.toDouble, n.toDouble) }
+    val mm = new MulticlassMetrics(
+      predictions.sparkSession.sparkContext.parallelize(cells, 1))
+    Metrics(mm.accuracy, mm.weightedFMeasure(1.0), auc, confusion)
   }
 
   /** The confusion matrix as a (label, prediction, n) aggregate. */

@@ -637,7 +637,8 @@ object Bm25 {
     * layout. Folding the two scalars back as LITERALS is arithmetic-
     * identical (same doubles reach the same expression tree). Mutating
     * verbs rewrite `stats/` (its mtime moves) and also invalidate
-    * explicitly. */
+    * explicitly; an out-of-band rewrite is detected only under
+    * twinMetaCache's local-filesystem assumption. */
   private val statsCache =
     new scala.collection.concurrent.TrieMap[String, (Long, Long, Long)]
 
@@ -861,12 +862,15 @@ object Bm25 {
     * that were re-run as DRIVER JOBS on every served PRF query
     * invocation — pure overhead on an unchanged layout. Freshness is
     * keyed on the MODIFICATION TIMES of `epoch/` and `docposts_meta/`
-    * (two driver-local getFileStatus calls, no Spark job): any commit —
-    * this module's verbs, a torn crash window, or an out-of-band
-    * rewrite — replaces those directories and moves their mtime, so the
-    * loud staleness contract is fully preserved (the lifecycle spec's
-    * torn-commit simulation still trips). Mutating verbs ALSO
-    * invalidate explicitly, so within-process invalidation never even
+    * (two driver-local getFileStatus calls, no Spark job). This assumes
+    * a local filesystem whose directory mtime moves on every commit:
+    * there any commit — this module's verbs, a torn crash window, or an
+    * out-of-band rewrite — replaces those directories and moves their
+    * mtime, and the lifecycle spec's torn-commit simulation still trips.
+    * On object stores (directory markers carry no meaningful mtime) and
+    * coarse-mtime filesystems an out-of-band rewrite by another process
+    * is NOT detected, and a stale epoch can be served. Mutating verbs
+    * ALSO invalidate explicitly, so within-process invalidation never
     * depends on fs timestamp granularity. */
   private val twinMetaCache = new scala.collection.concurrent.TrieMap[
     String, (Long, Long, Int, Long, Long)] // (metaM, epochM, nb, twinE, liveE)

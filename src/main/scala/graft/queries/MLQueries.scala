@@ -40,7 +40,7 @@ object MLQueries extends QueryModule {
     lrCache.getOrElseUpdate(s, d) {
       val f = SharedFeatures.trainTest(s, d)
       SentimentPipeline.fitKept(SentimentPipeline.logisticRegression(),
-        f.idf, f.train)
+        f.idf, f.rawTrain)
     }
   private def nbModel(s: org.apache.spark.sql.SparkSession, d: String) =
     nbCache.getOrElseUpdate(s, d) {
@@ -49,7 +49,8 @@ object MLQueries extends QueryModule {
   private def svcModel(s: org.apache.spark.sql.SparkSession, d: String) =
     svcCache.getOrElseUpdate(s, d) {
       val f = SharedFeatures.trainTest(s, d)
-      SentimentPipeline.fitKept(SentimentPipeline.linearSvc(), f.idf, f.train)
+      SentimentPipeline.fitKept(SentimentPipeline.linearSvc(), f.idf,
+        f.rawTrain)
     }
 
   override val warmups: Map[String, (org.apache.spark.sql.SparkSession,

@@ -174,6 +174,21 @@ class KMeansAssignSpec extends SparkSpec {
     assert(got == 0L, "keeper still registered and correct after churn")
   }
 
+  test("a name dropped from the registry re-registers on the next call") {
+    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    val cen = Array(Array(31L, 0L), Array(0L, 31L))
+    val df = Seq((1L, Seq(1L, 30L))).toDF("id", "vq")
+    def cell() = df.select(graft.functions.KMeansAssignExprs
+      .nearestCell(col("vq"), cen).as("a")).head().getStruct(0).getLong(0)
+    val before = reg.listFunction().map(_.funcName).toSet
+    assert(cell() == 1L)
+    val added = reg.listFunction().map(_.funcName).filterNot(before).toSeq
+    assert(added.size == 1, s"registered $added")
+    spark.sql(s"DROP TEMPORARY FUNCTION ${added.head}")
+    assert(cell() == 1L)
+  }
+
   test("interpreted eval path agrees with codegen (expression evaluated standalone)") {
     // force the no-codegen path by eval'ing the expression directly
     val cen = m.centroids

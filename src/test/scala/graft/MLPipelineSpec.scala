@@ -1,13 +1,35 @@
 package graft
 
 import org.apache.spark.ml.PipelineModel
-import org.apache.spark.ml.classification.{LinearSVCModel, LogisticRegressionModel}
+import org.apache.spark.ml.classification.{LinearSVCModel, LogisticRegression,
+  LogisticRegressionModel}
 import org.apache.spark.ml.feature.IDFModel
-import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
+import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator,
+  MulticlassClassificationEvaluator}
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.ml.util.Identifiable
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.ml.{BinaryMetrics, SentimentPipeline}
+
+/** LogisticRegression that records what a fit is handed: the features
+  * column and the Java-serialized size of the frame's RDD, both taken
+  * inside `fit`, while the caller's projection broadcast is live. */
+private class CapturingLr(uid: String) extends LogisticRegression(uid) {
+  def this() = this(Identifiable.randomUID("logreg"))
+  var features: Seq[Vector] = Nil
+  var rddBytes: Long = -1L
+  override def fit(ds: Dataset[_]): LogisticRegressionModel = {
+    features = ds.select(getFeaturesCol).collect().map(_.getAs[Vector](0)).toSeq
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(ds.queryExecution.toRdd)
+    out.close()
+    rddBytes = bytes.size().toLong
+    super.fit(ds)
+  }
+}
 
 /** Golden-tolerance tests on a committed-by-construction synthetic corpus
   * (FIXTURES.md B4: seeded, balanced), mirroring the reference's
@@ -176,6 +198,75 @@ class MLPipelineSpec extends SparkSpec {
       assert(m.transform(tiny).select($"prediction").as[Double].collect()
         .length == 6)
     }
+  }
+
+  /** (index, raw bits of the value) of every active entry. */
+  private def active(v: Vector): Seq[(Int, Long)] = {
+    val b = Seq.newBuilder[(Int, Long)]
+    v.foreachActive((j, x) => b += j -> java.lang.Double.doubleToRawLongBits(x))
+    b.result()
+  }
+
+  test("the kept-column projection equals idf.transform on the kept columns") {
+    // "movie" is in every doc (idf 0), and "zebra" and each day$i are in
+    // at most two (< minDocFreq 5), so the last row's terms are all dropped
+    val df = ((0 until 12).map { i =>
+      val words = if (i % 2 == 0) "good great" else "bad awful"
+      (s"movie $words day$i", (1 - i % 2).toDouble)
+    } :+ ("movie zebra day0", 1.0)).toDF("text", "label")
+    val lr = new CapturingLr().setMaxIter(2)
+    val m = SentimentPipeline.fit(lr, df)
+    val idf = m.stages(3).asInstanceOf[IDFModel]
+    val kept = SentimentPipeline.keptColumns(idf)
+    assert(kept.length == 4)
+    val want = idf.transform(m.stages.take(3).foldLeft(df)((d, t) => t.transform(d)))
+      .select($"features").collect().map(_.getAs[Vector](0)).toSeq
+    assert(lr.features.length == want.length)
+    lr.features.zip(want).foreach { case (got, w) =>
+      assert(got.size == kept.length)
+      assert(active(got) === active(w).collect {
+        case (j, x) if idf.idf(j) != 0.0 => (kept.indexOf(j), x) })
+    }
+    assert(active(lr.features.last).isEmpty)
+
+    // no kept column: one all-zero column per row
+    val tiny = Seq(("good day", 1.0), ("bad day", 0.0), ("great fun", 1.0),
+      ("awful mess", 0.0)).toDF("text", "label")
+    val none = new CapturingLr().setMaxIter(2)
+    SentimentPipeline.fit(none, tiny)
+    assert(none.features.length == 4 &&
+      none.features.forall(v => v.size == 1 && active(v).isEmpty))
+  }
+
+  test("the frame the kept-column fit hands the classifier stays small") {
+    // Every loss evaluation ships this lineage in its task binaries; an
+    // IDFModel.transform in it serializes the whole 2^18-wide model
+    // (idf + docFreq, over 4 MB). The shuffle keeps the optimizer from
+    // folding the feature UDFs into a local relation on the driver.
+    val lr = new CapturingLr().setMaxIter(1)
+    SentimentPipeline.fit(lr, corpus.repartition(2))
+    assert(lr.rddBytes > 0 && lr.rddBytes < (1L << 20),
+      s"${lr.rddBytes} serialized bytes")
+  }
+
+  test("evaluate's accuracy and F1 equal the multiclass evaluators'") {
+    // unequal classes (about 30% positive), errors both ways
+    val scored = spark.range(0, 5000, 1, 4)
+      .select(when(rand(3) < 0.3, 1.0).otherwise(0.0).as("label"),
+        rand(4).as("noise"))
+      .select($"label", ($"noise" + $"label" * 0.4).as("rawPrediction"))
+      .withColumn("prediction",
+        when($"rawPrediction" > 0.6, 1.0).otherwise(0.0))
+      .persist()
+    try {
+      def ev(metric: String) = new MulticlassClassificationEvaluator()
+        .setLabelCol("label").setPredictionCol("prediction")
+        .setMetricName(metric).evaluate(scored)
+      val m = SentimentPipeline.evaluate(scored)
+      assert(m.confusion.size == 4 && m.confusion.values.sum == 5000L)
+      assert(m.accuracy == ev("accuracy"))
+      assert(m.f1 == ev("f1"))
+    } finally scored.unpersist()
   }
 
   test("evaluate's AUC is reproducible on the same frame") {
