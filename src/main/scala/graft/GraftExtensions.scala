@@ -2,15 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{BloomMightContain, BottomK, DotProduct,
-  GkQuantiles, GkSketchAgg, GkUnionAgg, HeavyHittersAgg,
-  HeavyHittersMergeAgg}
+import graft.functions.{BloomMightContain, BottomK, ContainsWsFreeScript,
+  CountMinAgg, CountMinMergeAgg, DotProduct, GkQuantiles, GkSketchAgg,
+  GkUnionAgg, HeavyHittersAgg, HeavyHittersMergeAgg, JaroWinkler, PolyHash,
+  UnicodeNormalize}
 
-/** SparkSessionExtensions entry point: registers graft's custom
-  * expressions at session build time, so both the Column API and plain
-  * SQL can use them without per-DataFrame registration:
+/** The SQL front door: injects graft's fixed-name custom expressions into
+  * every session built with it, so plain SQL can call them:
   *
   * {{{
   * val spark = SparkSession.builder()
@@ -20,79 +19,50 @@ import graft.functions.{BloomMightContain, BottomK, DotProduct,
   * spark.sql("SELECT vec_dot(a, b) FROM vectors")
   * }}}
   *
-  * The operators in graft.operators also self-register lazily
-  * (VectorFunctions.register) so they work on vanilla sessions — this
-  * class is the front door for SQL-first users.
+  * The Column API (`graft.functions`) needs none of this: each Column
+  * function carries its expression directly, on any session. This class
+  * is the only graft code that writes to a function registry. Expressions
+  * built from driver-side state (a centroid matrix, plane set, cut array
+  * or n-gram width) are Column-only and have no SQL name.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    val vecDot: (FunctionIdentifier, ExpressionInfo, FunctionBuilder) = (
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),
-      graft.functions.Builders.binary("vec_dot")(DotProduct.apply))
-    ext.injectFunction(vecDot)
-    val bloomContain: (FunctionIdentifier, ExpressionInfo, FunctionBuilder) = (
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName,
-        "bloom_might_contain"),
-      graft.functions.Builders.binary("bloom_might_contain")(
-        BloomMightContain.apply))
-    ext.injectFunction(bloomContain)
-    val bottomK: (FunctionIdentifier, ExpressionInfo, FunctionBuilder) = (
-      FunctionIdentifier("bottom_k"),
-      new ExpressionInfo(classOf[BottomK].getName, "bottom_k"),
-      { exprs =>
-        require(exprs.size == 3,
-          s"bottom_k expects exactly 3 arguments, got ${exprs.size}")
-        BottomK(exprs(0), exprs(1), exprs(2))
-      })
-    ext.injectFunction(bottomK)
-    val heavyHitters: (FunctionIdentifier, ExpressionInfo, FunctionBuilder) = (
-      FunctionIdentifier("heavy_hitters"),
-      new ExpressionInfo(classOf[HeavyHittersAgg].getName, "heavy_hitters"),
-      { exprs =>
-        require(exprs.size == 2,
-          s"heavy_hitters expects (item, capacity), got ${exprs.size} args")
-        HeavyHittersAgg(exprs(0), exprs(1))
-      })
-    ext.injectFunction(heavyHitters)
-    val heavyHittersMerge: (FunctionIdentifier, ExpressionInfo, FunctionBuilder) = (
-      FunctionIdentifier("heavy_hitters_merge"),
-      new ExpressionInfo(classOf[HeavyHittersMergeAgg].getName,
-        "heavy_hitters_merge"),
-      { exprs =>
-        require(exprs.size == 2,
-          s"heavy_hitters_merge expects (summary, capacity), got ${exprs.size} args")
-        HeavyHittersMergeAgg(exprs(0), exprs(1))
-      })
-    ext.injectFunction(heavyHittersMerge)
-    val gkSketch: (FunctionIdentifier, ExpressionInfo, FunctionBuilder) = (
-      FunctionIdentifier("gk_sketch_agg"),
-      new ExpressionInfo(classOf[GkSketchAgg].getName, "gk_sketch_agg"),
-      { exprs =>
-        require(exprs.size == 2,
-          s"gk_sketch_agg expects (value, eps), got ${exprs.size} args")
-        GkSketchAgg(exprs(0), exprs(1))
-      })
-    ext.injectFunction(gkSketch)
-    val gkUnion: (FunctionIdentifier, ExpressionInfo, FunctionBuilder) = (
-      FunctionIdentifier("gk_union_agg"),
-      new ExpressionInfo(classOf[GkUnionAgg].getName, "gk_union_agg"),
-      { exprs =>
-        require(exprs.size == 1,
-          s"gk_union_agg expects (sketch), got ${exprs.size} args")
-        GkUnionAgg(exprs(0))
-      })
-    ext.injectFunction(gkUnion)
-    val gkQuantiles: (FunctionIdentifier, ExpressionInfo, FunctionBuilder) = (
-      FunctionIdentifier("gk_quantiles"),
-      new ExpressionInfo(classOf[GkQuantiles].getName, "gk_quantiles"),
-      { exprs =>
-        require(exprs.size == 2,
-          s"gk_quantiles expects (sketch, probs), got ${exprs.size} args")
-        GkQuantiles(exprs(0), exprs(1))
-      })
-    ext.injectFunction(gkQuantiles)
-  }
+  /** (SQL name, expression class, arity, builder). Each builder gets
+    * exactly `arity` arguments: a wrong-arity SQL call fails with a
+    * clean message, not an IndexOutOfBoundsException in the analyzer. */
+  private val functions: Seq[(String, Class[_], Int, Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", classOf[DotProduct], 2, a => DotProduct(a(0), a(1))),
+    ("bloom_might_contain", classOf[BloomMightContain], 2,
+      a => BloomMightContain(a(0), a(1))),
+    ("bottom_k", classOf[BottomK], 3, a => BottomK(a(0), a(1), a(2))),
+    ("heavy_hitters", classOf[HeavyHittersAgg], 2,
+      a => HeavyHittersAgg(a(0), a(1))),
+    ("heavy_hitters_merge", classOf[HeavyHittersMergeAgg], 2,
+      a => HeavyHittersMergeAgg(a(0), a(1))),
+    ("gk_sketch_agg", classOf[GkSketchAgg], 2, a => GkSketchAgg(a(0), a(1))),
+    ("gk_union_agg", classOf[GkUnionAgg], 1, a => GkUnionAgg(a(0))),
+    ("gk_quantiles", classOf[GkQuantiles], 2, a => GkQuantiles(a(0), a(1))),
+    ("poly_hash", classOf[PolyHash], 1, a => PolyHash(a(0))),
+    ("nfc_normalize", classOf[UnicodeNormalize], 1,
+      a => UnicodeNormalize(a(0), "NFC")),
+    ("nfkc_normalize", classOf[UnicodeNormalize], 1,
+      a => UnicodeNormalize(a(0), "NFKC")),
+    ("jaro_winkler", classOf[JaroWinkler], 2, a => JaroWinkler(a(0), a(1))),
+    ("count_min", classOf[CountMinAgg], 3,
+      a => CountMinAgg(a(0), a(1), a(2))),
+    ("count_min_merge", classOf[CountMinMergeAgg], 3,
+      a => CountMinMergeAgg(a(0), a(1), a(2))),
+    ("contains_wsfree_script", classOf[ContainsWsFreeScript], 1,
+      a => ContainsWsFreeScript(a(0))))
+
+  override def apply(ext: SparkSessionExtensions): Unit =
+    functions.foreach { case (name, cls, arity, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        { (args: Seq[Expression]) =>
+          require(args.size == arity, s"$name expects exactly $arity " +
+            s"argument${if (arity == 1) "" else "s"}, got ${args.size}")
+          build(args)
+        }))
+    }
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.Columns
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
@@ -37,8 +38,8 @@ case class BandOfExpr(child: Expression, cuts: Array[Double], desc: Boolean)
   override def prettyName: String = "band_of"
   override def nullable: Boolean = true
 
-  // Registry-reachable (call_function), so reject non-double children at
-  // analysis instead of class-casting in an executor.
+  // Any Column can reach this expression, so reject non-double children
+  // at analysis instead of class-casting in an executor.
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
@@ -95,31 +96,10 @@ object BandOfExpr {
 
 object BandExprs {
 
-  /** Content-hashed name: equal cut sets share one registration, new
-    * cuts (a re-fit digest) re-register under a fresh name. */
-  private def nameFor(cuts: Array[Double], desc: Boolean): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val bb = java.nio.ByteBuffer.allocate(8)
-    cuts.foreach { v =>
-      bb.clear(); bb.putLong(java.lang.Double.doubleToLongBits(v))
-      md.update(bb.array())
-    }
-    val hex = md.digest().take(8).map(b => f"$b%02x").mkString
-    s"band_of_${if (desc) "d" else "a"}_$hex"
-  }
-
   /** Band index (0..cuts.length) of a double column against literal
-    * sorted cuts. Registers on `SparkSession.active` (Column
-    * construction always happens on the driver with a session). */
-  def bandOf(value: Column, cuts: Array[Double], desc: Boolean): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val name = nameFor(cuts, desc)
-    // register-once: the SHA-256 content-hashed name pins the cut array,
-    // so an existing registration is by construction the same expression
-    Builders.registerOnce(spark, name,
-      Builders.unary(name)(BandOfExpr(_, cuts, desc)))
-    org.apache.spark.sql.functions.call_function(name, value)
-  }
+    * sorted cuts. */
+  def bandOf(value: Column, cuts: Array[Double], desc: Boolean): Column =
+    Columns.of(BandOfExpr(Columns.expr(value), cuts, desc))
 
   /** Band FRACTION in [0, 1]: bandOf / bands — the normalized-rank
     * approximation the ensemble averages. */

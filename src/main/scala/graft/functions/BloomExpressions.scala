@@ -3,6 +3,7 @@ package graft.functions
 import java.io.ByteArrayInputStream
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.Columns
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -16,10 +17,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * [[org.apache.spark.util.sketch.BloomFilter]] — false is definite
   * absence (no false negatives, ~fpp false positives).
   *
-  * The filter arrives as a foldable BINARY literal so the expression can
-  * travel through the function registry (Spark 4 keeps the Column(expr)
-  * constructor private; registry + call_function is the supported path —
-  * see [[VectorFunctions.register]]). It is deserialized ONCE per
+  * The filter arrives as a foldable BINARY literal, so the same
+  * expression serves the Column API and SQL. It is deserialized ONCE per
   * executor-side expression instance (lazy), never per row; codegen
   * probes the deserialized filter through a reference object, so the hot
   * loop is two xxhash-like probes against a bit array — no boxing, no
@@ -69,19 +68,10 @@ case class BloomMightContain(child: Expression, bloomBytes: Expression)
 
 object BloomFunctions {
 
-  /** Register `bloom_might_contain` in the session's function registry
-    * (idempotent); same registry + call_function route as
-    * [[VectorFunctions.register]]. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Builders.registerOnce(spark, "bloom_might_contain",
-      Builders.binary("bloom_might_contain")(BloomMightContain.apply))
-
   /** Membership probe of a BIGINT fingerprint column against a
-    * serialized bloom filter (pass as `lit(bytes)`).
-    * Requires [[register]] on the session first. */
+    * serialized bloom filter (pass as `lit(bytes)`). */
   def bloom_might_contain(fp: Column, bloomBytes: Column): Column =
-    org.apache.spark.sql.functions.call_function(
-      "bloom_might_contain", fp, bloomBytes)
+    Columns.of(BloomMightContain(Columns.expr(fp), Columns.expr(bloomBytes)))
 
   /** Serialize a built filter for embedding as a literal. */
   def serialize(bloom: BloomFilter): Array[Byte] = {

@@ -5,9 +5,10 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.Columns
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -154,21 +155,9 @@ object BottomK {
     def sortedIds: Array[Long] = heap.toSeq.sorted(ord).map(_._2).toArray
   }
 
-  /** Register `bottom_k` in the session registry (idempotent); same
-    * registry + call_function route as [[VectorFunctions.register]].
-    * The analyzer wraps the returned AggregateFunction in a Complete
-    * AggregateExpression — usable from SQL and the Column API alike. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Builders.registerOnce(spark, "bottom_k",
-      { exprs =>
-        require(exprs.size == 3,
-          s"bottom_k expects exactly 3 arguments, got ${exprs.size}")
-        BottomK(exprs(0), exprs(1), exprs(2))
-      })
-
   /** Column form: ids of the k smallest (key, id) pairs per group,
-    * ascending. Requires [[register]] on the session first. */
+    * ascending. */
   def bottom_k(key: Column, id: Column, k: Int): Column =
-    org.apache.spark.sql.functions.call_function(
-      "bottom_k", key, id, org.apache.spark.sql.functions.lit(k))
+    Columns.of(BottomK(Columns.expr(key), Columns.expr(id), Literal(k))
+      .toAggregateExpression())
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.Columns
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -76,14 +77,7 @@ object CharNGramsExpr {
     new GenericArrayData(out)
   }
 
-  /** Column form; registers a per-n function name (the
-    * [[KMeansAssignExprs]] registry discipline — `Column(expr)` is
-    * private in Spark 4). */
-  def grams(text: Column, n: Int): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val name = s"char_ngrams_$n"
-    Builders.registerOnce(spark, name,
-      Builders.unary(name)(CharNGramsExpr(_, n)))
-    org.apache.spark.sql.functions.call_function(name, text)
-  }
+  /** Column form. */
+  def grams(text: Column, n: Int): Column =
+    Columns.of(CharNGramsExpr(Columns.expr(text), n))
 }

@@ -3,9 +3,10 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.Columns
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{element_at, least, lit, pmod}
@@ -88,32 +89,17 @@ object CountMin {
 
   val resultType: DataType = ArrayType(LongType, containsNull = false)
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Builders.registerOnce(spark, "count_min",
-      { exprs =>
-        require(exprs.size == 3,
-          s"count_min expects (item, width, depth), got ${exprs.size} args")
-        CountMinAgg(exprs(0), exprs(1), exprs(2))
-      })
-    Builders.registerOnce(spark, "count_min_merge",
-      { exprs =>
-        require(exprs.size == 3,
-          s"count_min_merge expects (sketch, width, depth), got ${exprs.size} args")
-        CountMinMergeAgg(exprs(0), exprs(1), exprs(2))
-      })
-  }
-
   def count_min(item: Column, width: Int, depth: Int): Column =
-    org.apache.spark.sql.functions.call_function(
-      "count_min", item, lit(width), lit(depth))
+    Columns.of(CountMinAgg(Columns.expr(item), Literal(width), Literal(depth))
+      .toAggregateExpression())
 
   def count_min_merge(sketch: Column, width: Int, depth: Int): Column =
-    org.apache.spark.sql.functions.call_function(
-      "count_min_merge", sketch, lit(width), lit(depth))
+    Columns.of(CountMinMergeAgg(Columns.expr(sketch), Literal(width),
+      Literal(depth)).toAggregateExpression())
 
   /** Point estimate `min_j cells[j*width + h_j(item)]` as a plain Column
-    * over the sketch array — composed from builtins (element_at/least),
-    * no new expression; requires [[PolyHashF.register]] on the session.
+    * over the sketch array — composed from builtins (element_at/least)
+    * and [[PolyHashF.poly_hash]], no new expression.
     * Mirrors in DuckDB with [[PolyHashF.polyHashSql]] and list indexing. */
   def estimate(sketch: Column, item: Column, width: Int, depth: Int): Column = {
     require(depth >= 1, s"depth $depth")

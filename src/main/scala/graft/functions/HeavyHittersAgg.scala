@@ -5,9 +5,10 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.Columns
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -134,31 +135,13 @@ object HeavyHitters {
     StructField("maxerr", LongType, nullable = false))),
     containsNull = false)
 
-  /** Register both aggregates (idempotent; same registry route as
-    * [[BottomK.register]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Builders.registerOnce(spark, "heavy_hitters",
-      { exprs =>
-        require(exprs.size == 2,
-          s"heavy_hitters expects (item, capacity), got ${exprs.size} args")
-        HeavyHittersAgg(exprs(0), exprs(1))
-      })
-    Builders.registerOnce(spark, "heavy_hitters_merge",
-      { exprs =>
-        require(exprs.size == 2,
-          s"heavy_hitters_merge expects (summary, capacity), got ${exprs.size} args")
-        HeavyHittersMergeAgg(exprs(0), exprs(1))
-      })
-  }
-
   def heavy_hitters(item: Column, capacity: Int): Column =
-    org.apache.spark.sql.functions.call_function(
-      "heavy_hitters", item, org.apache.spark.sql.functions.lit(capacity))
+    Columns.of(HeavyHittersAgg(Columns.expr(item), Literal(capacity))
+      .toAggregateExpression())
 
   def heavy_hitters_merge(summary: Column, capacity: Int): Column =
-    org.apache.spark.sql.functions.call_function(
-      "heavy_hitters_merge", summary,
-      org.apache.spark.sql.functions.lit(capacity))
+    Columns.of(HeavyHittersMergeAgg(Columns.expr(summary), Literal(capacity))
+      .toAggregateExpression())
 }
 
 /** `heavy_hitters(item, capacity)` over raw string items. */

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.Columns
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -84,29 +85,8 @@ case class HyperplaneSigs(child: Expression, planes: Array[Double],
 }
 
 object HyperplaneSigs {
-  /** Register + build: hyperplane_sigs over an array<double> column. */
-  def sigs(spark: org.apache.spark.sql.SparkSession, vec: Column,
-      planes: Seq[Seq[Double]], bitsPerTable: Int): Column = {
-    val dim = planes.head.size
-    val tables = planes.size / bitsPerTable
-    val flat = planes.flatten.toArray
-    // Content hash (not array identity) keyed into the name so equal
-    // plane sets reuse one registration; unsigned hex keeps the name a
-    // valid unquoted SQL identifier. SHA-256 (not a 32-bit hash): with
-    // register-once semantics a name collision between two DISTINCT
-    // plane sets would silently serve the older set — the
-    // KMeansAssignExprs.nameFor discipline makes that impossible.
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val bb = java.nio.ByteBuffer.allocate(8)
-    flat.foreach { v =>
-      bb.clear(); bb.putLong(java.lang.Double.doubleToLongBits(v))
-      md.update(bb.array())
-    }
-    val name = "hyperplane_sigs_" +
-      md.digest().take(8).map(b => f"$b%02x").mkString +
-      s"_${tables}_$bitsPerTable"
-    Builders.registerOnce(spark, name,
-      exprs => HyperplaneSigs(exprs.head, flat, dim, tables, bitsPerTable))
-    org.apache.spark.sql.functions.call_function(name, vec)
-  }
+  /** hyperplane_sigs over an array<double> column. */
+  def sigs(vec: Column, planes: Seq[Seq[Double]], bitsPerTable: Int): Column =
+    Columns.of(HyperplaneSigs(Columns.expr(vec), planes.flatten.toArray,
+      planes.head.size, planes.size / bitsPerTable, bitsPerTable))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.Columns
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -107,8 +108,7 @@ case class NearestCellExpr(child: Expression, centroids: Array[Array[Long]])
   override def prettyName: String = "kmq_nearest"
   override def nullable: Boolean = true
 
-  // The kmq_* names live in the session FunctionRegistry, so SQL can
-  // reach this expression with any column type; without this check an
+  // Any Column can reach this expression; without this check an
   // array<double>/array<int> child reaches ArrayData.toLongArray, which
   // on UnsafeArrayData reinterprets raw element bytes — silent garbage
   // cell ids instead of an analysis error.
@@ -176,9 +176,8 @@ case class NearestCellsExpr(child: Expression, centroids: Array[Array[Long]],
   override def prettyName: String = "kmq_cells"
   override def nullable: Boolean = true
 
-  // Same registry-reachability hazard as NearestCellExpr: reject any
-  // non-array<bigint> child at analysis, before toLongArray can
-  // reinterpret bytes.
+  // Same hazard as NearestCellExpr: reject any non-array<bigint> child
+  // at analysis, before toLongArray can reinterpret bytes.
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
@@ -233,102 +232,13 @@ case class NearestCellsExpr(child: Expression, centroids: Array[Array[Long]],
 
 object KMeansAssignExprs {
 
-  private def registry(spark: org.apache.spark.sql.SparkSession) =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-
-  /** Content-hashed name so equal centroid sets reuse one registration
-    * (same discipline as [[HyperplaneSigs.sigs]]). The digest is a full
-    * SHA-256 over (k, dim, every element) — a 32-bit hash here would
-    * let two distinct models collide and silently rebind one name via
-    * createOrReplaceTempFunction, so a Column built for one model but
-    * analyzed after the other registers would compute with the WRONG
-    * centroids (advisor finding r12). 2^-128 collision odds make that
-    * impossible in practice; 16 hex chars keep the name readable. */
-  private def nameFor(kind: String, m: Array[Array[Long]], extra: String) = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val bb = java.nio.ByteBuffer.allocate(8)
-    def putLong(v: Long): Unit = {
-      bb.clear(); bb.putLong(v); md.update(bb.array())
-    }
-    putLong(m.length.toLong)
-    putLong(if (m.isEmpty) 0L else m(0).length.toLong)
-    m.foreach(_.foreach(putLong))
-    val hex = md.digest().take(8).map(b => f"$b%02x").mkString
-    s"kmq_${kind}_$hex$extra"
-  }
-
-  /** Each registered builder closure pins its k×dim matrix in the
-    * session's FunctionRegistry for the session's lifetime — a
-    * many-iteration `fit` (one matrix per Lloyd round) or many refits
-    * would accumulate unboundedly (review finding r16). Registrations
-    * are therefore a bounded FIFO per session: beyond `MaxLive`, the
-    * oldest is dropped. Dropping only affects FUTURE analysis — plans
-    * already analyzed carry the expression (and its matrix) embedded,
-    * so in-flight queries are untouched; re-registering the same
-    * content-hashed name later is cheap and idempotent. The one hazard
-    * is a Column BUILT but not yet analyzed when its name is evicted
-    * (resolution would fail) — eviction is LRU (re-registering a live
-    * name refreshes its queue position), so with MaxLive=16 that takes
-    * 16 DISTINCT models built-but-unexecuted concurrently, far outside
-    * the build-then-run usage of every caller in this library. (FIFO
-    * here would evict the most-reused model FIRST once 16 names
-    * accumulate — advisor finding r12.) */
-  private val MaxLive = 16
-  private val live = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession,
-    scala.collection.mutable.Queue[String]]()
-
-  private def registerBounded(spark: org.apache.spark.sql.SparkSession,
-      name: String, builder: Seq[Expression] => Expression): Unit =
-    live.synchronized {
-      val q = {
-        val cur = live.get(spark)
-        if (cur != null) cur
-        else {
-          val fresh = scala.collection.mutable.Queue[String]()
-          live.put(spark, fresh)
-          fresh
-        }
-      }
-      // register-once: the SHA-256 content-hashed name pins the matrix,
-      // so a registered name is by construction the same builder — skip
-      // the replace (registry work + "replaced function" log churn per
-      // Column construction, r18 verdict #9) and only refresh its LRU
-      // position. The registry, not the queue, decides: an evicted or
-      // externally dropped (DROP TEMPORARY FUNCTION) name re-registers.
-      if (!registry(spark).functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        registry(spark).createOrReplaceTempFunction(name, builder, "scala_udf")
-      // LRU, not FIFO: a re-registered live name moves to the tail so a
-      // constantly-reused model is the LAST evicted, not the first.
-      q.dequeueFirst(_ == name)
-      q.enqueue(name)
-      while (q.size > MaxLive) {
-        val evict = q.dequeue()
-        registry(spark).dropFunction(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(evict))
-      }
-    }
-
   /** `struct(c, d)` hard assignment of a quantized array<long> column.
-    * Registers on `SparkSession.active` — Column construction always
-    * happens on the driver with a session in scope. */
-  def nearestCell(vq: Column, centroids: Array[Array[Long]]): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val name = nameFor("nearest", centroids, "")
-    registerBounded(spark, name,
-      Builders.unary(name)(NearestCellExpr(_, centroids)))
-    org.apache.spark.sql.functions.call_function(name, vq)
-  }
+    * The centroid matrix lives only in the plans that use the Column. */
+  def nearestCell(vq: Column, centroids: Array[Array[Long]]): Column =
+    Columns.of(NearestCellExpr(Columns.expr(vq), centroids))
 
   /** The `nprobe` nearest cell ids of a quantized array<long> column. */
   def nearestCells(vq: Column, centroids: Array[Array[Long]],
-      nprobe: Int): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val name = nameFor("cells", centroids, s"_$nprobe")
-    registerBounded(spark, name,
-      Builders.unary(name)(NearestCellsExpr(_, centroids, nprobe)))
-    org.apache.spark.sql.functions.call_function(name, vq)
-  }
+      nprobe: Int): Column =
+    Columns.of(NearestCellsExpr(Columns.expr(vq), centroids, nprobe))
 }

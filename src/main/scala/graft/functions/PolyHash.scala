@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.Columns
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -69,15 +70,8 @@ case class PolyHash(child: Expression) extends UnaryExpression {
 
 object PolyHashF {
 
-  /** Register `poly_hash` in the session registry (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Builders.registerOnce(spark, "poly_hash",
-      Builders.unary("poly_hash")(PolyHash.apply))
-
-  /** Codegen'd polynomial hash of a string column.
-    * Requires [[register]] on the session first. */
-  def poly_hash(s: Column): Column =
-    org.apache.spark.sql.functions.call_function("poly_hash", s)
+  /** Codegen'd polynomial hash of a string column. */
+  def poly_hash(s: Column): Column = Columns.of(PolyHash(Columns.expr(s)))
 
   /** The DuckDB mirror of [[PolyHash]] as a SQL fragment over
     * expression `e` — kept next to the kernel so the two definitions

@@ -3,9 +3,10 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.Columns
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, QuantileSummaries}
@@ -84,37 +85,15 @@ object QuantileSketch {
     else { a.qs = a.qs.merge(b.qs); a }
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Builders.registerOnce(spark, "gk_sketch_agg",
-      { exprs =>
-        require(exprs.size == 2,
-          s"gk_sketch_agg expects (value, eps), got ${exprs.size} args")
-        GkSketchAgg(exprs(0), exprs(1))
-      })
-    Builders.registerOnce(spark, "gk_union_agg",
-      { exprs =>
-        require(exprs.size == 1,
-          s"gk_union_agg expects (sketch), got ${exprs.size} args")
-        GkUnionAgg(exprs(0))
-      })
-    Builders.registerOnce(spark, "gk_quantiles",
-      { exprs =>
-        require(exprs.size == 2,
-          s"gk_quantiles expects (sketch, probs), got ${exprs.size} args")
-        GkQuantiles(exprs(0), exprs(1))
-      })
-  }
-
   def gk_sketch_agg(value: Column, eps: Double): Column =
-    org.apache.spark.sql.functions.call_function(
-      "gk_sketch_agg", value, org.apache.spark.sql.functions.lit(eps))
+    Columns.of(GkSketchAgg(Columns.expr(value), Literal(eps))
+      .toAggregateExpression())
 
   def gk_union_agg(sketch: Column): Column =
-    org.apache.spark.sql.functions.call_function("gk_union_agg", sketch)
+    Columns.of(GkUnionAgg(Columns.expr(sketch)).toAggregateExpression())
 
   def gk_quantiles(sketch: Column, probs: Column): Column =
-    org.apache.spark.sql.functions.call_function(
-      "gk_quantiles", sketch, probs)
+    Columns.of(GkQuantiles(Columns.expr(sketch), Columns.expr(probs)))
 }
 
 /** `gk_sketch_agg(value, eps)` → serialized digest (binary). */

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.Columns
 import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.StringType
@@ -78,17 +79,9 @@ object ScriptGuard {
     false
   }
 
-  private val Name = "contains_wsfree_script"
-
-  /** Boolean gate column; registers on `SparkSession.active` (Column
-    * construction always happens on the driver with a session — the
-    * KMeansAssignExprs discipline). */
-  def containsWsFreeScript(text: Column): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    Builders.registerOnce(spark, Name,
-      Builders.unary(Name)(ContainsWsFreeScript.apply))
-    org.apache.spark.sql.functions.call_function(Name, text)
-  }
+  /** Boolean gate column. */
+  def containsWsFreeScript(text: Column): Column =
+    Columns.of(ContainsWsFreeScript(Columns.expr(text)))
 }
 
 /** `contains_wsfree_script(text)` — see [[ScriptGuard]]. */

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.Columns
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
@@ -108,13 +109,7 @@ case class JaroWinkler(left: Expression, right: Expression)
 
 object StringSim {
 
-  /** Register `jaro_winkler` in the session registry (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Builders.registerOnce(spark, "jaro_winkler",
-      Builders.binary("jaro_winkler")(JaroWinkler.apply))
-
-  /** Codegen'd Jaro-Winkler similarity of two string columns.
-    * Requires [[register]] on the session first. */
+  /** Codegen'd Jaro-Winkler similarity of two string columns. */
   def jaro_winkler(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("jaro_winkler", a, b)
+    Columns.of(JaroWinkler(Columns.expr(a), Columns.expr(b)))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.Columns
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -80,21 +81,13 @@ case class UnicodeNormalize(child: Expression, form: String)
 
 object UnicodeNormF {
 
-  /** Register `nfc_normalize` and `nfkc_normalize` in the session
-    * registry (idempotent). The NFC name deliberately matches DuckDB's
-    * built-in so shared SQL fragments read identically on both engines. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Builders.registerOnce(spark, "nfc_normalize",
-      Builders.unary("nfc_normalize")(UnicodeNormalize(_, "NFC")))
-    Builders.registerOnce(spark, "nfkc_normalize",
-      Builders.unary("nfkc_normalize")(UnicodeNormalize(_, "NFKC")))
-  }
-
-  /** Codegen'd NFC normalization. Requires [[register]] first. */
+  /** Codegen'd NFC normalization. The name `nfc_normalize` deliberately
+    * matches DuckDB's built-in so shared SQL fragments read identically
+    * on both engines. */
   def nfc_normalize(s: Column): Column =
-    org.apache.spark.sql.functions.call_function("nfc_normalize", s)
+    Columns.of(UnicodeNormalize(Columns.expr(s), "NFC"))
 
-  /** Codegen'd NFKC normalization. Requires [[register]] first. */
+  /** Codegen'd NFKC normalization. */
   def nfkc_normalize(s: Column): Column =
-    org.apache.spark.sql.functions.call_function("nfkc_normalize", s)
+    Columns.of(UnicodeNormalize(Columns.expr(s), "NFKC"))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.Columns
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -83,16 +84,7 @@ case class DotProduct(left: Expression, right: Expression)
 
 object VectorFunctions {
 
-  /** Register `vec_dot` in the session's function registry (idempotent).
-    * Registry + call_function is the supported way to hand a custom
-    * Expression to the analyzer in Spark 4 (the Column(expr) constructor
-    * went private[sql]); it also makes the function usable from SQL. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Builders.registerOnce(spark, "vec_dot",
-      Builders.binary("vec_dot")(DotProduct.apply))
-
-  /** Codegen'd dot product of two array<double> columns.
-    * Requires [[register]] on the session first. */
+  /** Codegen'd dot product of two array<double> columns. */
   def vec_dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("vec_dot", a, b)
+    Columns.of(DotProduct(Columns.expr(a), Columns.expr(b)))
 }

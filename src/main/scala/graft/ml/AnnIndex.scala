@@ -44,7 +44,6 @@ object AnnIndex {
   def buildHyperplane(emb: DataFrame, idCol: String, vecCol: String,
       path: String, tables: Int = 16, bitsPerTable: Int = 8,
       storeVectors: Boolean = true): Unit = {
-    val spark = emb.sparkSession
     val withV = emb.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
     // null-safe, memoized dim read (a leading null vector must not NPE)
@@ -53,7 +52,7 @@ object AnnIndex {
         s"cannot build a hyperplane index over an empty input ($vecCol)"))
     val planes = Similarity.hyperplanes(tables * bitsPerTable, dim)
     val sigged = withV
-      .withColumn("sig", HyperplaneSigs.sigs(spark, col("v"), planes, bitsPerTable))
+      .withColumn("sig", HyperplaneSigs.sigs(col("v"), planes, bitsPerTable))
     // storeVectors=false drops the vector from the index rows: the
     // L-way storage amplification then applies to an 8-byte id, not the
     // embedding (dim×8 bytes) — the compact layout for wide embeddings,
@@ -107,7 +106,6 @@ object AnnIndex {
     * cannot silently diverge on tie-break or rounding semantics. */
   private def rerankTopK(cands: DataFrame, query: Seq[Double], k: Int,
       excludeId: Option[Long]): DataFrame = {
-    VectorFunctions.register(cands.sparkSession)
     val qVec = array(query.map(lit): _*)
     excludeId.fold(cands)(q => cands.filter(col("id") =!= q))
       .withColumn("cos", round(Similarity.cosineFast(col("v"), qVec), 6))
@@ -156,7 +154,6 @@ object AnnIndex {
       vecCol: String, path: String, tables: Int = 16,
       bitsPerTable: Int = 8): Unit = {
     import graft.operators.Quantize
-    val spark = emb.sparkSession
     val withV = emb.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
     val dim = Similarity.vecDim(withV, "v").getOrElse(throw
@@ -165,7 +162,7 @@ object AnnIndex {
     val planes = Similarity.hyperplanes(tables * bitsPerTable, dim)
     val rows = withV
       .withColumn("sig",
-        HyperplaneSigs.sigs(spark, col("v"), planes, bitsPerTable))
+        HyperplaneSigs.sigs(col("v"), planes, bitsPerTable))
       .select(col("id"),
         Quantize.codes(col("v")).as("qc"),
         Quantize.scaleOf(col("v")).as("qs"),
@@ -262,7 +259,6 @@ object AnnIndex {
   def probeHyperplaneBatch(index: DataFrame, queries: DataFrame,
       qIdCol: String, qVecCol: String, k: Int, tables: Int = 16,
       bitsPerTable: Int = 8, excludeSelf: Boolean = false): DataFrame = {
-    val spark = index.sparkSession
     val q = queries.select(col(qIdCol).as("query_id"),
       col(qVecCol).cast("array<double>").as("qv"))
     val indexDim = vecDim(index, "v")
@@ -280,10 +276,9 @@ object AnnIndex {
     // corpus-sized batch degrades to a shuffle join instead of failing.
     val expanded = q
       .withColumn("sig",
-        HyperplaneSigs.sigs(spark, col("qv"), planes, bitsPerTable))
+        HyperplaneSigs.sigs(col("qv"), planes, bitsPerTable))
       .select(col("query_id"),
         posexplode(col("sig")).as(Seq("table_id", "bucket")))
-    VectorFunctions.register(spark)
     val cands = expanded
       .join(index, Seq("table_id", "bucket"))
       .dropDuplicates("query_id", "id")
@@ -340,7 +335,6 @@ object AnnIndex {
   def probeIvf(index: DataFrame, centroids: Array[Array[Double]],
       query: Seq[Double], k: Int, nprobe: Int,
       excludeId: Option[Long]): DataFrame = {
-    val spark = index.sparkSession
     // Centroid length IS the indexed dimension — a driver-side check, no
     // job. Without it, c.zip(query) silently truncates a wrong-dimension
     // query and ranks cells over a prefix.

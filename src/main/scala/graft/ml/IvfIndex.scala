@@ -56,8 +56,6 @@ object IvfIndex {
         (i, d2)
       }
       .sortBy(_._2).take(nprobe).map(_._1).toSeq
-    val spark = model.assigned.sparkSession
-    VectorFunctions.register(spark)
     val qVec = array(query.map(lit): _*)
     model.assigned
       .filter(col("cell").isin(probeCells: _*))

@@ -3,9 +3,8 @@ package graft.ml
 import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
 import org.apache.spark.ml.classification.{LinearModels, LinearSVC,
   LinearSVCModel, LogisticRegression, LogisticRegressionModel, NaiveBayes}
-import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.feature._
-import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
 import org.apache.spark.ml.param.{ParamMap, Params}
 import org.apache.spark.mllib.evaluation.MulticlassMetrics
 import org.apache.spark.sql.DataFrame
@@ -207,24 +206,16 @@ object SentimentPipeline {
 
   /** In-engine evaluation: a groupBy(label, prediction) confusion
     * matrix (never collect the predictions themselves), accuracy and
-    * weighted F1 from it, and AUC from the evaluator. Accuracy and F1
+    * weighted F1 from it, and the exact AUC ([[rocAuc]]). Accuracy and F1
     * come from one MulticlassMetrics over the (prediction, label) cells
     * weighted by their counts: the class sums the evaluators form over
-    * the scored rows, reached without two more passes over them. AUC
-    * uses exact thresholds (numBins 0) instead of the evaluator's
-    * default 1,000 bins, whose edges follow a range-partition sample
-    * seeded from the RDD id, so a binned AUC differs between two
-    * evaluations of the same frame. The exact AUC still varies in its
-    * last ulps with the RDD id: the sort's range partitions, sampled the
-    * same way, group the trapezoid sum. */
+    * the scored rows, reached without two more passes over them. */
   def evaluate(predictions: DataFrame,
       rawCol: String = "rawPrediction"): Metrics = {
-    // AUC first: on a persisted, not yet materialized frame its RDD job
+    // AUC first: on a persisted, not yet materialized frame its job
     // fills the cache, where an adaptive query reading it first would
     // run one more job to materialize it
-    val auc = new BinaryClassificationEvaluator().setLabelCol("label")
-      .setRawPredictionCol(rawCol).setMetricName("areaUnderROC")
-      .setNumBins(0).evaluate(predictions)
+    val auc = rocAuc(predictions, rawCol)
     val confusion = confusionMatrix(predictions).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val cells = confusion.toSeq.map { case ((l, p), n) =>
@@ -232,6 +223,65 @@ object SentimentPipeline {
     val mm = new MulticlassMetrics(
       predictions.sparkSession.sparkContext.parallelize(cells, 1))
     Metrics(mm.accuracy, mm.weightedFMeasure(1.0), auc, confusion)
+  }
+
+  /** Area under the ROC curve of the class-1 score (`rawCol`'s element 1,
+    * or `rawCol` itself when it is a number — the score
+    * BinaryClassificationEvaluator reads) as the Mann-Whitney U statistic
+    * in exact integer arithmetic. With P positives and N negatives, and
+    * pos(s)/neg(s) the rows at distinct score s,
+    * AUC = Σ_s pos(s)·(2·negBelow(s) + neg(s)) / (2·P·N): the trapezoid
+    * area under the exact ROC curve, a tie counting half. The rows are
+    * range-sorted by score, so each partition holds every row of its
+    * scores, in order; it sums its scores against its own negBelow, and
+    * the driver adds 2·pos·(negatives of the earlier partitions). Integer
+    * sums do not depend on where the sort cuts the partitions, so the AUC
+    * is the same for every partitioning and every run (a floating-point
+    * trapezoid sum varies in its last ulps with the sort's sampled
+    * bounds). BigInt, because 2·P·N overflows a Long past about 2^31 rows
+    * per class. NaN for single-class input. */
+  private def rocAuc(predictions: DataFrame, rawCol: String): Double = {
+    val score =
+      if (predictions.schema(rawCol).dataType == SQLDataTypes.VectorType)
+        org.apache.spark.ml.functions.vector_to_array(col(rawCol)).getItem(1)
+      else col(rawCol).cast("double")
+    val parts = predictions
+      .select(score.as("s"), (col("label") > 0.5).as("positive"))
+      .orderBy(col("s"))
+      .rdd.mapPartitions { rows =>
+        var pos = 0L
+        var neg = 0L
+        var u = BigInt(0)
+        // the tie group of the current score (the sort's equality: NaN
+        // equals NaN, -0.0 equals 0.0)
+        var s = 0.0
+        var sPos = 0L
+        var sNeg = 0L
+        def closeTies(): Unit = {
+          u += BigInt(sPos) * (2 * neg + sNeg)
+          pos += sPos
+          neg += sNeg
+          sPos = 0L
+          sNeg = 0L
+        }
+        rows.foreach { r =>
+          val x = r.getDouble(0)
+          if (sPos + sNeg > 0 && x != s && !(x.isNaN && s.isNaN)) closeTies()
+          s = x
+          if (r.getBoolean(1)) sPos += 1 else sNeg += 1
+        }
+        closeTies()
+        Iterator((pos, neg, u))
+      }.collect()
+    var negBelow = 0L
+    var u = BigInt(0)
+    parts.foreach { case (p, n, partU) =>
+      u += partU + BigInt(2) * p * negBelow
+      negBelow += n
+    }
+    val pos = parts.map(_._1).sum
+    if (pos == 0 || negBelow == 0) Double.NaN
+    else (BigDecimal(u) / BigDecimal(BigInt(2) * pos * negBelow)).toDouble
   }
 
   /** The confusion matrix as a (label, prediction, n) aggregate. */

@@ -165,8 +165,6 @@ object Dedup {
       .distinct()
     val cnt = math.max(1L, expectedItems.getOrElse(benchGrams.count()))
     val bloom = benchGrams.stat.bloomFilter("__gh", cnt, fpp)
-    val spark = corpus.sparkSession
-    BloomFunctions.register(spark)
     val bloomLit = lit(BloomFunctions.serialize(bloom))
     corpus.filter(col(textCol).isNull ||
       !exists(gramHashes(col(textCol), n),
@@ -305,8 +303,6 @@ object Dedup {
     // caller knows the benchmark cardinality (at scale they do).
     val n = math.max(1L, expectedItems.getOrElse(benchFp.count()))
     val bloom = benchFp.stat.bloomFilter("__bfp", n, fpp)
-    val spark = corpus.sparkSession
-    BloomFunctions.register(spark)
     corpus.filter(col(textCol).isNull ||
       !BloomFunctions.bloom_might_contain(
         fp(col(textCol)), lit(BloomFunctions.serialize(bloom))))

@@ -295,7 +295,6 @@ object FuzzyJoin {
       s"jaroWinklerPairs is O(n²) by contract (JW has no exact blocking): " +
         s"over $maxExactRows rows. Dedup to a key dictionary first, or " +
         "pass maxExactRows explicitly to opt in.")
-    graft.functions.StringSim.register(df.sparkSession)
     val base = df.filter(col(strCol).isNotNull)
     val a = base.select(col(idCol).as("id_a"), col(strCol).as("__sa"))
     val b = base.select(col(idCol).as("id_b"), col(strCol).as("__sb"))

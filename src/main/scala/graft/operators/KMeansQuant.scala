@@ -150,7 +150,6 @@ object KMeansQuant {
     * unlike the MLlib-fit IVF family. */
   def ivfTopK(emb: DataFrame, idCol: String, vecCol: String, m: Model,
       queryId: Long, k: Int, nprobe: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
     val qQuant = emb.filter(col(idCol) === queryId)
       .select(quantize(col(vecCol))).head().getSeq[Long](0).toArray
     val cells = rankCells(m, qQuant, nprobe)
@@ -445,7 +444,6 @@ object KMeansQuant {
       m: Model, queryVec: Seq[Double], k: Int, nprobe: Int,
       idCol: String, vecCol: String,
       excludeId: Option[Long] = None): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val qQuant = quantizeVec(queryVec)
     require(m.dim == qQuant.length,
       s"query dimension ${qQuant.length} != model dimension ${m.dim}")
@@ -492,7 +490,6 @@ object KMeansQuant {
       "hardNegativesFromIndex: duplicate anchor ids")
     require(lo < hi, s"need lo < hi, got [$lo, $hi)")
     require(k > 0 && nprobe > 0, s"need k > 0 and nprobe > 0")
-    graft.functions.VectorFunctions.register(spark)
     import spark.implicits._
     val probePairs = anchors.flatMap { case (aid, v) =>
       require(v.length == m.dim,

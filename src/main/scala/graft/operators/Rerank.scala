@@ -46,8 +46,6 @@ object Rerank {
       w: Weights = Weights(),
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "rerank needs query terms")
-    val spark = docs.sparkSession
-    VectorFunctions.register(spark)
 
     val cand = candidates.select(col(idCol)).distinct()
 

@@ -201,8 +201,7 @@ object Sampling {
     * BIGINT cast — which Spark's non-ANSI cast would SATURATE silently
     * while DuckDB's errors, splitting engine from oracle. The floor
     * keeps the key integer-exact on both engines by construction; a
-    * sub-floor weight has inclusion probability ≤ 1e-8/Σw anyway.
-    * Requires [[graft.functions.PolyHashF.register]] on the session. */
+    * sub-floor weight has inclusion probability ≤ 1e-8/Σw anyway. */
   /** The shared A-ES key: ln(u)/w on the 1e-9 grid, u from
     * poly_hash(md5(seed-tag ‖ id)). ONE definition for the global and
     * stratified samplers (and the formula the two SQL mirrors
@@ -309,7 +308,6 @@ object Sampling {
     * integral (it rides the aggregate as a long). */
   def capPerStratum(df: DataFrame, idCol: String, key: Column,
       stratumCol: String, k: Int, seed: Long = 42L): DataFrame = {
-    graft.functions.BottomK.register(df.sparkSession)
     val kept = df
       .groupBy(col(stratumCol))
       .agg(graft.functions.BottomK.bottom_k(

@@ -92,7 +92,6 @@ object SemDedup {
       m: KMeansQuant.Model, threshold: Double,
       maxCellRows: Long = 100000L,
       guardMemoKey: Option[String] = None): DataFrame = {
-    VectorFunctions.register(emb.sparkSession)
     val cell = KMeansQuant.cellOf(col(vecCol), m)
     // per-side norms hoisted ([[Similarity.cosinePre]], bit-identical):
     // a within-cell candidate pair pays ONE dot product, not three
@@ -133,7 +132,6 @@ object SemDedup {
       m: KMeansQuant.Model, threshold: Double, nprobe: Int = 2,
       maxCellRows: Long = 100000L,
       guardMemoKey: Option[String] = None): DataFrame = {
-    VectorFunctions.register(emb.sparkSession)
     // norms hoisted BEFORE the probe explode: each vector's norm is
     // computed once, not nprobe× — and each candidate pair pays one dot
     // (cellsOf over the cast __v quantizes identically: the cast is
@@ -221,7 +219,6 @@ object SemDedup {
   def decontaminate(corpus: DataFrame, evalSet: DataFrame, idCol: String,
       vecCol: String, m: KMeansQuant.Model, threshold: Double,
       nprobe: Int = 2, maxEvalRows: Long = 1000000L): DataFrame = {
-    VectorFunctions.register(corpus.sparkSession)
     // limit probe, not a full count: the guard's job is only to refuse
     // an over-budget broadcast side, and a count would scan whatever
     // frame the eval derives from once per invocation (the eager-probe
@@ -272,7 +269,6 @@ object SemDedup {
       path: String, m: KMeansQuant.Model, evalSet: DataFrame,
       idCol: String, vecCol: String, threshold: Double, nprobe: Int = 2,
       maxEvalRows: Long = 1000000L): DataFrame = {
-    VectorFunctions.register(spark)
     // limit probe BEFORE the checkpoint so an over-budget eval refuses
     // without materializing; then one checkpoint feeds the touched-cell
     // probe and the join leg (and keeps the runtime InSubquery
@@ -350,7 +346,6 @@ object SemDedup {
       path: String, newVecs: DataFrame, idCol: String, vecCol: String,
       m: KMeansQuant.Model, threshold: Double,
       maxCellRows: Long = 100000L): DataFrame = {
-    VectorFunctions.register(spark)
     // The batch is materialized once (delta-sized by the ingestion
     // contract) for two reasons: it feeds four legs of the core, and a
     // live batch SCAN beside the partitioned index scan invites Spark's
@@ -380,7 +375,6 @@ object SemDedup {
   private def appendKeepFrom(oldAnchors: DataFrame, newVecs: DataFrame,
       idCol: String, vecCol: String, m: KMeansQuant.Model,
       threshold: Double, maxCellRows: Long): DataFrame = {
-    VectorFunctions.register(newVecs.sparkSession)
     val cell = KMeansQuant.cellOf(col(vecCol), m)
     def shaped(id: String, vec: String, n: String) =
       newVecs.select(cell.as("cluster"), col(idCol).as(id),

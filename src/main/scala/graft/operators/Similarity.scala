@@ -33,8 +33,7 @@ object Similarity {
   /** Same math and summation order as [[cosine]], but through the
     * codegen'd [[graft.functions.DotProduct]] expression — the HOF form
     * pays one interpreted lambda dispatch per element, which dominates
-    * all-pairs joins (measured ~50x on the bench near-dup query). Caller
-    * must VectorFunctions.register the session. */
+    * all-pairs joins (measured ~50x on the bench near-dup query). */
   def cosineFast(a: Column, b: Column): Column =
     VectorFunctions.vec_dot(a, b) /
       (sqrt(VectorFunctions.vec_dot(a, a)) * sqrt(VectorFunctions.vec_dot(b, b)))
@@ -83,7 +82,6 @@ object Similarity {
         .isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"alignmentUniformity needs a numeric id column for offset " +
         s"probing; '$idCol' is ${emb.schema(idCol).dataType.simpleString}")
-    VectorFunctions.register(emb.sparkSession)
     // per-side norms hoisted into the shared projection (cosinePre —
     // bit-identical): each joined pair pays one dot, not three
     val e = emb.select(col(idCol).as("__id"), toDouble(col(vecCol)).as("__v"))
@@ -125,7 +123,6 @@ object Similarity {
     * TakeOrderedAndProject (never a full sort). */
   def bruteForceTopK(embeddings: DataFrame, idCol: String, vecCol: String,
       queryId: Long, k: Int): DataFrame = {
-    VectorFunctions.register(embeddings.sparkSession)
     val e = embeddings.withColumn("__v", toDouble(col(vecCol)))
     // the query norm rides the 1-row broadcast: each corpus row pays one
     // dot + its own norm instead of three dots (cosinePre, bit-identical)
@@ -168,7 +165,6 @@ object Similarity {
       "hardNegatives: duplicate anchor ids")
     require(lo < hi, s"need lo < hi, got [$lo, $hi)")
     require(k > 0, s"hardNegatives needs k > 0, got $k")
-    VectorFunctions.register(embeddings.sparkSession)
     // ONE bounded collect serves both needs: the presence check (a
     // typo'd anchor id would otherwise just produce ZERO rows for that
     // anchor — indistinguishable from "no candidates in the band"; fail
@@ -242,7 +238,6 @@ object Similarity {
         s"$maxExactRows input rows means ~${maxExactRows.toDouble * maxExactRows / 2} " +
         "candidate pairs. Use annNearDupPairs for production scale, or pass " +
         "maxExactRows explicitly to override.")
-    VectorFunctions.register(embeddings.sparkSession)
     // per-side norms hoisted: the cross join pays one dot per pair, not
     // three ([[cosinePre]] — bit-identical arithmetic)
     // STREAM-SIDE PARALLELISM: a verification-scale corpus is typically
@@ -355,8 +350,6 @@ object Similarity {
     */
   def annNearDupPairs(embeddings: DataFrame, idCol: String, vecCol: String,
       threshold: Double, tables: Int = 16, bitsPerTable: Int = 8): DataFrame = {
-    val spark = embeddings.sparkSession
-    VectorFunctions.register(spark)
     val withV = embeddings.select(col(idCol), toDouble(col(vecCol)).as("__v"))
     val dim = vecDim(withV, "__v").getOrElse(
       return withV.select(col(idCol).as("id_a"), col(idCol).as("id_b"),
@@ -364,7 +357,7 @@ object Similarity {
     val planes = hyperplanes(tables * bitsPerTable, dim)
     val ex = withV
       .withColumn("sig",
-        graft.functions.HyperplaneSigs.sigs(spark, col("__v"), planes, bitsPerTable))
+        graft.functions.HyperplaneSigs.sigs(col("__v"), planes, bitsPerTable))
       .select(col(idCol), posexplode(col("sig")).as(Seq("t", "b")))
     val a = ex.select(col(idCol).as("id_a"), col("t"), col("b"))
     val b = ex.select(col(idCol).as("id_b"), col("t"), col("b"))
@@ -400,7 +393,6 @@ object Similarity {
     val dim = query.size
     val allPlanes = hyperplanes(tables * bitsPerTable, dim)
     val tablePlanes = allPlanes.grouped(bitsPerTable).toSeq
-    VectorFunctions.register(embeddings.sparkSession)
     val qVec = array(query.map(lit): _*)
     val withV = embeddings.withColumn("__v", toDouble(col(vecCol)))
     // All table signatures in one codegen'd pass; a vector is a candidate
@@ -409,7 +401,7 @@ object Similarity {
     // exactly once per row.
     val qSigs = array(tablePlanes.map(p => lit(sigOf(query, p))): _*)
     val sigsCol = graft.functions.HyperplaneSigs.sigs(
-      embeddings.sparkSession, col("__v"), allPlanes, bitsPerTable)
+      col("__v"), allPlanes, bitsPerTable)
     withV
       .filter(exists(zip_with(sigsCol, qSigs, (a, b) => a === b), x => x))
       .withColumn("cos", round(cosineFast(col("__v"), qVec), 6))

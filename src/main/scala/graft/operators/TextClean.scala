@@ -226,8 +226,7 @@ object TextClean {
   /** Unicode NFC canonicalization — apply BEFORE [[cleanText]],
     * tokenization, or any fingerprint so composed/decomposed spellings
     * of the same text dedup together (see
-    * [[graft.functions.UnicodeNormKernel]]). Requires
-    * [[graft.functions.UnicodeNormF.register]] on the session. */
+    * [[graft.functions.UnicodeNormKernel]]). */
   def normalizeNfc(text: Column): Column =
     graft.functions.UnicodeNormF.nfc_normalize(text)
 

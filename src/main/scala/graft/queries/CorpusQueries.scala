@@ -582,7 +582,6 @@ object CorpusQueries extends QueryModule {
     // join). Anchors are the 3 smallest surviving ids — derived, not
     // hardcoded, so the oracle recomputes them itself.
     "q_curate_full" -> ((s, d) => {
-      graft.functions.UnicodeNormF.register(s)
       val survivors = curatedFullCache.getOrElseUpdate(s, d) {
         val dirty = concat(col("text"),
           lit(" cafe\u0301 n\u0303o")) // decomposed: NFC must compose
@@ -736,7 +735,6 @@ object CorpusQueries extends QueryModule {
     // partitioning (the est<=true<=est+maxerr guarantee does not) ⇒
     // rows-only; HeavyHittersSpec proves the guarantees vs exact counts.
     "q_heavy_hitters" -> ((s, d) => {
-      graft.functions.HeavyHitters.register(s)
       Tables.documents(s, d)
         .select(col("source"), explode(TokenOps.tokenize(col("text"))).as("token"))
         .groupBy(col("source"))
@@ -757,7 +755,6 @@ object CorpusQueries extends QueryModule {
     // poly_hash row family, unlike Misra-Gries' partition-dependent
     // retained set, so this sketch is hash-checked, not rows-only.
     "q_cms_cells" -> ((s, d) => {
-      graft.functions.CountMin.register(s)
       Tables.documents(s, d)
         .select(col("source"),
           explode(TokenOps.tokenize(col("text"))).as("token"))
@@ -780,8 +777,6 @@ object CorpusQueries extends QueryModule {
     // cell table, so the hash family, the layout and the min-read all
     // sit under the hash check.
     "q_cms_estimates" -> ((s, d) => {
-      graft.functions.CountMin.register(s)
-      graft.functions.PolyHashF.register(s)
       val toks = Tables.documents(s, d)
         .select(explode(TokenOps.tokenize(col("text"))).as("token"))
       val sketch = toks.agg(graft.functions.CountMin
@@ -889,7 +884,6 @@ object CorpusQueries extends QueryModule {
 
   private def dsirWeights(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.PolyHashF.register(s)
     val grams = Dsir.hashedGrams(Tables.documents(s, d), "doc_id", "text",
       col("lang") === "en", DSIR_B)
     val deltas = dsirDeltaCache.getOrElseUpdate(s, d) {

@@ -627,7 +627,6 @@ object EventQueries extends QueryModule {
     // oracle-recomputable (B=50 replicates, 95%): the dashboard error
     // bar, hash-checked instead of property-tested.
     "q_bootstrap_ci" -> ((s, d) => {
-      graft.functions.PolyHashF.register(s)
       graft.operators.EventOps.bootstrapMeanCi(Tables.events(s, d),
           "event_type", col("ts"), col("value"))
         .orderBy(col("event_type"))

@@ -214,7 +214,6 @@ object RelationalQueries extends QueryModule {
     // are partitioning-dependent within the eps guarantee ⇒ rows-only;
     // QuantileSketchSpec proves the rank bound vs exact sorted data.
     "q_quantile_rollup" -> ((s, d) => {
-      graft.functions.QuantileSketch.register(s)
       val daily = Tables.orders(s, d)
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg(graft.functions.QuantileSketch
@@ -918,7 +917,6 @@ object RelationalQueries extends QueryModule {
     // weighted sampler, not a rows-only one. Row-local keys +
     // TakeOrderedAndProject; no shuffle.
     "q_weighted_sample" -> ((s, d) => {
-      graft.functions.PolyHashF.register(s)
       // Emit the exact integer-grid key, NOT a rounded double: the
       // top-100 keys are tiny negatives that round to zero, and IEEE
       // zero carries a sign — Spark's round lands on +0.0 where
@@ -938,7 +936,6 @@ object RelationalQueries extends QueryModule {
     // recomputes the draw). One group-keyed shuffle + per-group top-k
     // heap; never a global sort.
     "q_group_weighted" -> ((s, d) => {
-      graft.functions.PolyHashF.register(s)
       graft.operators.Sampling.weightedSamplePerGroup(
           Tables.orders(s, d).select(col("o_orderkey"),
             col("o_orderpriority"), col("o_totalprice")),
@@ -1307,7 +1304,6 @@ object RelationalQueries extends QueryModule {
     * envelopes and the means against the exact form. */
   private[graft] def winsorizeGk(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.QuantileSketch.register(s)
     val li = Tables.lineitem(s, d)
       .select(col("l_returnflag"), cents(col("l_extendedprice")).as("cents"))
     val st = li.groupBy(col("l_returnflag"))

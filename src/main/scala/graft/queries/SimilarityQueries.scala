@@ -417,7 +417,6 @@ object SimilarityQueries extends QueryModule {
     // Per-vector L2 norm (embedding hygiene check before cosine work);
     // codegen'd vec_dot, scan-speed row-local.
     "q_embed_norm" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val v = col("embedding").cast("array<double>")
       Tables.embeddings(s, d).select(col("vec_id"),
           round(sqrt(graft.functions.VectorFunctions.vec_dot(v, v)), 6).as("l2"))

@@ -159,8 +159,6 @@ object TextQueries extends QueryModule {
     // tail5 carries the composed non-ASCII text through the driver hash;
     // fp poly-hashes the WHOLE normalized string.
     "q_nfc_clean" -> ((s, d) => {
-      graft.functions.UnicodeNormF.register(s)
-      graft.functions.PolyHashF.register(s)
       val dirty = concat(col("text"), lit(" cafe\u0301 n\u0303o"))
       val norm = TextClean.normalizeNfc(dirty)
       Tables.documents(s, d)
@@ -842,7 +840,6 @@ object TextQueries extends QueryModule {
       d: String, bands: Int = 128, eps: Double = 0.002)
       : org.apache.spark.sql.DataFrame = {
     import graft.functions.{BandExprs, QuantileSketch}
-    QuantileSketch.register(s)
     val base = ensembleSignals(s, d)
     val probs = array((1 until bands).map(i =>
       lit(i.toDouble / bands)): _*)

@@ -215,7 +215,6 @@ object TokenQueries extends QueryModule {
     // bounds every decile population and the joint grid against the
     // exact form.
     "q_curriculum_grid_gk" -> ((s, d) => {
-      graft.functions.QuantileSketch.register(s)
       // digest pass + band pass share one memoized compute (the
       // curatedCache discipline — bench re-runs reuse one RDD)
       val base = curriculumBase(s, d)
@@ -525,7 +524,6 @@ object TokenQueries extends QueryModule {
     // shuffle+sort the whole corpus per language; bottom_k keeps a
     // k-bounded heap with map-side combine — hot-language-safe.
     "q_group_sample" -> ((s, d) => {
-      graft.functions.BottomK.register(s)
       Tables.documents(s, d)
         .filter(col("text").isNotNull)
         .groupBy(col("lang"))

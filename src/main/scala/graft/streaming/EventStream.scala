@@ -208,7 +208,6 @@ object EventStream {
     * dependent; the guarantee is not). State per group is O(capacity),
     * never per-user — the monitor runs forever on bounded memory. */
   def heavyUsersByType(events: DataFrame, capacity: Int = 8): DataFrame = {
-    graft.functions.HeavyHitters.register(events.sparkSession)
     events
       .select(col("event_type"), col("user_id").cast("string").as("item"))
       .groupBy(col("event_type"))

@@ -15,7 +15,6 @@ class BottomKSpec extends SparkSpec {
   private def sampleKey = md5(concat(lit("42:"), $"text"))
 
   test("bottom_k == window row_number form on the fixture") {
-    BottomK.register(spark)
     val agg = docs.groupBy($"lang")
       .agg(BottomK.bottom_k(sampleKey, $"doc_id", 5).as("ids"))
       .select($"lang", posexplode($"ids").as(Seq("pos", "doc_id")))
@@ -31,7 +30,6 @@ class BottomKSpec extends SparkSpec {
   }
 
   test("partitioning-invariant; plans as two-stage ObjectHashAggregate") {
-    BottomK.register(spark)
     def run(parts: Int): Map[String, Seq[Long]] =
       docs.repartition(parts).groupBy($"lang")
         .agg(BottomK.bottom_k(sampleKey, $"doc_id", 7).as("ids"))
@@ -47,17 +45,18 @@ class BottomKSpec extends SparkSpec {
   }
 
   test("k beyond group size returns the whole group, ascending; SQL works") {
-    BottomK.register(spark)
-    Seq(("g", "b", 2L), ("g", "a", 1L), ("g", "c", 3L))
-      .toDF("g", "key", "id").createOrReplaceTempView("bk_small")
-    val r = spark.sql(
-      "SELECT g, bottom_k(key, id, 10) AS ids FROM bk_small GROUP BY g")
-      .as[(String, Seq[Long])].head()
+    val r = withGraftSql { ext =>
+      ext.createDataFrame(Seq(("g", "b", 2L), ("g", "a", 1L), ("g", "c", 3L)))
+        .toDF("g", "key", "id").createOrReplaceTempView("bk_small")
+      val row = ext.sql(
+        "SELECT g, bottom_k(key, id, 10) AS ids FROM bk_small GROUP BY g")
+        .head()
+      (row.getString(0), row.getSeq[Long](1))
+    }
     assert(r === (("g", Seq(1L, 2L, 3L))))
   }
 
   test("null keys/ids are skipped; ties break on id both ways") {
-    BottomK.register(spark)
     val df = Seq(
       (Some("k"), Some(5L)), (Some("k"), Some(2L)),
       (None: Option[String], Some(1L)), (Some("k"), None: Option[Long]))
@@ -67,7 +66,6 @@ class BottomKSpec extends SparkSpec {
   }
 
   test("non-positive or non-literal k fails analysis, not execution") {
-    BottomK.register(spark)
     val err = intercept[Exception] {
       docs.groupBy($"lang")
         .agg(BottomK.bottom_k(sampleKey, $"doc_id", 0)).collect()

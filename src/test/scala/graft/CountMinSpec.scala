@@ -18,8 +18,6 @@ class CountMinSpec extends SparkSpec {
     .select(col("source"), explode(TokenOps.tokenize(col("text"))).as("token"))
 
   test("estimate >= true count for EVERY item, unconditionally") {
-    CountMin.register(spark)
-    PolyHashF.register(spark)
     val sketch = toks.agg(CountMin.count_min(col("token"), W, D).as("sk"))
     val rows = toks.groupBy(col("token")).agg(count(lit(1)).as("t"))
       .crossJoin(broadcast(sketch))
@@ -38,7 +36,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("count_min_merge of per-source sketches equals the direct build") {
-    CountMin.register(spark)
     val direct = toks.agg(CountMin.count_min(col("token"), W, D).as("sk"))
       .select(explode(col("sk"))).as[Long].collect().toSeq
     val merged = toks.groupBy(col("source"))
@@ -50,7 +47,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("the sketch is identical under any partitioning") {
-    CountMin.register(spark)
     val a = toks.agg(CountMin.count_min(col("token"), W, D).as("sk"))
       .select(explode(col("sk"))).as[Long].collect().toSeq
     val b = toks.repartition(17, col("token"))
@@ -60,7 +56,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("merge refuses a sketch whose dims differ from the build") {
-    CountMin.register(spark)
     val sk = Seq("a", "b", "a").toDF("t")
       .agg(CountMin.count_min(col("t"), 32, 2).as("sk"))
     val e = intercept[Exception] {
@@ -70,14 +65,14 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("type checks: non-string item and non-literal width fail analysis") {
-    CountMin.register(spark)
     val df = Seq((1L, "x")).toDF("id", "t")
     intercept[Exception] {
       df.agg(CountMin.count_min(col("id"), W, D)).collect()
     }
     intercept[Exception] {
-      df.agg(org.apache.spark.sql.functions.call_function(
-        "count_min", col("t"), col("id"), lit(D))).collect()
+      withGraftSql(_.createDataFrame(Seq((1L, "x"))).toDF("id", "t")
+        .agg(org.apache.spark.sql.functions.call_function(
+          "count_min", col("t"), col("id"), lit(D))).collect())
     }
   }
 }

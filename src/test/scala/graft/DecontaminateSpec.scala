@@ -95,14 +95,13 @@ class DecontaminateSpec extends SparkSpec {
   }
 
   test("bloom_might_contain works from SQL with an embedded literal") {
-    graft.functions.BloomFunctions.register(spark)
     val bloom = org.apache.spark.util.sketch.BloomFilter.create(100, 0.01)
     bloom.putLong(42L)
     val bytes = graft.functions.BloomFunctions.serialize(bloom)
     val hex = bytes.map("%02X".format(_)).mkString
-    val r = spark.sql(
+    val r = withGraftSql(_.sql(
       s"SELECT bloom_might_contain(42L, X'$hex') a, " +
-        s"bloom_might_contain(43L, X'$hex') b").head()
+        s"bloom_might_contain(43L, X'$hex') b").head())
     assert(r.getBoolean(0) === true)
     // 43 not inserted: overwhelmingly likely false at fpp=1%
     assert(r.getBoolean(1) === false)

@@ -32,7 +32,6 @@ class DsirSpec extends SparkSpec {
   }
 
   test("poly_hash through the registry (codegen path) == kernel") {
-    PolyHashF.register(spark)
     val in = Seq("", "x", "abc def", "日本語テキスト", "a𝄞b")
     val got = in.toDF("s").select(PolyHashF.poly_hash(col("s")))
       .as[Long].collect().toSeq
@@ -48,7 +47,6 @@ class DsirSpec extends SparkSpec {
   ).toDF("doc_id", "text", "lang")
 
   test("weights equal a driver-side brute force of the same model") {
-    PolyHashF.register(spark)
     val got = Dsir.weights(corpus, "doc_id", "text",
         col("lang") === "en", B)
       .orderBy("doc_id").as[(Long, Long, Double)].collect().toSeq
@@ -82,7 +80,6 @@ class DsirSpec extends SparkSpec {
   }
 
   test("weights separate target-like from non-target-like vocabulary") {
-    PolyHashF.register(spark)
     val w = Dsir.weights(corpus, "doc_id", "text", col("lang") === "en", B)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> r._3).toMap
     // doc 4 reuses the en vocabulary, doc 3/5 use the fr-only one
@@ -91,7 +88,6 @@ class DsirSpec extends SparkSpec {
   }
 
   test("selectTopK returns k rows in weight order") {
-    PolyHashF.register(spark)
     val w = Dsir.weights(corpus, "doc_id", "text", col("lang") === "en", B)
     val top = Dsir.selectTopK(w, "doc_id", 3)
       .as[(Long, Long, Double)].collect().toSeq
@@ -100,7 +96,6 @@ class DsirSpec extends SparkSpec {
   }
 
   test("gumbelTopK is deterministic per seed and seed-sensitive") {
-    PolyHashF.register(spark)
     val w = Dsir.weights(corpus, "doc_id", "text", col("lang") === "en", B)
       .localCheckpoint()
     val a1 = Dsir.gumbelTopK(w, "doc_id", 3, seed = 7)

@@ -302,7 +302,6 @@ class EventOpsSpec extends SparkSpec {
     def mk(vals: Seq[Double]) = vals.zipWithIndex.map { case (v, i) =>
       (i.toLong, ts(f"2024-01-${i + 1}%02d 05:00:00"), 1L, "t", v, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    graft.functions.PolyHashF.register(spark)
     // every resample of a constant series has the same mean
     val const = EventOps.bootstrapMeanCi(mk(Seq.fill(12)(25.0)),
         "event_type", $"ts", $"value")

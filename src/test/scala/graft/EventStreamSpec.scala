@@ -47,7 +47,6 @@ class EventStreamSpec extends SparkSpec {
     // exercised for real: partial cell buffers persist in the state
     // store between micro-batches, and CMS determinism means the
     // streamed sketch must equal the batch sketch CELL FOR CELL
-    graft.functions.CountMin.register(spark)
     val stream = EventStream.read(spark, eventsDir)
       .groupBy($"event_type")
       .agg(graft.functions.CountMin.count_min($"event_type", 64, 4).as("sk"))
@@ -70,7 +69,6 @@ class EventStreamSpec extends SparkSpec {
     // the TypedImperativeAggregate's serialize/deserialize is exercised
     // for real here: streaming aggregation persists partial buffers in
     // the state store between micro-batches
-    graft.functions.BottomK.register(spark)
     def key = md5(concat(lit("42:"), $"event_id".cast("string")))
     val stream = EventStream.read(spark, eventsDir)
       .groupBy($"event_type")
@@ -850,8 +848,6 @@ class EventStreamSpec extends SparkSpec {
     // both sketch aggregates persist partial buffers in the state store
     // between micro-batches; the retained set / digest internals may
     // differ from a batch run, the bounds may not
-    graft.functions.HeavyHitters.register(spark)
-    graft.functions.QuantileSketch.register(spark)
     val stream = EventStream.read(spark, eventsDir)
       .groupBy($"event_type")
       .agg(graft.functions.HeavyHitters

@@ -12,7 +12,6 @@ import graft.operators.TokenOps
 class HeavyHittersSpec extends SparkSpec {
   import spark.implicits._
 
-  HeavyHitters.register(spark)
 
   private lazy val tokens = Tables.documents(spark, sf001)
     .select(explode(TokenOps.tokenize($"text")).as("token"))

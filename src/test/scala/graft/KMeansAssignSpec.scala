@@ -174,7 +174,7 @@ class KMeansAssignSpec extends SparkSpec {
     assert(got == 0L, "keeper still registered and correct after churn")
   }
 
-  test("a name dropped from the registry re-registers on the next call") {
+  test("nearestCell registers no function and resolves on every call") {
     val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
     val cen = Array(Array(31L, 0L), Array(0L, 31L))
@@ -184,8 +184,7 @@ class KMeansAssignSpec extends SparkSpec {
     val before = reg.listFunction().map(_.funcName).toSet
     assert(cell() == 1L)
     val added = reg.listFunction().map(_.funcName).filterNot(before).toSeq
-    assert(added.size == 1, s"registered $added")
-    spark.sql(s"DROP TEMPORARY FUNCTION ${added.head}")
+    assert(added.isEmpty, s"registered $added")
     assert(cell() == 1L)
   }
 

@@ -287,6 +287,24 @@ class MLPipelineSpec extends SparkSpec {
     } finally scored.unpersist()
   }
 
+  test("evaluate's AUC is the same for every partitioning and matches the exact evaluator") {
+    // scores are a function of the id alone, so 1, 3 and 8 input
+    // partitions hold the same rows; rounding to 3 places makes ties
+    def scored(parts: Int) = spark.range(0, 20000, 1, parts)
+      .select(when($"id" % 2 === 0, 1.0).otherwise(0.0).as("label"),
+        (pmod(xxhash64($"id"), lit(1000003L)) / 1000003.0).as("noise"))
+      .select($"label", round($"noise" + $"label" * 0.3, 3).as("s"))
+      .select($"label", org.apache.spark.ml.functions.array_to_vector(
+        array(-$"s", $"s")).as("rawPrediction"),
+        when($"s" > 0.65, 1.0).otherwise(0.0).as("prediction"))
+    val aucs = Seq(1, 3, 8).map(p => SentimentPipeline.evaluate(scored(p)).rocAuc)
+    val again = SentimentPipeline.evaluate(scored(8)).rocAuc
+    assert(aucs.distinct.size == 1 && again == aucs.head, s"aucs $aucs, $again")
+    val exact = new BinaryClassificationEvaluator().setLabelCol("label")
+      .setRawPredictionCol("rawPrediction").setNumBins(0).evaluate(scored(8))
+    assert(math.abs(aucs.head - exact) <= 1e-12, s"auc ${aucs.head} vs $exact")
+  }
+
   test("metrics JSON has the reference shape") {
     val m = SentimentPipeline.Metrics(0.9, 0.89, 0.95,
       Map((0L, 0L) -> 40L, (0L, 1L) -> 10L, (1L, 0L) -> 5L, (1L, 1L) -> 45L))

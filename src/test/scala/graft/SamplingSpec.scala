@@ -256,7 +256,6 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("weightedSample == driver brute force of the documented A-ES key") {
-    graft.functions.PolyHashF.register(spark)
     val orders = Tables.orders(spark, sf001)
       .select($"o_orderkey", $"o_totalprice")
     val got = Sampling.weightedSample(orders, "o_orderkey",
@@ -279,7 +278,6 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("weightedSample favors heavy weights and is seed-deterministic") {
-    graft.functions.PolyHashF.register(spark)
     val rows = (1L to 50L).map(i => (i, if (i == 42L) 1e6 else 1.0))
       .toDF("id", "w")
     // the 1e6-weight row wins a top-5 slot under EVERY seed: u^(1/w) -> 1
@@ -347,7 +345,6 @@ class SamplingSpec extends SparkSpec {
     // each group: same key under the same seed, per-group top-k. Checked
     // by filtering the corpus to one stratum and running the global form
     // with the same quota — results must be identical rows.
-    graft.functions.PolyHashF.register(spark)
     val orders = Tables.orders(spark, sf001)
       .select($"o_orderkey", $"o_orderpriority", $"o_totalprice")
     val grouped = Sampling.weightedSamplePerGroup(orders, "o_orderkey",

@@ -101,7 +101,6 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Long, Double, Long)].collect().toSeq
     assert(got.nonEmpty)
     // brute force per anchor off the exact cosine column
-    graft.functions.VectorFunctions.register(spark)
     val all = emb.select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .as[(Long, Seq[Double])].collect()
     val byId = all.toMap
@@ -286,8 +285,7 @@ class SimilaritySpec extends SparkSpec {
     val df = Seq(Seq.fill(8)(0.5), Seq.tabulate(8)(i => (i - 4).toDouble))
       .toDF("v")
     val viaExpr = df.select(graft.functions.HyperplaneSigs.sigs(
-        spark, $"v", planes, 4)).as[Seq[Long]].collect()
-    graft.functions.VectorFunctions.register(spark)
+        $"v", planes, 4)).as[Seq[Long]].collect()
     val viaCols = df.select(array(planes.grouped(4).toSeq.map(p =>
         Similarity.hyperplaneSig($"v", p)): _*)).as[Seq[Long]].collect()
     assert(viaExpr.toSeq.map(_.toSeq) === viaCols.toSeq.map(_.toSeq))

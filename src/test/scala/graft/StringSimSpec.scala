@@ -28,7 +28,6 @@ class StringSimSpec extends SparkSpec {
   }
 
   test("codegen path == kernel, null propagates") {
-    StringSim.register(spark)
     val df = Seq(("MARTHA", "MARHTA"), ("small ring", "small ping"),
       ("red widget", "red widgets"), (null, "x"))
       .toDF("a", "b")
@@ -42,10 +41,9 @@ class StringSimSpec extends SparkSpec {
   }
 
   test("non-string input fails at analysis, not with garbage") {
-    StringSim.register(spark)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
-      Seq((1, 2)).toDF("a", "b")
-        .select(expr("jaro_winkler(a, b)")).collect()
+      withGraftSql(_.createDataFrame(Seq((1, 2))).toDF("a", "b")
+        .select(expr("jaro_winkler(a, b)")).collect())
     }
     assert(e.getMessage.toLowerCase.contains("string"))
   }

@@ -14,7 +14,6 @@ class UnicodeNormSpec extends SparkSpec {
   private val decomposed = "cafe\u0301 nin\u0303o" // e+U+0301, n+U+0303
 
   test("NFC composes, is idempotent, and preserves null/empty") {
-    graft.functions.UnicodeNormF.register(spark)
     val df = Seq((1L, composed), (2L, decomposed), (3L, ""), (4L, null))
       .toDF("id", "t")
       .select($"id", TextClean.normalizeNfc($"t").as("n"))
@@ -30,7 +29,6 @@ class UnicodeNormSpec extends SparkSpec {
   }
 
   test("NFKC additionally folds compatibility variants (ﬁ ² ﾊ)") {
-    graft.functions.UnicodeNormF.register(spark)
     val got = Seq(("\ufb01n \u00b2 \uff8a", decomposed)).toDF("k", "d")
       .select(TextClean.normalizeNfkc($"k"), TextClean.normalizeNfkc($"d"))
       .as[(String, String)].head()
@@ -44,14 +42,12 @@ class UnicodeNormSpec extends SparkSpec {
     import org.apache.spark.unsafe.types.UTF8String
     val k = graft.functions.UnicodeNormKernel
       .nfc(UTF8String.fromString(decomposed)).toString
-    graft.functions.UnicodeNormF.register(spark)
     val c = Seq(decomposed).toDF("t")
       .select(TextClean.normalizeNfc($"t")).as[String].head()
     assert(k === c && c === composed)
   }
 
   test("fingerprint dedup merges an NFC/NFD pair only after normalizeNfc") {
-    graft.functions.UnicodeNormF.register(spark)
     val docs = Seq((1L, s"the $composed menu"), (2L, s"the $decomposed menu"))
       .toDF("doc_id", "text")
     // WITHOUT normalization: visually identical docs dedup as DISTINCT
@@ -66,7 +62,6 @@ class UnicodeNormSpec extends SparkSpec {
   }
 
   test("the fast path returns already-normalized ASCII unchanged") {
-    graft.functions.UnicodeNormF.register(spark)
     val docs = Tables.documents(spark, sf001).limit(50)
     val diff = docs.select($"text",
         TextClean.normalizeNfc($"text").as("n"))
