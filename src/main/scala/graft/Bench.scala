@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times every declared query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. A warm-up action runs
   * first so JVM/session initialization is not attributed to the first
@@ -10,21 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // static conf (first-session): the default 100-entry whole-stage
-      // codegen class cache thrashes under a 270-query suite — every
-      // query's stages evict earlier ones and re-runs pay Janino
-      // recompilation (see app.Sessions.local, same setting)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.app.Sessions.local("graft-bench")
 
     // Box-load marker: /proc/loadavg before/after the run AND per run
     // lands in BENCH_FULL.json so a round-over-round regression can be

@@ -1,14 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-capture tool (optimization-round evidence): writes
   * `.explain("formatted")` for the named declared queries (or all of
-  * them) to `<outDir>/<query>.txt`. Same session shape as [[Bench]] so
-  * captured plans match what the bench actually executes. Read-only —
-  * builds each query's DataFrame (which may run guard probes / memoized
-  * fits, exactly like the bench's warm phase) but never executes the
-  * plan itself.
+  * them) to `<outDir>/<query>.txt`. Same session builder as [[Bench]]
+  * (`app.Sessions.local`), so captured plans match what the bench
+  * actually executes. Read-only — builds each query's DataFrame (which
+  * may run guard probes / memoized fits, exactly like the bench's warm
+  * phase) but never executes the plan itself.
   *
   * Usage: runMain graft.PlanDump <outDir> [query...]
   */
@@ -18,17 +16,7 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(0))
     java.nio.file.Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.app.Sessions.local("graft-plan-dump")
     val selected =
       if (args.length > 1) SparkEntry.queries.filter(kv => args.drop(1).contains(kv._1))
       else SparkEntry.queries

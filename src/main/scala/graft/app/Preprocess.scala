@@ -119,8 +119,9 @@ object Preprocess {
   }
 }
 
-/** Shared local-session builder for the app mains (the library itself
-  * never creates sessions — only entry points do). */
+/** The one local-session builder for every main — the apps, `Bench`,
+  * `Verify`, `PlanDump`, `ScaleBench` and `tools.PhaseProbe` (the library
+  * itself never creates sessions — only entry points do). */
 object Sessions {
   def local(name: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -129,6 +130,7 @@ object Sessions {
       .appName(name)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
       // static conf, must land before the first session: the default
       // 100-entry whole-stage-codegen class cache thrashes under a
       // 270-query session (each query's stages evict earlier ones), so

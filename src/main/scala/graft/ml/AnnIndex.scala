@@ -6,30 +6,22 @@ import graft.functions.{HyperplaneSigs, VectorFunctions}
 import graft.operators.Similarity
 import graft.sources.PartitionedParquet
 
-/** Materialized ANN indexes: build ONCE, probe MANY — the missing half of
-  * the round-1 ANN story, where both the hyperplane-LSH and IVF paths
-  * recomputed their bucketing inside every query.
+/** Materialized hyperplane-LSH indexes: build ONCE, probe MANY — the
+  * bucketing is paid at build time, never inside a query.
   *
-  * Both layouts persist as hive-partitioned parquet
-  * ([[graft.sources.PartitionedParquet]]):
+  * The layout persists as hive-partitioned parquet
+  * ([[graft.sources.PartitionedParquet]]): rows (id, v) partitioned by
+  * bucket, one entry per vector per table (L-way storage amplification,
+  * the standard multi-table LSH trade). A probe touches exactly L
+  * (table_id, bucket) keys via PartitionFilters — at 100 TB the scan
+  * reads L/(L·2^bits) of the index, not the corpus. The IVF layout lives
+  * in [[graft.operators.KMeansQuant]] (`buildIndex`/`topKFromIndex`).
   *
-  *  - hyperplane LSH: rows (id, v) partitioned by (table_id, bucket) —
-  *    one entry per vector per table (L-way storage amplification, the
-  *    standard multi-table LSH trade). A probe touches exactly L
-  *    (table_id, bucket) directories via PartitionFilters — at 100 TB the
-  *    scan reads L/(L·2^bits) of the index, not the corpus.
-  *  - IVF: rows (id, v) partitioned by cell, plus a sibling `.centroids`
-  *    parquet (the k-means coarse quantizer, [[IvfIndex.fit]]). A probe
-  *    reads `nprobe` cell directories. Fit cost is paid at build time,
-  *    never per query.
-  *
-  * Probe results match the scan-form operators ([[Similarity.annTopK]],
-  * [[IvfIndex.topK]]) — same candidate semantics, same exact-cosine
-  * re-rank — asserted in AnnIndexSpec.
+  * Probe results match the scan-form operator ([[Similarity.annTopK]]) —
+  * same candidate semantics, same exact-cosine re-rank — asserted in
+  * AnnIndexSpec.
   */
 object AnnIndex {
-
-  // ---------------- hyperplane LSH ----------------
 
   /** Build the multi-table LSH index at `path`. Deterministic planes
     * (seed-fixed) are regenerated at probe time — only vectors persist.
@@ -42,8 +34,7 @@ object AnnIndex {
     * is the only selective key (measured here: the two-level layout made
     * both build and probe listing-bound). */
   def buildHyperplane(emb: DataFrame, idCol: String, vecCol: String,
-      path: String, tables: Int = 16, bitsPerTable: Int = 8,
-      storeVectors: Boolean = true): Unit = {
+      path: String, tables: Int = 16, bitsPerTable: Int = 8): Unit = {
     val withV = emb.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
     // null-safe, memoized dim read (a leading null vector must not NPE)
@@ -51,17 +42,10 @@ object AnnIndex {
       new IllegalArgumentException(
         s"cannot build a hyperplane index over an empty input ($vecCol)"))
     val planes = Similarity.hyperplanes(tables * bitsPerTable, dim)
-    val sigged = withV
+    val rows = withV
       .withColumn("sig", HyperplaneSigs.sigs(col("v"), planes, bitsPerTable))
-    // storeVectors=false drops the vector from the index rows: the
-    // L-way storage amplification then applies to an 8-byte id, not the
-    // embedding (dim×8 bytes) — the compact layout for wide embeddings,
-    // probed via [[probeHyperplaneIds]] (vectors fetched from the base
-    // table). Vector-inline (default) keeps probes self-contained.
-    val rows = (if (storeVectors) sigged.select(col("id"), col("v"), col("sig"))
-      else sigged.select(col("id"), col("sig")))
-      .select(col("*"), posexplode(col("sig")).as(Seq("table_id", "bucket")))
-      .drop("sig")
+      .select(col("id"), col("v"),
+        posexplode(col("sig")).as(Seq("table_id", "bucket")))
     // Cluster writes by partition key so each bucket dir gets few files;
     // bucket keys are near-uniform, no skew.
     PartitionedParquet.write(
@@ -72,11 +56,11 @@ object AnnIndex {
   private def vecDim(df: DataFrame, vecColName: String): Option[Int] =
     Similarity.vecDim(df, vecColName)
 
-  private def requireDim(df: DataFrame, vecColName: String,
-      querySize: Int, what: String): Unit =
-    vecDim(df, vecColName).foreach { d =>
+  private def requireDim(index: DataFrame, vecColName: String,
+      querySize: Int): Unit =
+    vecDim(index, vecColName).foreach { d =>
       require(d == querySize,
-        s"query dimension $querySize != $what dimension $d")
+        s"query dimension $querySize != index dimension $d")
     }
 
   /** The query's L (table_id, bucket) keys under the deterministic
@@ -102,8 +86,8 @@ object AnnIndex {
 
   /** Shared probe tail — optional self-exclusion, exact rounded-cosine
     * re-rank of the `v` column, deterministic (cos desc, id) top-k. One
-    * definition so the probe layouts (inline / quantized / id-only)
-    * cannot silently diverge on tie-break or rounding semantics. */
+    * definition so the probe layouts (inline / quantized) cannot
+    * silently diverge on tie-break or rounding semantics. */
   private def rerankTopK(cands: DataFrame, query: Seq[Double], k: Int,
       excludeId: Option[Long]): DataFrame = {
     val qVec = array(query.map(lit): _*)
@@ -134,7 +118,7 @@ object AnnIndex {
     // return plausible-but-wrong neighbors. One indexed row's vector
     // size is the index's dimension (all rows share it by construction);
     // memoized per opened frame so served probes don't pay a job each.
-    requireDim(index, "v", query.size, "index")
+    requireDim(index, "v", query.size)
     val cands = index
       .filter(bucketPredicate(queryBuckets(query, tables, bitsPerTable)))
       .dropDuplicates("id")
@@ -186,55 +170,11 @@ object AnnIndex {
     // size(qc) IS the indexed dimension). Without it a wrong-dimension
     // query silently hashes into wrong buckets and the dequantized
     // re-rank returns NULL cosines — plausible-but-wrong neighbors.
-    requireDim(index, "qc", query.size, "index")
+    requireDim(index, "qc", query.size)
     val cands = index
       .filter(bucketPredicate(queryBuckets(query, tables, bitsPerTable)))
       .dropDuplicates("id")
       .withColumn("v", Quantize.dequantize(col("qc"), col("qs")))
-    rerankTopK(cands, query, k, excludeId)
-  }
-
-  /** Top-k probe against an ID-ONLY index (built with
-    * `storeVectors = false`): candidate ids come from the query's L
-    * pruned buckets, then their vectors are fetched from `base` with an
-    * IN filter — with the base table SORTED by id, parquet min/max
-    * row-group stats skip everything but the candidates' row groups, so
-    * the fetch reads ~candidate-count rows, not the corpus. The
-    * candidate id list is collected to the driver (bucket-sized —
-    * hundreds of ids, the price of turning the fetch into a pushable
-    * scan predicate instead of a corpus-wide join). That collect is
-    * THRESHOLDED (`maxInListCandidates`): uniform hyperplane buckets
-    * keep it small, but a hot bucket (near-duplicate-heavy corpora
-    * produce exactly that) would otherwise grow the IN list and the
-    * driver array without bound — beyond the cap the fetch degrades to
-    * a left-semi join on id (no scan pushdown, but shuffle-bounded, and
-    * AQE broadcasts the candidate side when it is small enough). Same
-    * honest-threshold pattern as
-    * [[graft.operators.DedupGroups.CollectThreshold]].
-    *
-    * Same results as [[probeHyperplane]] over a vector-inline index
-    * (asserted in AnnIndexSpec); choose by embedding width — inline for
-    * narrow vectors, id-only when dim×8 bytes of L-way amplification
-    * dominates index cost. */
-  def probeHyperplaneIds(index: DataFrame, base: DataFrame, idCol: String,
-      vecCol: String, query: Seq[Double], k: Int, tables: Int = 16,
-      bitsPerTable: Int = 8, excludeId: Option[Long] = None,
-      maxInListCandidates: Int = 100000): DataFrame = {
-    val withV = base.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("v"))
-    requireDim(withV, "v", query.size, "base")
-    val candFrame = index
-      .filter(bucketPredicate(queryBuckets(query, tables, bitsPerTable)))
-      .select(col("id")).distinct()
-    // Collect AT MOST threshold+1 ids — the limit bounds the driver
-    // transfer even when a hot bucket holds millions; seeing threshold+1
-    // is the overflow signal, never the full list.
-    val candIds = candFrame.limit(maxInListCandidates + 1)
-      .collect().map(_.get(0)).toSeq
-    val cands =
-      if (candIds.size <= maxInListCandidates)
-        withV.filter(col("id").isin(candIds: _*))
-      else withV.join(candFrame, Seq("id"), "left_semi")
     rerankTopK(cands, query, k, excludeId)
   }
 
@@ -292,58 +232,5 @@ object AnnIndex {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("id"), col("cos"), col("rank"))
-  }
-
-  // ---------------- IVF ----------------
-
-  /** Build the IVF index: k-means fit + cell-partitioned vectors + the
-    * centroids as a sibling parquet. Returns the centroids. */
-  def buildIvf(emb: DataFrame, idCol: String, vecCol: String, path: String,
-      nlist: Int, seed: Long = 42L): Array[Array[Double]] = {
-    val model = IvfIndex.fit(emb, idCol, vecCol, nlist, seed)
-    PartitionedParquet.write(
-      model.assigned.select(col(idCol).as("id"), col("__v").as("v"), col("cell"))
-        .repartition(col("cell")),
-      path, Seq("cell"))
-    val spark = emb.sparkSession
-    import spark.implicits._
-    model.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(centroidsPath(path))
-    model.centroids
-  }
-
-  def centroidsPath(path: String): String = s"$path.centroids"
-
-  /** Load the coarse quantizer back (tiny: nlist rows). */
-  def readCentroids(spark: SparkSession, path: String): Array[Array[Double]] =
-    spark.read.parquet(centroidsPath(path))
-      .orderBy("cell").collect()
-      .map(_.getSeq[Double](1).toArray)
-
-  /** Top-k probe against a built IVF index: nearest `nprobe` cells by
-    * euclidean centroid distance, pruned cell read, exact re-rank. Same
-    * semantics as [[IvfIndex.topK]]. */
-  def probeIvf(spark: SparkSession, path: String,
-      centroids: Array[Array[Double]], query: Seq[Double], k: Int,
-      nprobe: Int, excludeId: Option[Long] = None): DataFrame =
-    probeIvf(PartitionedParquet.read(spark, path), centroids, query, k,
-      nprobe, excludeId)
-
-  /** Probe form over an already-opened index frame (see the hyperplane
-    * overload: no per-probe re-listing). */
-  def probeIvf(index: DataFrame, centroids: Array[Array[Double]],
-      query: Seq[Double], k: Int, nprobe: Int,
-      excludeId: Option[Long]): DataFrame = {
-    // Centroid length IS the indexed dimension — a driver-side check, no
-    // job. Without it, c.zip(query) silently truncates a wrong-dimension
-    // query and ranks cells over a prefix.
-    centroids.headOption.foreach(c => require(c.length == query.size,
-      s"query dimension ${query.size} != index dimension ${c.length}"))
-    val probeCells = centroids.zipWithIndex.map { case (c, i) =>
-      (i, c.zip(query).map { case (a, b) => (a - b) * (a - b) }.sum)
-    }.sortBy(_._2).take(nprobe).map(_._1).toSeq
-    rerankTopK(index.filter(col("cell").isin(probeCells: _*)),
-      query, k, excludeId)
   }
 }

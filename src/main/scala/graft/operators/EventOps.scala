@@ -230,7 +230,6 @@ object EventOps {
   def ohlcBars(df: DataFrame, key: String, tsUs: Column, tiebreak: String,
       cents: Column, widthUs: Long): DataFrame = {
     require(widthUs > 0, s"bar width must be positive, got $widthUs")
-    val ord = struct(tsUs.as("us"), col(tiebreak))
     df.select(col(key), tsUs.as("us"), col(tiebreak), cents.as("cents"))
       .groupBy(col(key),
         (col("us") - pmod(col("us"), lit(widthUs))).as("bar_us"))

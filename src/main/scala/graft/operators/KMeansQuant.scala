@@ -6,12 +6,12 @@ import org.apache.spark.sql.functions._
 /** Deterministic Lloyd's k-means over embedding columns, computed on an
   * exact integer micro-grid so the whole fit — init, every assignment,
   * every centroid update — is bit-reproducible across engines, partition
-  * counts, and physical plans, and therefore DuckDB-oracle-checkable
-  * (unlike [[graft.ml.IvfIndex]]'s MLlib coarse quantizer, whose random
-  * init makes it rows-only by the §2 contract). Corpus clustering is the
-  * backbone of semantic dedup, topic balancing, and IVF cell routing in a
-  * training-data pipeline; an oracle-checkable variant means the engine
-  * can PROVE the clustering, not just produce one.
+  * counts, and physical plans, and therefore DuckDB-oracle-checkable (a
+  * randomly initialized quantizer would be rows-only by the §2
+  * contract). Corpus clustering is the backbone of semantic dedup, topic
+  * balancing, and IVF cell routing in a training-data pipeline; an
+  * oracle-checkable variant means the engine can PROVE the clustering,
+  * not just produce one.
   *
   * Determinism rules (the money-sum discipline, applied to geometry):
   *
@@ -144,10 +144,9 @@ object KMeansQuant {
     * vectors of the `nprobe` nearest cells only. The cell filter is
     * row-local (no join — the same literal-centroid assignment as
     * [[assign]]), so the probe reads the corpus once and ranks
-    * ~nprobe/k of it; a served layout would partition storage BY cell
-    * and skip the rest entirely (`graft.ml.IvfIndex`'s layout, with a
-    * provable quantizer). Fully deterministic ⇒ oracle-checkable,
-    * unlike the MLlib-fit IVF family. */
+    * ~nprobe/k of it; the served layout ([[buildIndex]] +
+    * [[topKFromIndex]]) partitions storage BY cell and skips the rest
+    * entirely. Fully deterministic ⇒ oracle-checkable. */
   def ivfTopK(emb: DataFrame, idCol: String, vecCol: String, m: Model,
       queryId: Long, k: Int, nprobe: Int): DataFrame = {
     val qQuant = emb.filter(col(idCol) === queryId)
@@ -188,9 +187,8 @@ object KMeansQuant {
   /** One-time SERVED layout: the corpus partitioned BY cell
     * (`cell=<id>/` directories), so a probe reads only its `nprobe`
     * cell partitions — PartitionFilters prune the rest before any file
-    * opens. The IVF build/probe split of [[graft.ml.IvfIndex]], with the
-    * provable quantizer; same one-file-per-partition co-location as the
-    * BM25 postings index. */
+    * opens. The IVF build/probe split, with the provable quantizer; same
+    * one-file-per-partition co-location as the BM25 postings index. */
   def buildIndex(emb: DataFrame, idCol: String, vecCol: String, m: Model,
       path: String): Unit = {
     val (cluster, _) = nearest(quantize(col(vecCol)), m)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic PageRank (Brin & Page 1998) over an undirected pair
@@ -59,7 +59,6 @@ object PageRank {
   def ranks(ids: DataFrame, idCol: String, pairs: DataFrame,
       iters: Int, damping: Double = 0.85): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    val spark = ids.sparkSession
     val n = ids.count()
     require(n > 0, "PageRank over an empty node set")
     val teleportNano = math.round((1.0 - damping) * Nano / n)

@@ -67,20 +67,6 @@ object SemDedup {
     ()
   }
 
-  /** Scale-adaptive stream-side parallelism for the within-cell pair
-    * join: a verification-scale corpus is one small parquet file → one
-    * scan partition, and with the small side broadcast the whole
-    * Σ|cell|² dot-product stage ran in ONE task (guide §2.6 — measured
-    * 1.6-1.9 s single-threaded at sf0.1 while 31 cores idled). When the
-    * input has fewer partitions than the cluster has slots, round-robin
-    * repartition the probe side (a shuffle of the INPUT rows — linear,
-    * cheap); at production scale the scan already carries ≥ cores
-    * partitions and the plan is untouched. */
-  private def spread(df: DataFrame): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < par) df.repartition(par) else df
-  }
-
   /** Within-cell near-duplicate pairs: (cluster, id_a, id_b, cos) with
     * `id_a < id_b` and `cos >= threshold` (cosine rounded to 6 before the
     * compare — identical in the mirror).
@@ -104,8 +90,8 @@ object SemDedup {
         "candidate pairs). Refit with a larger k so cells stay bounded, " +
         "or pass maxCellRows explicitly to override."
     }
-    val a = spread(e).select(col("cluster"), col(idCol).as("id_a"),
-      col("__v").as("__va"), col("__n").as("__na"))
+    val a = Similarity.spread(e).select(col("cluster"),
+      col(idCol).as("id_a"), col("__v").as("__va"), col("__n").as("__na"))
     val b = e.select(col("cluster"), col(idCol).as("id_b"),
       col("__v").as("__vb"), col("__n").as("__nb"))
     a.join(b, Seq("cluster"))
@@ -147,8 +133,8 @@ object SemDedup {
         s"maxCellRows=$maxCellRows. Refit with a larger k, lower " +
         "nprobe, or pass maxCellRows to override."
     }
-    val a = spread(e).select(col("cluster"), col(idCol).as("id_a"),
-      col("__v").as("__va"), col("__n").as("__na"))
+    val a = Similarity.spread(e).select(col("cluster"),
+      col(idCol).as("id_a"), col("__v").as("__va"), col("__n").as("__na"))
     val b = e.select(col("cluster"), col(idCol).as("id_b"),
       col("__v").as("__vb"), col("__n").as("__nb"))
     a.join(b, Seq("cluster"))

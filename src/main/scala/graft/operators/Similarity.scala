@@ -217,8 +217,8 @@ object Similarity {
     * production path. GUARDED: fails loudly (one cheap count job, then
     * `require`) instead of slowly materializing n²/2 pairs when someone
     * points it at a production frame — same honest-threshold pattern as
-    * [[graft.ml.AnnIndex]]'s `maxInListCandidates`. Raise `maxExactRows`
-    * explicitly to opt in beyond the default. */
+    * [[graft.operators.DedupGroups.CollectThreshold]]. Raise
+    * `maxExactRows` explicitly to opt in beyond the default. */
   def nearDupPairs(embeddings: DataFrame, idCol: String, vecCol: String,
       threshold: Double, maxExactRows: Long = 100000L): DataFrame = {
     // Bounded probe, not a full count: limit(cap+1) lets the guard stop
@@ -244,14 +244,12 @@ object Similarity {
     // one small parquet file → one scan partition, so the nested-loop
     // join's n²/2 dot products all ran in ONE task (measured 1.4 s
     // single-threaded at sf0.1 while 31 cores idled — the FuzzyJoin
-    // single-partition story, guide §2.6). Round-robin repartitioning
-    // the stream side costs one shuffle of ≤ maxExactRows input rows —
-    // always negligible against the quadratic join it spreads across
-    // the cluster. The build side stays unpartitioned (it broadcasts).
-    val par = embeddings.sparkSession.sparkContext.defaultParallelism
-    val a = embeddings.select(col(idCol).as("id_a"), toDouble(col(vecCol)).as("va"))
-      .withColumn("na", normFast(col("va")))
-      .repartition(par)
+    // single-partition story, guide §2.6); [[spread]] fixes that and
+    // leaves an already-parallel input alone. The build side stays
+    // unpartitioned (it broadcasts).
+    val a = spread(embeddings.select(col(idCol).as("id_a"),
+        toDouble(col(vecCol)).as("va"))
+      .withColumn("na", normFast(col("va"))))
     val b = embeddings.select(col(idCol).as("id_b"), toDouble(col(vecCol)).as("vb"))
       .withColumn("nb", normFast(col("vb")))
     a.crossJoin(b).filter(col("id_a") < col("id_b"))
@@ -259,6 +257,17 @@ object Similarity {
         cosinePre(col("va"), col("vb"), col("na"), col("nb")), 6))
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), col("cos"))
+  }
+
+  /** Scale-adaptive stream-side parallelism for a broadcast pair join:
+    * when the input has fewer partitions than the cluster has slots,
+    * round-robin repartition it (a shuffle of the INPUT rows — linear,
+    * cheap against the quadratic join it spreads); at production scale
+    * the scan already carries ≥ cores partitions and the plan is
+    * untouched. */
+  private[operators] def spread(df: DataFrame): DataFrame = {
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions < par) df.repartition(par) else df
   }
 
   /** L2-normalize an embedding column (unit vectors make cosine a plain

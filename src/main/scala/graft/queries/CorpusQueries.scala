@@ -7,11 +7,13 @@ import graft.operators.{Bpe, Collocations, Dsir, KMeansQuant, Pq, SemDedup, Toke
 /** Corpus-modeling operators (SURVEY.md §2.7): deterministic k-means
   * clustering over `embeddings`, unigram-LM NLL quality scoring over
   * `documents`, and BPE tokenizer training/encoding — all closed-form
-  * (integer grids, fixed inits, lexicographic tie-breaks), so every
-  * query here is DuckDB-oracle-checked, INCLUDING the iterative ones:
+  * (integer grids, fixed inits, lexicographic tie-breaks), so the
+  * queries here are DuckDB-oracle-checked, INCLUDING the iterative ones:
   * k-means unrolls its Lloyd rounds and BPE its merge rounds as
   * generated CTE chains, each round textually mirroring the Column
-  * expressions it checks.
+  * expressions it checks. Rows-only: `q_heavy_hitters`, and the served
+  * IVF layout's `q_ivf_build`/`q_ivf_topk`, which specs pin to the
+  * oracle-checked assignment and in-plan probe instead.
   */
 object CorpusQueries extends QueryModule {
 
@@ -44,8 +46,27 @@ object CorpusQueries extends QueryModule {
         m = PQ_M, k = PQ_K, iters = ITERS)
     }
 
-  /** One served IVF layout per (session, dataset). */
+  /** One served IVF layout per (session, dataset): the corpus
+    * cell-partitioned under the session model
+    * ([[KMeansQuant.buildIndex]]). `q_ivf_build` carries its build cost;
+    * every served probe below reads it. */
   private val ivfIndexCache = new graft.util.SessionCache[String]
+  private def servedIvfLayout(s: org.apache.spark.sql.SparkSession,
+      d: String): String =
+    ivfIndexCache.getOrElseUpdate(s, d) {
+      val p = graft.util.IndexPaths.fresh(d, "kmeans-ivf")
+      KMeansQuant.buildIndex(Tables.embeddings(s, d), "vec_id",
+        "embedding", model(s, d), p)
+      p
+    }
+
+  /** vec_id 0's embedding: the probe vector of the served top-k queries. */
+  private def queryVec(s: org.apache.spark.sql.SparkSession,
+      d: String): Seq[Double] =
+    Tables.embeddings(s, d).filter(col("vec_id") === 0)
+      .select(col("embedding").cast("array<double>"))
+      .head().getSeq[Double](0)
+
   private val semIncrIndexCache = new graft.util.SessionCache[String]
 
   /** The incremental-dedup id split point (max(vec_id)/2) — a scalar off
@@ -66,7 +87,7 @@ object CorpusQueries extends QueryModule {
     * vec_id % 7 == 3 removed via [[KMeansQuant.deleteFromIndex]] —
     * the q_postings_replaced discipline ported to the vector index
     * (the mirrors recompute from the SURVIVING corpus from scratch). */
-  private def deletedIvfIndex(s: org.apache.spark.sql.SparkSession,
+  private def deletedIvfLayout(s: org.apache.spark.sql.SparkSession,
       d: String): String =
     ivfDelCache.getOrElseUpdate(s, d) {
       val p = graft.util.IndexPaths.fresh(d, "kmeans-ivf-del")
@@ -89,7 +110,7 @@ object CorpusQueries extends QueryModule {
     * bit-indistinguishability from a clean build is what the oracle
     * checks. The quantizer is the SAME session-cached model both times
     * (frozen centroids — the IVF lifecycle contract). */
-  private def replacedIvfIndex(s: org.apache.spark.sql.SparkSession,
+  private def replacedIvfLayout(s: org.apache.spark.sql.SparkSession,
       d: String): String =
     ivfReplCache.getOrElseUpdate(s, d) {
       val p = graft.util.IndexPaths.fresh(d, "kmeans-ivf-repl")
@@ -118,7 +139,7 @@ object CorpusQueries extends QueryModule {
     * of the union under the refit model replayed in SQL, and re-read
     * probe recall for a drifted query — the monitor's trip provably
     * CONSUMED, not just reported. */
-  private def refitIvfIndex(s: org.apache.spark.sql.SparkSession,
+  private def refitIvfLayout(s: org.apache.spark.sql.SparkSession,
       d: String): (String, KMeansQuant.Model) =
     ivfRefitCache.getOrElseUpdate(s, d) {
       val p = graft.util.IndexPaths.fresh(d, "kmeans-ivf-refit")
@@ -197,9 +218,9 @@ object CorpusQueries extends QueryModule {
     // setup, not the measured verb — the bm25_del/bm25_repl precedent;
     // the timed queries measure the SERVING path over the mutated
     // layout (pruned census / probed top-k)
-    "ivf_del" -> ((s, d) => { deletedIvfIndex(s, d); () }),
-    "ivf_repl" -> ((s, d) => { replacedIvfIndex(s, d); () }),
-    "ivf_refit" -> ((s, d) => { refitIvfIndex(s, d); () })
+    "ivf_del" -> ((s, d) => { deletedIvfLayout(s, d); () }),
+    "ivf_repl" -> ((s, d) => { replacedIvfLayout(s, d); () }),
+    "ivf_refit" -> ((s, d) => { refitIvfLayout(s, d); () })
   )
 
   val queries: Map[String, Q] = Map(
@@ -219,7 +240,7 @@ object CorpusQueries extends QueryModule {
 
     // IVF ANN through the deterministic quantizer: 2 of 4 cells probed
     // (ranked by exact integer centroid distance), exact cosine among
-    // the probed cells' vectors. The provable sibling of q_ivf_topk.
+    // the probed cells' vectors.
     "q_ivf_kmeans_topk" -> ((s, d) =>
       KMeansQuant.ivfTopK(Tables.embeddings(s, d), "vec_id", "embedding",
         model(s, d), queryId = 0L, k = 10, nprobe = 2)),
@@ -228,20 +249,26 @@ object CorpusQueries extends QueryModule {
     // per (session, dataset), then read only the 2 probed cells'
     // partitions (PartitionFilters — plan-pinned). Bit-identical to
     // q_ivf_kmeans_topk's in-plan filter form, same oracle.
-    "q_ivf_kmeans_served" -> ((s, d) => {
-      val m = model(s, d)
-      val path = ivfIndexCache.getOrElseUpdate(s, d) {
-        val p = graft.util.IndexPaths.fresh(d, "kmeans-ivf")
-        KMeansQuant.buildIndex(Tables.embeddings(s, d), "vec_id",
-          "embedding", m, p)
-        p
-      }
-      val qv = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0)
-      KMeansQuant.topKFromIndex(s, path, m, qv, k = 10, nprobe = 2,
-        idCol = "vec_id", vecCol = "embedding", excludeId = Some(0L))
-    }),
+    "q_ivf_kmeans_served" -> ((s, d) =>
+      KMeansQuant.topKFromIndex(s, servedIvfLayout(s, d), model(s, d),
+        queryVec(s, d), k = 10, nprobe = 2, idCol = "vec_id",
+        vecCol = "embedding", excludeId = Some(0L))),
+
+    // The served layout's build, as its own query id (one-time cost,
+    // explicit): the cell histogram (cell, n). Rows-only; CorpusModelSpec
+    // pins the counts to q_kmeans_assign's per-cluster counts.
+    "q_ivf_build" -> ((s, d) =>
+      graft.sources.PartitionedParquet.read(s, servedIvfLayout(s, d))
+        .groupBy(col("cell")).agg(count(lit(1)).as("n"))
+        .orderBy(col("cell"))),
+
+    // The served probe at 3 of 4 cells: reads only the 3 probed cell
+    // partitions. Rows-only; CorpusModelSpec pins it row for row to
+    // KMeansQuant.ivfTopK's in-plan form at the same nprobe.
+    "q_ivf_topk" -> ((s, d) =>
+      KMeansQuant.topKFromIndex(s, servedIvfLayout(s, d), model(s, d),
+        queryVec(s, d), k = 10, nprobe = 3, idCol = "vec_id",
+        vecCol = "embedding", excludeId = Some(0L))),
 
     // ANN staleness monitor (KMeansQuant.stalenessByCell): per build
     // cell, the appended batch's mean squared integer distance vs the
@@ -269,21 +296,17 @@ object CorpusQueries extends QueryModule {
     // deleteFromIndex from a never-added build, the q_postings_replaced
     // discipline on the vector side.
     "q_ivf_deleted" -> ((s, d) =>
-      graft.sources.PartitionedParquet.read(s, deletedIvfIndex(s, d))
+      graft.sources.PartitionedParquet.read(s, deletedIvfLayout(s, d))
         .select(col("vec_id"), col("cell").cast("long").as("cell"))
         .orderBy(col("vec_id"))),
 
     // Probed top-k from the deleted layout: deleted ids must be gone
     // from the candidate set, survivors ranked exactly as a fresh build
     // would (the mirror probes the surviving corpus from scratch).
-    "q_ivf_del_topk" -> ((s, d) => {
-      val qv = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0)
-      KMeansQuant.topKFromIndex(s, deletedIvfIndex(s, d), model(s, d),
-        qv, k = 10, nprobe = 2, idCol = "vec_id", vecCol = "embedding",
-        excludeId = Some(0L))
-    }),
+    "q_ivf_del_topk" -> ((s, d) =>
+      KMeansQuant.topKFromIndex(s, deletedIvfLayout(s, d), model(s, d),
+        queryVec(s, d), k = 10, nprobe = 2, idCol = "vec_id",
+        vecCol = "embedding", excludeId = Some(0L))),
 
     // Census after an incremental REPLACE of a deliberately-wrong build
     // (missing rows inserted, reversed-vector rows re-assigned out of
@@ -291,21 +314,17 @@ object CorpusQueries extends QueryModule {
     // from-scratch assignment mirror — the layout must be
     // bit-indistinguishable from never having been corrupted.
     "q_ivf_replaced" -> ((s, d) =>
-      graft.sources.PartitionedParquet.read(s, replacedIvfIndex(s, d))
+      graft.sources.PartitionedParquet.read(s, replacedIvfLayout(s, d))
         .select(col("vec_id"), col("cell").cast("long").as("cell"))
         .orderBy(col("vec_id"))),
 
     // Probed top-k from the replaced layout — literally the
     // q_ivf_kmeans_served mirror (the never-mutated probe), re-verified
     // through the replace.
-    "q_ivf_repl_topk" -> ((s, d) => {
-      val qv = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0)
-      KMeansQuant.topKFromIndex(s, replacedIvfIndex(s, d), model(s, d),
-        qv, k = 10, nprobe = 2, idCol = "vec_id", vecCol = "embedding",
-        excludeId = Some(0L))
-    }),
+    "q_ivf_repl_topk" -> ((s, d) =>
+      KMeansQuant.topKFromIndex(s, replacedIvfLayout(s, d), model(s, d),
+        queryVec(s, d), k = 10, nprobe = 2, idCol = "vec_id",
+        vecCol = "embedding", excludeId = Some(0L))),
 
     // Census of the layout after the full staleness→refit loop (build →
     // drifted append → monitor trip → refitIndex on every tripped
@@ -314,7 +333,7 @@ object CorpusQueries extends QueryModule {
     // SQL — refitIndex's bit-equivalence-to-buildIndex contract,
     // oracle-checked.
     "q_ivf_refit" -> ((s, d) =>
-      graft.sources.PartitionedParquet.read(s, refitIvfIndex(s, d)._1)
+      graft.sources.PartitionedParquet.read(s, refitIvfLayout(s, d)._1)
         .select(col("vec_id"), col("cell").cast("long").as("cell"))
         .orderBy(col("vec_id"))),
 
@@ -325,7 +344,7 @@ object CorpusQueries extends QueryModule {
     // as q_ivf_recall; fully mirrored (fit, drift, refit means, and
     // probe all replayed in SQL).
     "q_ann_refit_recall" -> ((s, d) => {
-      val (path, m2) = refitIvfIndex(s, d)
+      val (path, m2) = refitIvfLayout(s, d)
       val union = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>")
           .as("embedding"))
@@ -354,18 +373,12 @@ object CorpusQueries extends QueryModule {
     // recall-vs-nprobe trade is oracle-checked, not hand-waved.
     "q_hard_negatives_ivf" -> ((s, d) => {
       val m = model(s, d)
-      val path = ivfIndexCache.getOrElseUpdate(s, d) {
-        val p = graft.util.IndexPaths.fresh(d, "kmeans-ivf")
-        KMeansQuant.buildIndex(Tables.embeddings(s, d), "vec_id",
-          "embedding", m, p)
-        p
-      }
       val anchors = Tables.embeddings(s, d)
         .filter(col("vec_id").isin(0L, 1L, 2L))
         .select(col("vec_id"), col("embedding").cast("array<double>"))
         .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
         .toSeq.sortBy(_._1)
-      KMeansQuant.hardNegativesFromIndex(s, path, m, anchors,
+      KMeansQuant.hardNegativesFromIndex(s, servedIvfLayout(s, d), m, anchors,
           k = 5, lo = 0.15, hi = 0.5, nprobe = 2,
           idCol = "vec_id", vecCol = "embedding")
         .orderBy(col("anchor_id"), col("rank"))
@@ -447,13 +460,7 @@ object CorpusQueries extends QueryModule {
     // eval rows themselves are excluded from the takedown output.
     "q_decontaminate_sem_srv" -> ((s, d) => {
       val m = model(s, d)
-      val path = ivfIndexCache.getOrElseUpdate(s, d) {
-        val p = graft.util.IndexPaths.fresh(d, "kmeans-ivf")
-        KMeansQuant.buildIndex(Tables.embeddings(s, d), "vec_id",
-          "embedding", m, p)
-        p
-      }
-      SemDedup.decontaminateFromIndex(s, path, m,
+      SemDedup.decontaminateFromIndex(s, servedIvfLayout(s, d), m,
           Tables.embeddings(s, d)
             .filter(pmod(col("vec_id"), lit(20)) === 0),
           "vec_id", "embedding", SEMTAU, nprobe = 2)

@@ -12,9 +12,10 @@ import graft.operators.{DedupGroups, FuzzyJoin, GraphMetrics, MinHashDedup, Page
   * Oracle-checkable: exact brute-force cosine top-k, exact all-pairs
   * embedding near-dups, exact shingle-Jaccard pairs (the ground truth the
   * LSH variants are property-tested against), duplicate-group resolution
-  * over those exact pairs. Rows-only: MinHash-LSH, SimHash, hyperplane/IVF
-  * ANN (xxhash64/plane/k-means-dependent — verified by recall + probe==scan
-  * equality properties in SimilaritySpec / AnnIndexSpec instead).
+  * over those exact pairs. Rows-only: MinHash-LSH, SimHash, hyperplane
+  * ANN (xxhash64/plane-dependent — verified by recall + probe==scan
+  * equality properties in SimilaritySpec / AnnIndexSpec instead). The IVF
+  * queries live in [[CorpusQueries]], over the grid-exact quantizer.
   *
   * The ANN queries probe MATERIALIZED indexes ([[graft.ml.AnnIndex]]),
   * built once per dataset ([[IndexCache]]) — build cost shows up in the
@@ -32,7 +33,6 @@ object SimilarityQueries extends QueryModule {
   private object IndexCache {
     private val hyper = new SessionCache[DataFrame]
     private val hyperQuant = new SessionCache[DataFrame]
-    private val ivf = new SessionCache[(DataFrame, Array[Array[Double]])]
     def hyperplane(s: SparkSession, d: String): DataFrame =
       hyper.getOrElseUpdate(s, d) {
         val p = graft.util.IndexPaths.fresh(d, "hyperplane")
@@ -46,14 +46,6 @@ object SimilarityQueries extends QueryModule {
         AnnIndex.buildHyperplaneQuantized(
           Tables.embeddings(s, d), "vec_id", "embedding", p)
         graft.sources.PartitionedParquet.read(s, p)
-      }
-
-    def ivfIndex(s: SparkSession, d: String): (DataFrame, Array[Array[Double]]) =
-      ivf.getOrElseUpdate(s, d) {
-        val p = graft.util.IndexPaths.fresh(d, "ivf")
-        val centroids = AnnIndex.buildIvf(
-          Tables.embeddings(s, d), "vec_id", "embedding", p, nlist = 8)
-        (graft.sources.PartitionedParquet.read(s, p), centroids)
       }
   }
 
@@ -477,24 +469,6 @@ object SimilarityQueries extends QueryModule {
       SimHash.nearDuplicates(Tables.documents(s, d), "doc_id", "text",
           maxHamming = 8)
         .orderBy(col("id_a"), col("id_b"))),
-
-    // IVF index build (one-time cost, explicit): k-means coarse quantizer
-    // fit + cell-partitioned vector layout. Returns the cell histogram —
-    // rows-only (k-means-dependent).
-    "q_ivf_build" -> ((s, d) => {
-      val (index, _) = IndexCache.ivfIndex(s, d)
-      index.groupBy(col("cell")).agg(count(lit(1)).as("n"))
-        .orderBy(col("cell"))
-    }),
-
-    // IVF ANN probe: nearest-4-of-8 cells via the MATERIALIZED index —
-    // a PartitionFilters-pruned read, no fit in the query path. Rows-only;
-    // full-probe==brute-force equality is property-tested (AnnIndexSpec).
-    "q_ivf_topk" -> ((s, d) => {
-      val (index, centroids) = IndexCache.ivfIndex(s, d)
-      AnnIndex.probeIvf(index, centroids, queryVec(s, d), k = 10,
-        nprobe = 4, excludeId = Some(0L))
-    }),
 
     // Hyperplane-LSH index build (one-time cost, explicit): multi-table
     // bucket-partitioned layout. Returns per-table bucket stats — rows-only.

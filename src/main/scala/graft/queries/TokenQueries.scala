@@ -1205,7 +1205,6 @@ object TokenQueries extends QueryModule {
     },
 
     "q_span_dedup" -> {
-      val k = SpanK
       s"""WITH $spanGramsSql,
          |pg AS (SELECT gram, doc_id, count(*) AS n FROM g2 GROUP BY 1, 2),
          |own AS (SELECT doc_id, n,

@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   * Sorting is the point, not a nicety: parquet stores per-row-group
   * min/max stats, so a range-sorted layout lets point and range reads
   * skip everything but the matching row groups — the poor man's
-  * clustered index. This pairs with [[graft.ml.AnnIndex.probeHyperplaneIds]]
-  * (id-sorted base fetch) and any key-ranged access pattern.
+  * clustered index for any key-ranged access pattern.
   */
 object Compaction {
 

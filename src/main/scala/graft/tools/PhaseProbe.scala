@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Phase-timing diagnostic (optimization rounds): for each named query,
   * separates DataFrame CONSTRUCTION time (guard probes, memoized fits,
   * driver collects that run while building the plan) from EXECUTION time
@@ -12,16 +10,7 @@ import org.apache.spark.sql.SparkSession
 object PhaseProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.app.Sessions.local("graft-phase-probe")
     graft.Tables.all.foreach { t =>
       try graft.Tables.load(spark, sfDir, t).limit(1).count()
       catch { case _: Throwable => () }

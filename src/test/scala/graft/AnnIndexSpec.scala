@@ -21,12 +21,6 @@ class AnnIndexSpec extends SparkSpec {
     p
   }
 
-  private lazy val ivfBuilt = {
-    val p = java.nio.file.Files.createTempDirectory("graft-ivf").toString + "/idx"
-    val centroids = AnnIndex.buildIvf(emb, "vec_id", "embedding", p, nlist = 4)
-    (p, centroids)
-  }
-
   test("hyperplane probe == scan-form annTopK") {
     val probe = AnnIndex.probeHyperplane(spark, hyperPath, query, k = 10,
         excludeId = Some(0L))
@@ -70,28 +64,6 @@ class AnnIndexSpec extends SparkSpec {
     }
   }
 
-  test("id-only index layout probes to the same results as vector-inline") {
-    val p = java.nio.file.Files.createTempDirectory("graft-hyper-ids")
-      .toString + "/idx"
-    AnnIndex.buildHyperplane(emb, "vec_id", "embedding", p,
-      storeVectors = false)
-    val idx = PartitionedParquet.read(spark, p)
-    assert(!idx.columns.contains("v"), "id-only layout must not store vectors")
-    val probe = AnnIndex.probeHyperplaneIds(idx, emb, "vec_id", "embedding",
-        query, k = 10, excludeId = Some(0L))
-      .as[(Long, Double)].collect().toSeq
-    val inline = AnnIndex.probeHyperplane(spark, hyperPath, query, k = 10,
-        excludeId = Some(0L))
-      .as[(Long, Double)].collect().toSeq
-    assert(probe === inline)
-    assert(probe.nonEmpty)
-    // the vector fetch pushes the candidate-id IN filter to the base scan
-    val fetchPlan = AnnIndex.probeHyperplaneIds(idx, emb, "vec_id",
-      "embedding", query, k = 10).queryExecution.executedPlan.toString
-    assert(fetchPlan.contains("PushedFilters: [In(vec_id"),
-      s"candidate fetch not pushed:\n$fetchPlan")
-  }
-
   test("quantized index: 8x smaller rows, high recall vs exact probe") {
     val p = java.nio.file.Files.createTempDirectory("graft-hyper-q")
       .toString + "/idx"
@@ -128,60 +100,5 @@ class AnnIndexSpec extends SparkSpec {
       AnnIndex.probeHyperplaneQuantized(idx, query ++ Seq(0.0), k = 5)
     }
     assert(err.getMessage.contains("dimension"))
-  }
-
-  test("id-only probe caps the candidate collect: fallback == IN-list path") {
-    val p = java.nio.file.Files.createTempDirectory("graft-hyper-hot")
-      .toString + "/idx"
-    AnnIndex.buildHyperplane(emb, "vec_id", "embedding", p,
-      storeVectors = false)
-    val idx = PartitionedParquet.read(spark, p)
-    // Force the over-threshold path with a tiny cap: every bucket is
-    // "hot" relative to it, so the fetch must take the semi-join route
-    // and still return exactly what the IN-list route returns.
-    val capped = AnnIndex.probeHyperplaneIds(idx, emb, "vec_id", "embedding",
-        query, k = 10, excludeId = Some(0L), maxInListCandidates = 1)
-      .as[(Long, Double)].collect().toSeq
-    val inList = AnnIndex.probeHyperplaneIds(idx, emb, "vec_id", "embedding",
-        query, k = 10, excludeId = Some(0L))
-      .as[(Long, Double)].collect().toSeq
-    assert(capped === inList)
-    assert(capped.nonEmpty)
-    // and the fallback plan is a semi-join, not an IN predicate
-    val plan = AnnIndex.probeHyperplaneIds(idx, emb, "vec_id", "embedding",
-        query, k = 10, maxInListCandidates = 1)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("LeftSemi"), s"no semi-join fallback:\n$plan")
-  }
-
-  test("IVF full probe == brute force; centroids round-trip") {
-    val (path, centroids) = ivfBuilt
-    val full = AnnIndex.probeIvf(spark, path, centroids, query, k = 10,
-        nprobe = 4, excludeId = Some(0L))
-      .as[(Long, Double)].collect().toSeq
-    val brute = Similarity.bruteForceTopK(emb, "vec_id", "embedding",
-        queryId = 0L, k = 10)
-      .as[(Long, Double)].collect().toSeq
-    assert(full === brute)
-    val reloaded = AnnIndex.readCentroids(spark, path)
-    assert(reloaded.map(_.toSeq).toSeq === centroids.map(_.toSeq).toSeq)
-  }
-
-  test("IVF partial probe prunes cells and matches IvfIndex.topK semantics") {
-    val (path, centroids) = ivfBuilt
-    val probe = AnnIndex.probeIvf(spark, path, centroids, query, k = 5,
-      nprobe = 2, excludeId = Some(0L))
-    val plan = probe.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: ["), s"no partition filters:\n$plan")
-    // the pruned probe reads only the probed cells
-    val cellRows = PartitionedParquet.read(spark, path)
-      .groupBy($"cell").count().as[(Int, Long)].collect().toMap
-    val probeCells = centroids.zipWithIndex.map { case (c, i) =>
-      (i, c.zip(query).map { case (a, b) => (a - b) * (a - b) }.sum)
-    }.sortBy(_._2).take(2).map(_._1)
-    val expectedCand = probeCells.map(cellRows.getOrElse(_, 0L)).sum - 1 // minus query vec if in a probed cell
-    val cand = AnnIndex.probeIvf(spark, path, centroids, query,
-      k = Int.MaxValue, nprobe = 2, excludeId = Some(0L)).count()
-    assert(cand === expectedCand || cand === expectedCand + 1)
   }
 }

@@ -107,6 +107,28 @@ class CorpusModelSpec extends SparkSpec {
     assert(cellDirs > 0 && cellDirs <= m.k, s"$cellDirs cell dirs")
   }
 
+  test("q_ivf_topk equals the in-plan ivfTopK at nprobe 3, row for row") {
+    val emb = Tables.embeddings(spark, sf001)
+    val m = KMeansQuant.fit(emb, "vec_id", "embedding", k = 4, iters = 2)
+    val served = SparkEntry.queries("q_ivf_topk")(spark, sf001)
+      .as[(Long, Double)].collect().toSeq
+    val inPlan = KMeansQuant.ivfTopK(emb, "vec_id", "embedding", m,
+      queryId = 0L, k = 10, nprobe = 3).as[(Long, Double)].collect().toSeq
+    assert(served === inPlan && served.nonEmpty)
+  }
+
+  test("q_ivf_build's cell histogram matches assign's per-cluster counts") {
+    val emb = Tables.embeddings(spark, sf001)
+    val m = KMeansQuant.fit(emb, "vec_id", "embedding", k = 4, iters = 2)
+    val hist = SparkEntry.queries("q_ivf_build")(spark, sf001)
+      .select($"cell".cast("long"), $"n").as[(Long, Long)].collect().toSeq
+    val assigned = KMeansQuant.assign(emb, "vec_id", "embedding", m)
+      .groupBy($"cluster").count().orderBy($"cluster")
+      .as[(Long, Long)].collect().toSeq
+    assert(hist === assigned)
+    assert(hist.map(_._2).sum == emb.count())
+  }
+
   test("kmeans ivf: appending under the frozen quantizer equals a full rebuild") {
     val emb = Tables.embeddings(spark, sf001)
     val m = KMeansQuant.fit(emb, "vec_id", "embedding", k = 4, iters = 2)

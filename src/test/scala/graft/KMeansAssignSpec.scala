@@ -92,31 +92,9 @@ class KMeansAssignSpec extends SparkSpec {
     }
   }
 
-  test("registrations are bounded: many distinct models don't accumulate forever") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    val before = reg.listFunction().count(_.funcName.startsWith("kmq_"))
-    // churn 40 distinct single-centroid models through the cache
-    val df = Seq((1L, Seq(0.0, 0.0))).toDF("id", "embedding")
-    (1 to 40).foreach { i =>
-      val mi = KMeansQuant.Model(Array(Array(i.toLong, 0L), Array(0L, i.toLong)))
-      df.select(KMeansQuant.cellOf(col("embedding"), mi)).collect()
-    }
-    val after = reg.listFunction().count(_.funcName.startsWith("kmq_"))
-    assert(after <= before + 16,
-      s"registry grew unboundedly: $before -> $after kmq_ functions")
-    // an evicted model re-registers transparently on next use
-    val m1 = KMeansQuant.Model(Array(Array(1L, 0L), Array(0L, 1L)))
-    val got = df.select(KMeansQuant.cellOf(col("embedding"), m1).as("c"))
-      .head().getLong(0)
-    assert(got == 0L)
-  }
-
   test("wrong-typed input fails at analysis, not with reinterpreted bytes") {
-    // the kmq_* names live in the session FunctionRegistry; without
-    // checkInputDataTypes an array<double> child reaches toLongArray,
-    // which reinterprets raw bytes into garbage cell ids (advisor r12)
+    // without checkInputDataTypes an array<double> child would reach
+    // toLongArray, which reinterprets raw bytes into garbage cell ids
     val raw = Seq((1L, Seq(0.5, 0.5))).toDF("id", "v") // array<double>, unquantized
     val c = graft.functions.KMeansAssignExprs.nearestCell(
       col("v"), Array(Array(0L, 0L), Array(1L, 1L)))
@@ -131,20 +109,16 @@ class KMeansAssignSpec extends SparkSpec {
     }
   }
 
-  test("deepHashCode-colliding models register under distinct names and both compute correctly") {
+  test("hash-colliding models each assign with their own centroids") {
     // Long.hashCode(0) == Long.hashCode(4294967297L) == 0, so these two
-    // matrices collide under Arrays.deepHashCode — the old 32-bit name
-    // would silently rebind one name across BOTH models (advisor r12);
-    // the SHA-256 content digest keeps them distinct.
+    // matrices collide under Arrays.deepHashCode
     val mA = KMeansQuant.Model(Array(Array(0L, 0L), Array(1L, 1L)))
     val mB = KMeansQuant.Model(Array(Array(4294967297L, 4294967297L), Array(1L, 1L)))
     assert(java.util.Arrays.deepHashCode(mA.centroids.asInstanceOf[Array[AnyRef]])
       == java.util.Arrays.deepHashCode(mB.centroids.asInstanceOf[Array[AnyRef]]),
       "fixture must actually collide under deepHashCode")
     val df = Seq((1L, Seq(0.0, 0.0))).toDF("id", "embedding") // quantizes to (0,0)
-    // build A's column FIRST, register B SECOND, analyze A's column LAST:
-    // under a name collision this is exactly the ordering that computed
-    // with the wrong centroids
+    // build A's column first, B's second, analyze A's last
     val colA = KMeansQuant.cellOf(col("embedding"), mA)
     val colB = KMeansQuant.cellOf(col("embedding"), mB)
     val gotA = df.select(colA.as("c")).head().getLong(0)
@@ -153,25 +127,17 @@ class KMeansAssignSpec extends SparkSpec {
     assert(gotB == 1L, "model B: centroid 1 at dist 2 beats centroid 0 at ~2^64-scale")
   }
 
-  test("eviction is LRU: a constantly-reused model survives a churn of 16 newcomers") {
-    val df = Seq((1L, Seq(0.0, 0.0))).toDF("id", "embedding")
-    val keeper = KMeansQuant.Model(Array(Array(7L, 7L), Array(900000L, 900000L)))
-    // build-but-don't-analyze: this Column resolves only if keeper's
-    // name is still registered when we finally select it
-    val keeperCol = KMeansQuant.cellOf(col("embedding"), keeper)
-    // churn 15 distinct models (queue: keeper + 15 = 16, no eviction yet)
-    (101 to 115).foreach { i =>
-      val mi = KMeansQuant.Model(Array(Array(i.toLong, 0L), Array(0L, i.toLong)))
-      df.select(KMeansQuant.cellOf(col("embedding"), mi)).collect()
+  test("a column built before a churn of 40 models resolves and assigns with its own model") {
+    val df = Seq((1L, Seq(1e-5, 0.0))).toDF("id", "embedding") // quantizes to (10,0)
+    val keeper = KMeansQuant.Model(Array(Array(9L, 0L), Array(900000L, 900000L)))
+    val keeperCol = KMeansQuant.cellOf(col("embedding"), keeper) // built, not analyzed
+    (1 to 40).foreach { i =>
+      val mi = KMeansQuant.Model(Array(Array(i.toLong, 0L), Array(0L, 0L)))
+      val got = df.select(KMeansQuant.cellOf(col("embedding"), mi)).head().getLong(0)
+      // (10 - i)^2 against 100: centroid 0 wins up to the tie at i = 20
+      assert(got == (if (i <= 20) 0L else 1L), s"model $i")
     }
-    // LRU refresh: re-touching keeper moves it to the queue tail …
-    KMeansQuant.cellOf(col("embedding"), keeper)
-    // … so one MORE newcomer evicts the oldest churned model, not keeper
-    df.select(KMeansQuant.cellOf(col("embedding"),
-      KMeansQuant.Model(Array(Array(777L, 0L), Array(0L, 777L))))).collect()
-    // under FIFO this select would fail resolution (keeper evicted)
-    val got = df.select(keeperCol.as("c")).head().getLong(0)
-    assert(got == 0L, "keeper still registered and correct after churn")
+    assert(df.select(keeperCol.as("c")).head().getLong(0) == 0L)
   }
 
   test("nearestCell registers no function and resolves on every call") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.ml.classification.{LinearSVCModel, LogisticRegression,
   LogisticRegressionModel}
-import org.apache.spark.ml.feature.IDFModel
+import org.apache.spark.ml.feature.{HashingTF, IDF, IDFModel, Tokenizer}
 import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator,
   MulticlassClassificationEvaluator}
 import org.apache.spark.ml.functions.vector_to_array
@@ -311,5 +311,32 @@ class MLPipelineSpec extends SparkSpec {
     val js = SentimentPipeline.metricsJson(m)
     assert(js.contains("\"accuracy\"") && js.contains("\"roc_auc\""))
     assert(js.contains("[[40, 10], [5, 45]]"))
+  }
+
+  test("IDF.fit matches the relational formula log((N+1)/(df+1)) with minDocFreq") {
+    // Cross-checks the MLlib estimator against q_term_df's semantics
+    // (SURVEY.md §2.5 M4) on a hand-built corpus using term positions
+    // pinned via HashingTF on distinct single-term docs.
+    val docs = Seq(
+      "alpha beta", "alpha beta", "alpha beta gamma", "alpha", "alpha beta",
+      "alpha delta", "delta beta", "alpha", "beta", "alpha beta")
+      .toDF("text") // N=10; df(alpha)=8, df(beta)=7, df(gamma)=1, df(delta)=2
+    val tok = new Tokenizer().setInputCol("text").setOutputCol("words")
+    val tf = new HashingTF().setInputCol("words").setOutputCol("rawf")
+      .setNumFeatures(1 << 10)
+    val idf = new IDF().setInputCol("rawf").setOutputCol("feat").setMinDocFreq(2)
+    val withTf = tf.transform(tok.transform(docs))
+    val model = idf.fit(withTf)
+    val idfVec = model.idf.toArray
+    def bucket(term: String): Int = {
+      val v = tf.transform(tok.transform(Seq(term).toDF("text")))
+        .select(vector_to_array($"rawf")).as[Seq[Double]].head()
+      v.indexWhere(_ > 0)
+    }
+    val n = 10.0
+    assert(math.abs(idfVec(bucket("alpha")) - math.log((n + 1) / (8 + 1))) < 1e-9)
+    assert(math.abs(idfVec(bucket("beta")) - math.log((n + 1) / (7 + 1))) < 1e-9)
+    assert(idfVec(bucket("gamma")) === 0.0, "df < minDocFreq must zero the weight")
+    assert(math.abs(idfVec(bucket("delta")) - math.log((n + 1) / (2 + 1))) < 1e-9)
   }
 }

@@ -335,6 +335,20 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("Join"), s"served probe is join-free:\n$plan")
   }
 
+  test("q_ivf_topk reads exactly its 3 probed cell partitions") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val df = SparkEntry.queries("q_ivf_topk")(spark, sf001)
+    df.collect()
+    val scans = new AdaptiveSparkPlanHelper {}.collect(
+      df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    assert(scans.size == 1, s"expected one layout scan:\n${df.queryExecution.executedPlan}")
+    assert(scans.head.metrics("numPartitions").value == 3,
+      s"probe read ${scans.head.metrics("numPartitions").value} cell partitions")
+    val cells = SparkEntry.queries("q_ivf_build")(spark, sf001).count()
+    assert(cells == 4, s"the layout holds $cells cells, so 3 would not be a pruning")
+  }
+
   test("q_embed_norm prunes the scan to the two referenced columns") {
     val plan = formatted("q_embed_norm")
     val readSchema = plan.linesIterator

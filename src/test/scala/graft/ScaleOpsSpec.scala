@@ -1,29 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ml.IvfIndex
-import graft.operators.{Salting, Similarity}
+import graft.operators.Salting
 
 class ScaleOpsSpec extends SparkSpec {
   import spark.implicits._
-
-  test("IVF top-k: probing half the cells recalls most of brute-force top-10") {
-    val emb = Tables.embeddings(spark, sf01)
-    val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", 0L, 10)
-      .select($"vec_id").as[Long].collect().toSet
-    val q = emb.filter($"vec_id" === 0)
-      .select($"embedding".cast("array<double>")).head().getSeq[Double](0)
-    val model = IvfIndex.fit(emb.filter($"vec_id" =!= 0),
-      "vec_id", "embedding", nlist = 8)
-    val ann = IvfIndex.topK(model, "vec_id", q, 10, nprobe = 4)
-      .select($"vec_id").as[Long].collect().toSet
-    val recall = (exact & ann).size.toDouble / exact.size
-    assert(recall >= 0.4, s"IVF recall $recall (exact=$exact ann=$ann)")
-    // full probe == brute force
-    val full = IvfIndex.topK(model, "vec_id", q, 10, nprobe = 8)
-      .select($"vec_id").as[Long].collect().toSet
-    assert(full === exact, "probing all cells must equal brute force")
-  }
 
   test("ScaleBench.generate rejects scales past the alphabet-rotation wrap") {
     // at scale > 26 copy k and k-26 would be byte-identical text — the

@@ -207,6 +207,24 @@ class SimilaritySpec extends SparkSpec {
     assert(e.getMessage.contains("maxExactRows"))
   }
 
+  test("nearDupPairs spreads a 1-partition input and leaves a parallel one unshuffled") {
+    val par = spark.sparkContext.defaultParallelism
+    def plan(parts: Int): String = {
+      val df = spark.range(0, 40, 1, parts).select($"id".as("vec_id"),
+        array($"id".cast("double"), lit(1.0)).as("embedding"))
+      val pairs = Similarity.nearDupPairs(df, "vec_id", "embedding",
+        threshold = 0.999)
+      pairs.count()
+      pairs.queryExecution.executedPlan.toString
+    }
+    val narrow = plan(1)
+    assert(narrow.contains("RoundRobinPartitioning"),
+      s"1-partition stream side not spread:\n$narrow")
+    val wide = plan(par)
+    assert(!wide.contains("RoundRobinPartitioning"),
+      s"$par-partition input shuffled anyway:\n$wide")
+  }
+
   test("shingles: 3-grams of tokens, short docs -> empty") {
     val out = Seq("a b c d", "a b").toDF("text")
       .select(MinHashDedup.shingles(TokenOps.tokenize($"text"), 3))
