@@ -127,15 +127,25 @@ class KMeansAssignSpec extends SparkSpec {
     assert(gotB == 1L, "model B: centroid 1 at dist 2 beats centroid 0 at ~2^64-scale")
   }
 
-  test("a column built before a churn of 40 models resolves and assigns with its own model") {
+  test("40 churned models each assign with their own centroids") {
     val df = Seq((1L, Seq(1e-5, 0.0))).toDF("id", "embedding") // quantizes to (10,0)
-    val keeper = KMeansQuant.Model(Array(Array(9L, 0L), Array(900000L, 900000L)))
-    val keeperCol = KMeansQuant.cellOf(col("embedding"), keeper) // built, not analyzed
     (1 to 40).foreach { i =>
       val mi = KMeansQuant.Model(Array(Array(i.toLong, 0L), Array(0L, 0L)))
       val got = df.select(KMeansQuant.cellOf(col("embedding"), mi)).head().getLong(0)
       // (10 - i)^2 against 100: centroid 0 wins up to the tie at i = 20
       assert(got == (if (i <= 20) 0L else 1L), s"model $i")
+    }
+  }
+
+  test("a column built before a churn of models resolves with its own model") {
+    val df = Seq((1L, Seq(1e-5, 0.0))).toDF("id", "embedding") // quantizes to (10,0)
+    val keeper = KMeansQuant.Model(Array(Array(9L, 0L), Array(900000L, 900000L)))
+    val keeperCol = KMeansQuant.cellOf(col("embedding"), keeper) // built, not analyzed
+    (101 to 116).foreach { i =>
+      val mi = KMeansQuant.Model(Array(Array(i.toLong, 0L), Array(0L, i.toLong)))
+      // (i - 10)^2 against 100 + i^2: centroid 0 wins for every i > 0
+      assert(df.select(KMeansQuant.cellOf(col("embedding"), mi)).head().getLong(0) == 0L,
+        s"model $i")
     }
     assert(df.select(keeperCol.as("c")).head().getLong(0) == 0L)
   }
