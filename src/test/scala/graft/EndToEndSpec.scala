@@ -112,8 +112,10 @@ class EndToEndSpec extends SparkSpec {
     // Pin the SHAPE, not just accuracy parse-back: infer both schemas
     // with the same reader and require exact equality (field names,
     // nesting, types). A renamed/dropped/retyped key in metricsJson now
-    // fails here instead of silently diverging from
-    // /root/reference/metrics/lr_metrics.json:1-16.
+    // fails here instead of silently diverging from the reference's
+    // metrics/lr_metrics.json:1-16. The committed copy under
+    // src/test/resources/reference/metrics/ transcribes it: values from
+    // BASELINE.md:12-15, keys and layout as json.dump(indent=4) writes them.
     val mine = SentimentPipeline.metricsJson(SentimentPipeline.Metrics(
       0.9, 0.8, 0.95, Map((0L, 0L) -> 10L, (0L, 1L) -> 2L,
         (1L, 0L) -> 3L, (1L, 1L) -> 11L)))
@@ -122,9 +124,14 @@ class EndToEndSpec extends SparkSpec {
     java.nio.file.Files.writeString(tmp, mine)
     def inferred(path: String) = spark.read
       .option("multiLine", "true").json(path).schema
-    val refSchema = inferred("/root/reference/metrics/lr_metrics.json")
+    val refSchema = inferred(
+      getClass.getResource("/reference/metrics/lr_metrics.json").toString)
     assert(!refSchema.fieldNames.contains("_corrupt_record"))
     assert(inferred(tmp.toString) === refSchema)
+    // where the reference itself is present, the copy must still match it
+    val original = "/root/reference/metrics/lr_metrics.json"
+    if (java.nio.file.Files.exists(java.nio.file.Paths.get(original)))
+      assert(inferred(original) === refSchema)
   }
 
   test("train main: ngram branch (reference --use_ngram path) runs end-to-end") {
