@@ -1,9 +1,13 @@
 package graft
 
-/** Benchmark main (driver contract): times every declared query at
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line. A warm-up action runs
-  * first so JVM/session initialization is not attributed to the first
-  * query; per-query numbers are pure execution (plan + run + count).
+/** Per-query suite timer: times every declared query at
+  * SPARK_GRAFT_SF_DIR, writes BENCH_FULL.json and prints ONE JSON line.
+  * The benchmark of record is `perfbench/` (BENCHMARK.json); this main
+  * is the per-query diagnostic beside it. A warm-up action runs first so
+  * JVM/session initialization is not attributed to the first query.
+  * Each run is split into build (constructing the DataFrame: guard
+  * probes, memoized fits, driver collects) and exec (plan + run +
+  * count), both timed by [[Telemetry.timed]].
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -19,10 +23,7 @@ object Bench {
     // Telemetry (loadavg/GC/storage) lives in graft.Telemetry — shared
     // with the app smoke so every timed region in BENCH_FULL.json
     // carries the same adjudication evidence.
-    def loadavg(): String = Telemetry.loadavg()
-    def load1(): Double = Telemetry.load1()
-    def gcMs(): Long = Telemetry.gcMs()
-    def storageFreeMb(): Long = Telemetry.storageFreeMb(spark)
+    import Telemetry.{load1, loadavg}
     // raw sample at process start — the sbt/compile spike lands here;
     // the record's headline loadavg_before is sampled AFTER the load
     // gate below, at the moment timed work actually begins (the r14
@@ -96,18 +97,7 @@ object Bench {
     // recorded (under its own name, in the "warm" key + stderr) so the
     // one-time cost stays visible, just attributed honestly. Selected-
     // query debug runs warm too: their numbers should match the suite's.
-    val warmTimings = SparkEntry.warmups.toSeq.sortBy(_._1).map {
-      case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] warm $name FAILED: ${e.getMessage}")
-            false
-          }
-        val sec = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] warm $name%-22s $sec%8.2f s")
-        (name, if (ok) sec else -sec)
-    }
+    val warmTimings = SparkEntry.runWarmups(spark, sfDir)
 
     // Order de-bias: a FIXED (alphabetical) order lets whichever family
     // sorts first absorb any residual contention/warm-up every single
@@ -119,78 +109,37 @@ object Bench {
     val orderSeed = scala.util.Try(
       sys.env.get("SPARK_GRAFT_BENCH_SEED").map(_.toLong)).toOption
       .flatten.getOrElse(System.nanoTime())
-    val rng = new scala.util.Random(orderSeed)
-    val ordered = rng.shuffle(selected.toSeq.sortBy(_._1))
-    // INTERLEAVED rounds (opt-in, SPARK_GRAFT_BENCH_INTERLEAVE=1): the
-    // whole suite runs nRuns times, each round freshly shuffled, and a
-    // query's headline is the min ACROSS rounds. Rationale: with
-    // consecutive runs a single transient slow window (page-cache
-    // eviction, THP compaction) covers EVERY run of the one or two
-    // queries executing inside it — min-of-n can't wash out what hits
-    // all n samples, the adjudicated-outlier class every r15-r17 record
-    // carried. Interleaving separates a query's samples by a full suite
-    // pass so the min recovers — but it was MEASURED SLOWER overall
-    // (111.9 vs 97.0 s min-of-5 at sf0.1 even after the codegen-cache
-    // fix): consecutive runs reuse per-query hot state (broadcast
-    // blocks, footer caches, JIT-warm stages) that a full-suite gap
-    // evicts, a tax on every sample of every query vs smear on a
-    // handful. So consecutive stays the default record layout and the
-    // smear class is handled the established way — isolated
-    // BENCH_PARTIAL adjudication of outliers; interleave remains the
-    // cross-check tool for suspected position effects.
-    val interleave =
-      sys.env.get("SPARK_GRAFT_BENCH_INTERLEAVE").contains("1")
-    // (elapsed, succeeded, gcDeltaMs, load1, storageFreeMb) per run: a
-    // failed run's near-zero elapsed must never become the headline
-    // min, and the record must show WHICH runs failed, not just that
-    // something was slow. GC delta and box load per run let a slow
-    // number be adjudicated as heap-thrash vs contended-box vs real
-    // plan change.
+    val ordered =
+      new scala.util.Random(orderSeed).shuffle(selected.toSeq.sortBy(_._1))
+    // One run = (whole run, build seconds). The whole run's elapsed is
+    // build + exec and NEGATIVE when either failed: a failed run's
+    // near-zero elapsed must never become the headline min, and the
+    // record must show WHICH runs failed. build_sec is negative when the
+    // build itself failed. GC delta and box load per run let a slow
+    // number be adjudicated as heap-thrash vs contended-box vs real plan
+    // change.
     def oneRun(name: String,
         fn: (org.apache.spark.sql.SparkSession, String)
-          => org.apache.spark.sql.DataFrame)
-        : (Double, Boolean, Long, Double, Long) = {
-      // Untimed inter-run GC (opt-in): Spark's ContextCleaner frees
-      // dead broadcast/cache blocks only after a JVM GC clears their
-      // weak refs, so a long suite otherwise accumulates dead blocks
-      // until storage memory exhausts and later runs pay LRU-eviction
-      // churn inside their timed region. Running the GC here moves
-      // that reclamation outside the measurement.
-      if (sys.env.get("SPARK_GRAFT_BENCH_GC").contains("1")) System.gc()
-      val gc0 = gcMs()
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          // loud, not silent: a failing query must be visible in the
-          // round log even though the bench keeps going
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          false
-        }
-      ((System.nanoTime() - t0) / 1e9, ok, gcMs() - gc0, load1(),
-        storageFreeMb())
+          => org.apache.spark.sql.DataFrame): (Telemetry.StageRun, Double) = {
+      val (built, build) = Telemetry.timed(spark)(fn(spark, sfDir))
+      val (counted, exec) = Telemetry.timed(spark)(built.get.count())
+      // loud, not silent: a failing query must be visible in the round
+      // log even though the bench keeps going
+      counted.failed.foreach(e =>
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}"))
+      val sec = math.abs(build.elapsedSec) + math.abs(exec.elapsedSec)
+      (exec.copy(elapsedSec = if (counted.isSuccess) sec else -sec,
+        gcDeltaMs = build.gcDeltaMs + exec.gcDeltaMs), build.elapsedSec)
     }
-    val runsByName: Map[String, Seq[(Double, Boolean, Long, Double, Long)]] =
-      if (interleave) {
-        val rounds = (1 to nRuns).map { r =>
-          val roundOrder = if (r == 1) ordered else rng.shuffle(ordered)
-          roundOrder.map { case (name, fn) => name -> oneRun(name, fn) }
-        }
-        rounds.flatten.groupBy(_._1).map { case (n, rs) =>
-          n -> rs.map(_._2)
-        }
-      } else {
-        ordered.map { case (name, fn) =>
-          name -> (1 to nRuns).map(_ => oneRun(name, fn))
-        }.toMap
-      }
-    val allRuns = ordered.map { case (name, _) =>
-      val runs = runsByName(name)
-      val okTimes = runs.collect { case (r, true, _, _, _) => r }
+    val allRuns = ordered.map { case (name, fn) =>
+      val runs = (1 to nRuns).map(_ => oneRun(name, fn))
+      val okTimes = runs.map(_._1.elapsedSec).filter(_ > 0)
       val headline = if (okTimes.nonEmpty) okTimes.min else -1.0
       System.err.println(f"[bench] $name%-24s $headline%8.2f s" +
-        runs.map { case (r, ok, gc, ld, st) =>
-          (if (ok) f"$r%.2f" else f"FAIL($r%.2f)") + f"/gc${gc}ms/ld$ld%.1f/free${st}MB"
+        runs.map { case (r, b) =>
+          val e = r.elapsedSec
+          (if (e > 0) f"$e%.2f" else f"FAIL(${-e}%.2f)") +
+            f"/build$b%.2f/gc${r.gcDeltaMs}ms/ld${r.load1}%.1f/free${r.storageFreeMb}MB"
         }.mkString("  (runs: ", ", ", ")"))
       (name, runs, headline)
     }
@@ -253,11 +202,12 @@ object Bench {
       // cold-vs-warm structure; the runs array keeps it analyzable).
       // Failed runs serialize as NEGATIVE elapsed — distinguishable
       // from any real time, numeric for tooling. Each run is
-      // [elapsedSec, gcDeltaMs, load1, storageFreeMb] so a slow run
-      // carries its own adjudication evidence.
+      // [elapsedSec, gcDeltaMs, load1, storageFreeMb, buildSec] so a
+      // slow run carries its own adjudication evidence and its
+      // construction-vs-execution split.
       val runsJson = allRuns.map { case (k, rs, _) =>
-        jstr(k) + ":" + rs.map { case (r, ok, gc, ld, st) =>
-          s"[${if (ok) r else -r},$gc,$ld,$st]"
+        jstr(k) + ":" + rs.map { case (r, b) =>
+          s"[${r.elapsedSec},${r.gcDeltaMs},${r.load1},${r.storageFreeMb},$b]"
         }.mkString("[", ",", "]")
       }.mkString("{", ",", "}")
       // apps carry the SAME telemetry shape as query runs (one stage =
@@ -265,7 +215,7 @@ object Bench {
       val appsJson = appTimings.map { case (k, r) => jstr(k) + ":" + r.toJsonArray }
         .mkString("{", ",", "}")
       val full = json(_.toString).dropRight(1) +
-        s""","runs":$runsJson,"runs_shape":"[elapsed_sec,gc_delta_ms,load1,storage_free_mb]"""" +
+        s""","runs":$runsJson,"runs_shape":"[elapsed_sec,gc_delta_ms,load1,storage_free_mb,build_sec]"""" +
         s""","agg":"min_of_$nRuns","apps":$appsJson""" +
         // untimed one-time model fits, cost attributed by name (negative
         // = the warm failed; its queries then pay the fit themselves)

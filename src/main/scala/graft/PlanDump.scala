@@ -21,12 +21,7 @@ object PlanDump {
       if (args.length > 1) SparkEntry.queries.filter(kv => args.drop(1).contains(kv._1))
       else SparkEntry.queries
     // model warms first, so plans reflect the post-warm state the bench times
-    SparkEntry.warmups.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try fn(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[plandump] warm $name FAILED: ${e.getMessage}")
-      }
-    }
+    SparkEntry.runWarmups(spark, sfDir)
     selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)

@@ -401,16 +401,6 @@ object ScaleBench {
     val (nDocs, nVecs) = generate(spark, sfDir, outDir, scale)
     System.err.println(s"[scale] generated ${nDocs} docs / ${nVecs} vecs at $outDir")
 
-    def time(name: String, dir: String): (Seq[Double], Long) = {
-      var rows = 0L
-      val runs = (1 to nRuns).map { _ =>
-        val t0 = System.nanoTime()
-        rows = SparkEntry.queries(name)(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      (runs, rows)
-    }
-
     // Results accumulate as they complete; the finally block records
     // whatever finished (a partial JSON beats no record — the plausible
     // failure a scale rehearsal exists to catch is a mid-loop OOM), then
@@ -418,25 +408,44 @@ object ScaleBench {
     val results = Seq.newBuilder[(String, Seq[Double], Seq[Double], Double,
       Double, Long, Long)]
     var completed = 0
+
+    /** One rehearsal: `prepare(side)` runs untimed (fits, index builds,
+      * input frames) and returns the counting action that is timed
+      * nRuns times, first on the 1× side, then on the N× side. A failed
+      * run rethrows (`.get`), so the record stays partial. */
+    def rehearse[S](label: String, base: S, scaled: S)(
+        prepare: S => () => Long): Unit = {
+      def runs(side: S): (Seq[Double], Long) = {
+        val action = prepare(side)
+        val outs = (1 to nRuns).map { _ =>
+          val (n, t) = Telemetry.timed(spark)(action())
+          (t.elapsedSec, n.get)
+        }
+        (outs.map(_._1), outs.last._2)
+      }
+      val (b, baseRows) = runs(base)
+      val (sc, scaledRows) = runs(scaled)
+      val ratio = sc.min / b.min
+      // growth exponent e: t_N = t_1 * N^e  →  e = log(ratio)/log(N).
+      // e ≈ 1 linear, e ≈ 2 quadratic; sub-linear e reflects fixed
+      // overheads (planning, index build memoized per dataset) still
+      // dominating at this absolute scale.
+      val exponent = math.log(ratio) / math.log(scale.toDouble)
+      System.err.println(f"[scale] $label%-28s 1x ${b.min}%6.2f s -> ${scale}x " +
+        f"${sc.min}%6.2f s  ratio ${ratio}%5.2f  exp $exponent%5.2f  " +
+        f"rows $baseRows -> $scaledRows")
+      results += ((label, b, sc, ratio, exponent, baseRows, scaledRows))
+      completed += 1
+    }
     // args select queries for isolated adjudication runs (the pattern
     // Bench uses): a selected run writes a SIDECAR record so it can
     // never clobber the round's full rehearsal.
     val selected = if (args.nonEmpty) queries.filter(args.contains) else queries
     try {
       selected.foreach { q =>
-        val (base, baseRows) = time(q, sfDir)
-        val (scaled, scaledRows) = time(q, outDir)
-        val ratio = scaled.min / base.min
-        // growth exponent e: t_N = t_1 * N^e  →  e = log(ratio)/log(N).
-        // e ≈ 1 linear, e ≈ 2 quadratic; sub-linear e reflects fixed
-        // overheads (planning, index build memoized per dataset) still
-        // dominating at this absolute scale.
-        val exponent = math.log(ratio) / math.log(scale.toDouble)
-        System.err.println(f"[scale] $q%-28s 1x ${base.min}%6.2f s -> ${scale}x " +
-          f"${scaled.min}%6.2f s  ratio ${ratio}%5.2f  exp $exponent%5.2f  " +
-          f"rows $baseRows -> $scaledRows")
-        results += ((q, base, scaled, ratio, exponent, baseRows, scaledRows))
-        completed += 1
+        rehearse(q, sfDir, outDir) { dir =>
+          () => SparkEntry.queries(q)(spark, dir).count()
+        }
       }
 
       // SemDeDup operating-discipline rehearsal: the query form holds k
@@ -452,27 +461,12 @@ object ScaleBench {
       if (args.isEmpty) {
         import graft.operators.{KMeansQuant, SemDedup}
         val tau = 0.35 // the query family's SEMTAU
-        def timePairs(dir: String, k: Int): (Seq[Double], Long) = {
-          val emb = Tables.embeddings(spark, dir)
-          val m = KMeansQuant.fit(emb, "vec_id", "embedding", k, iters = 2)
-          var rows = 0L
-          val runs = (1 to nRuns).map { _ =>
-            val t0 = System.nanoTime()
-            rows = SemDedup.pairs(emb, "vec_id", "embedding", m, tau).count()
-            (System.nanoTime() - t0) / 1e9
-          }
-          (runs, rows)
+        rehearse("semdedup_pairs_k_scaled", (sfDir, 4), (outDir, 4 * scale)) {
+          case (dir, k) =>
+            val emb = Tables.embeddings(spark, dir)
+            val m = KMeansQuant.fit(emb, "vec_id", "embedding", k, iters = 2)
+            () => SemDedup.pairs(emb, "vec_id", "embedding", m, tau).count()
         }
-        val (base, baseRows) = timePairs(sfDir, 4)
-        val (scaled, scaledRows) = timePairs(outDir, 4 * scale)
-        val ratio = scaled.min / base.min
-        val exponent = math.log(ratio) / math.log(scale.toDouble)
-        System.err.println(f"[scale] semdedup_pairs_k_scaled     1x ${base.min}%6.2f s" +
-          f" -> ${scale}x ${scaled.min}%6.2f s  ratio ${ratio}%5.2f  " +
-          f"exp $exponent%5.2f  rows $baseRows -> $scaledRows")
-        results += (("semdedup_pairs_k_scaled", base, scaled, ratio,
-          exponent, baseRows, scaledRows))
-        completed += 1
       }
 
       // Semantic-decontamination production-axis rehearsal: the
@@ -495,47 +489,21 @@ object ScaleBench {
             pmod(col("vec_id"), lit(20)) === 0
           (emb.filter(!isEval), emb.filter(isEval))
         }
-        def timeDecon(dir: String): (Seq[Double], Long) = {
+        rehearse("decon_fixed_eval", sfDir, outDir) { dir =>
           val (corpus, evalSet) = split(dir)
           val m = KMeansQuant.fit(corpus, "vec_id", "embedding", 4,
             iters = 2)
-          var rows = 0L
-          val runs = (1 to nRuns).map { _ =>
-            val t0 = System.nanoTime()
-            rows = SemDedup.decontaminate(corpus, evalSet, "vec_id",
-              "embedding", m, 0.35).count()
-            (System.nanoTime() - t0) / 1e9
-          }
-          (runs, rows)
+          () => SemDedup.decontaminate(corpus, evalSet, "vec_id",
+            "embedding", m, 0.35).count()
         }
-        def timeDeconSrv(dir: String): (Seq[Double], Long) = {
+        rehearse("decon_srv_fixed_eval", sfDir, outDir) { dir =>
           val (corpus, evalSet) = split(dir)
           val m = KMeansQuant.fit(corpus, "vec_id", "embedding", 4,
             iters = 2)
           val p = graft.util.IndexPaths.fresh(dir, "scale-decon-ivf")
           KMeansQuant.buildIndex(corpus, "vec_id", "embedding", m, p)
-          var rows = 0L
-          val runs = (1 to nRuns).map { _ =>
-            val t0 = System.nanoTime()
-            rows = SemDedup.decontaminateFromIndex(spark, p, m, evalSet,
-              "vec_id", "embedding", 0.35).count()
-            (System.nanoTime() - t0) / 1e9
-          }
-          (runs, rows)
-        }
-        for ((label, f) <- Seq(
-            ("decon_fixed_eval", timeDecon _),
-            ("decon_srv_fixed_eval", timeDeconSrv _))) {
-          val (base, baseRows) = f(sfDir)
-          val (scaled, scaledRows) = f(outDir)
-          val ratio = scaled.min / base.min
-          val exponent = math.log(ratio) / math.log(scale.toDouble)
-          System.err.println(f"[scale] $label%-28s 1x ${base.min}%6.2f s" +
-            f" -> ${scale}x ${scaled.min}%6.2f s  ratio ${ratio}%5.2f  " +
-            f"exp $exponent%5.2f  rows $baseRows -> $scaledRows")
-          results += ((label, base, scaled, ratio, exponent, baseRows,
-            scaledRows))
-          completed += 1
+          () => SemDedup.decontaminateFromIndex(spark, p, m, evalSet,
+            "vec_id", "embedding", 0.35).count()
         }
       }
 
@@ -557,32 +525,15 @@ object ScaleBench {
           (nodes, star.unionAll(ring))
         }
         val n0 = 500L
-        def timeTri(n: Long,
-            form: (DataFrame, String, DataFrame) => DataFrame) = {
-          val (nodes, pairs) = skewedGraph(n)
-          var rows = 0L
-          val runs = (1 to nRuns).map { _ =>
-            val t0 = System.nanoTime()
-            rows = form(nodes, "id", pairs).count()
-            (System.nanoTime() - t0) / 1e9
-          }
-          (runs, rows)
-        }
         for ((label, form) <- Seq(
             ("triangles_id_skewed",
               GraphMetrics.triangleStats(_: DataFrame, _: String, _: DataFrame)),
             ("triangles_degree_skewed",
               GraphMetrics.triangleStatsByDegree(_: DataFrame, _: String, _: DataFrame)))) {
-          val (base, baseRows) = timeTri(n0, form)
-          val (scaled, scaledRows) = timeTri(n0 * scale, form)
-          val ratio = scaled.min / base.min
-          val exponent = math.log(ratio) / math.log(scale.toDouble)
-          System.err.println(f"[scale] $label%-28s 1x ${base.min}%6.2f s" +
-            f" -> ${scale}x ${scaled.min}%6.2f s  ratio ${ratio}%5.2f  " +
-            f"exp $exponent%5.2f  rows $baseRows -> $scaledRows")
-          results += ((label, base, scaled, ratio, exponent, baseRows,
-            scaledRows))
-          completed += 1
+          rehearse(label, n0, n0 * scale) { n =>
+            val (nodes, pairs) = skewedGraph(n)
+            () => form(nodes, "id", pairs).count()
+          }
         }
       }
     } finally {

@@ -70,4 +70,17 @@ object SparkEntry {
     * query. */
   def warmups: Map[String, (SparkSession, String) => Unit] =
     modules.flatMap(_.warmups).toMap
+
+  /** Runs every [[warmups]] entry in name order and returns each one's
+    * seconds, NEGATIVE when the warm failed (its queries then pay the fit
+    * themselves). Bench records these as its "warm" block; PlanDump runs
+    * them so its plans show the post-warm state the bench times. */
+  def runWarmups(spark: SparkSession, sfDir: String): Seq[(String, Double)] =
+    warmups.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val (r, t) = Telemetry.timed(spark)(fn(spark, sfDir))
+      r.failed.foreach(e =>
+        System.err.println(s"[warm] $name FAILED: ${e.getMessage}"))
+      System.err.println(f"[warm] $name%-22s ${t.elapsedSec}%8.2f s")
+      name -> t.elapsedSec
+    }
 }

@@ -120,8 +120,8 @@ object Preprocess {
 }
 
 /** The one local-session builder for every main — the apps, `Bench`,
-  * `Verify`, `PlanDump`, `ScaleBench` and `tools.PhaseProbe` (the library
-  * itself never creates sessions — only entry points do). */
+  * `Verify`, `PlanDump` and `ScaleBench` (the library itself never
+  * creates sessions — only entry points do). */
 object Sessions {
   def local(name: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

@@ -20,9 +20,9 @@ import graft.Telemetry
   *
   * Models: LR (the reference's headline) + NaiveBayes (single-pass,
   * cheap) so the comparison artifact ranks something real. LinearSVC is
-  * excluded from the default smoke: 20 L-BFGS-style iterations over
-  * 1.6M cached rows triples the runtime without exercising any app code
-  * the LR path doesn't.
+  * left out: 20 L-BFGS-style iterations over 1.6M cached rows triple the
+  * runtime without exercising any app code the LR path doesn't, and
+  * perfbench's `sentiment_chain` times all three models per layer.
   */
 object Sentiment140Smoke {
 
@@ -84,27 +84,26 @@ object Sentiment140Smoke {
 
   /** Full chain under `workDir`; every artifact the reference workflow
     * produces (clean CSV, per-model metrics JSON + charts, saved models,
-    * comparison JSON/SVG/grid) is written and sanity-checked.
-    * `includeSvc` (env `SPARK_GRAFT_SMOKE_SVC=1`) adds LinearSVC for the
-    * reference's full 3-model comparison — off by default because 20
-    * L-BFGS-style iterations over the cached corpus roughly triple the
-    * smoke's runtime without exercising new app code. */
-  def run(spark: SparkSession, workDir: String, n: Long,
-      includeSvc: Boolean =
-        sys.env.get("SPARK_GRAFT_SMOKE_SVC").contains("1")): Timings = {
+    * comparison JSON/SVG/grid) is written and sanity-checked. */
+  def run(spark: SparkSession, workDir: String, n: Long): Timings = {
     val dir = java.nio.file.Paths.get(workDir)
     java.nio.file.Files.createDirectories(dir)
     def p(s: String) = dir.resolve(s).toString
+    // a failed stage fails the smoke loudly
+    def stage[A](body: => A): (A, Telemetry.StageRun) = {
+      val (a, t) = Telemetry.timed(spark)(body)
+      (a.get, t)
+    }
 
-    val (_, tGen) = Telemetry.timed(spark)(generateRaw(spark, n, p("raw")))
-    val (_, tPre) = Telemetry.timed(spark) {
+    val (_, tGen) = stage(generateRaw(spark, n, p("raw")))
+    val (_, tPre) = stage {
       Preprocess.run(spark, p("raw"), p("clean"))
       val written = graft.sources.SentimentCsv.readClean(spark, p("clean")).persist()
       try Preprocess.writeCharts(spark, p("raw"), written, p("charts"))
       finally written.unpersist()
     }
     def train(kind: String): Telemetry.StageRun = {
-      val (r, t) = Telemetry.timed(spark)(
+      val (r, t) = stage(
         Train.run(spark, kind, p("clean"), p(s"model_$kind"), p(s"${kind}_metrics.json")))
       try {
         Train.writeCharts(r, kind, p("charts"))
@@ -113,9 +112,9 @@ object Sentiment140Smoke {
       } finally r.close()
       t
     }
-    val models = Seq("lr", "nb") ++ (if (includeSvc) Seq("svm") else Seq.empty)
+    val models = Seq("lr", "nb")
     val trained = models.map(k => s"sentiment140_train_$k" -> train(k))
-    val (best, tCmp) = Telemetry.timed(spark)(
+    val (best, tCmp) = stage(
       CompareModels.run(spark, p("comparison.json"),
         models.map(k => k -> p(s"${k}_metrics.json"))))
     require(models.contains(best), s"unexpected best model: $best")

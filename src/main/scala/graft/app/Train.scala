@@ -119,8 +119,8 @@ object Train {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 4,
-      "usage: graft.Train <lr|nb|svc> <cleanDir> <modelDir> <metricsPath> " +
-        "[--ngram N]")
+      "usage: graft.app.Train <lr|nb|svm> <cleanDir> <modelDir> <metricsPath> " +
+        "[--ngram N] [--charts DIR]")
     val Array(kind, cleanDir, modelDir, metricsPath) = args.take(4)
     val ngramN = args.sliding(2).collectFirst {
       case Array("--ngram", n) => n.toInt

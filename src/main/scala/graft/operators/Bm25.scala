@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.ColumnOps
+import graft.util.StagedCommit
 
 /** Okapi BM25 lexical relevance scoring + reciprocal-rank fusion — the
   * lexical half of hybrid (dense + sparse) retrieval over a document
@@ -267,14 +268,14 @@ object Bm25 {
     // whereas the old postings-first order could leave a twin MISSING
     // appended docs, silently diverging prfTopKServed from prfTopK.
     if (docBuckets.isDefined)
-      moveDataFiles(fs, s"$stage/docposts", s"$path/docposts",
+      StagedCommit.moveDataFiles(fs, s"$stage/docposts", s"$path/docposts",
         partitioned = true)
-    moveDataFiles(fs, s"$stage/postings", s"$path/postings",
+    StagedCommit.moveDataFiles(fs, s"$stage/postings", s"$path/postings",
       partitioned = true)
-    moveDataFiles(fs, s"$stage/doclens", s"$path/doclens",
+    StagedCommit.moveDataFiles(fs, s"$stage/doclens", s"$path/doclens",
       partitioned = false)
-    swapDir(fs, s"$stage/stats", s"$path/stats")
-    swapDir(fs, s"$stage/terms", s"$path/terms")
+    StagedCommit.swapDir(fs, s"$stage/stats", s"$path/stats")
+    StagedCommit.swapDir(fs, s"$stage/terms", s"$path/terms")
     fs.delete(new org.apache.hadoop.fs.Path(stage), true)
     invalidateTwinMeta(path); invalidateStatsMeta(path)
   }
@@ -368,18 +369,18 @@ object Bm25 {
     // FIRST: bump the content epoch, so a crash anywhere in the rest of
     // this window leaves any existing twin detectably stale (its meta
     // epoch lags) instead of silently diverging the served PRF
-    swapDir(fs, s"$stage/epoch", s"$path/epoch")
+    StagedCommit.swapDir(fs, s"$stage/epoch", s"$path/epoch")
     touched.foreach { b =>
       // REPLACE each touched bucket partition: a bucket whose every row
       // was deleted has no staged dir and must end up absent (replaceDir
       // encodes exactly that, with the destructive step last)
-      replaceDir(fs,
+      StagedCommit.replaceDir(fs,
         new org.apache.hadoop.fs.Path(s"$stage/postings/bucket=$b"),
         new org.apache.hadoop.fs.Path(s"$path/postings/bucket=$b"))
     }
-    swapDir(fs, s"$stage/doclens", s"$path/doclens")
-    swapDir(fs, s"$stage/stats", s"$path/stats")
-    swapDir(fs, s"$stage/terms", s"$path/terms")
+    StagedCommit.swapDir(fs, s"$stage/doclens", s"$path/doclens")
+    StagedCommit.swapDir(fs, s"$stage/stats", s"$path/stats")
+    StagedCommit.swapDir(fs, s"$stage/terms", s"$path/terms")
     fs.delete(new org.apache.hadoop.fs.Path(stage), true)
     // content mutated → the doc-keyed twin may be stale; drop it so the
     // served PRF fails loudly instead of diverging (rebuild explicitly;
@@ -522,24 +523,24 @@ object Bm25 {
     // restamps (LAST), the twin reads as stale and expansionCandidates
     // refuses loudly; a torn commit can therefore never serve a twin
     // that disagrees with the postings
-    swapDir(fs, s"$stage/epoch", s"$path/epoch")
+    StagedCommit.swapDir(fs, s"$stage/epoch", s"$path/epoch")
     touched.foreach { b =>
-      replaceDir(fs,
+      StagedCommit.replaceDir(fs,
         new org.apache.hadoop.fs.Path(s"$stage/postings/bucket=$b"),
         new org.apache.hadoop.fs.Path(s"$path/postings/bucket=$b"))
     }
-    swapDir(fs, s"$stage/doclens", s"$path/doclens")
-    swapDir(fs, s"$stage/stats", s"$path/stats")
-    swapDir(fs, s"$stage/terms", s"$path/terms")
+    StagedCommit.swapDir(fs, s"$stage/doclens", s"$path/doclens")
+    StagedCommit.swapDir(fs, s"$stage/stats", s"$path/stats")
+    StagedCommit.swapDir(fs, s"$stage/terms", s"$path/terms")
     touchedD.foreach { b =>
-      replaceDir(fs,
+      StagedCommit.replaceDir(fs,
         new org.apache.hadoop.fs.Path(s"$stage/docposts/dbucket=$b"),
         new org.apache.hadoop.fs.Path(s"$path/docposts/dbucket=$b"))
     }
     // LAST: restamp the twin meta to the new epoch — the handshake
     // closes only once every rename above has landed
     if (docBuckets.isDefined)
-      swapDir(fs, s"$stage/docposts_meta", s"$path/docposts_meta")
+      StagedCommit.swapDir(fs, s"$stage/docposts_meta", s"$path/docposts_meta")
     fs.delete(new org.apache.hadoop.fs.Path(stage), true)
     invalidateTwinMeta(path); invalidateStatsMeta(path)
   }
@@ -576,33 +577,12 @@ object Bm25 {
       .sortWithinPartitions(col("token"), col("doc_id"))
       .write.partitionBy("bucket").parquet(s"$stage/postings")
     fragmented.foreach { b =>
-      replaceDir(fs,
+      StagedCommit.replaceDir(fs,
         new org.apache.hadoop.fs.Path(s"$stage/postings/bucket=$b"),
         new org.apache.hadoop.fs.Path(s"$path/postings/bucket=$b"))
     }
     fs.delete(new org.apache.hadoop.fs.Path(stage), true)
   }
-
-  /** See [[graft.util.StagedCommit.moveDataFiles]] — the shared
-    * stage-then-commit discipline, one definition across index
-    * families. */
-  private def moveDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-      from: String, to: String, partitioned: Boolean): Unit =
-    graft.util.StagedCommit.moveDataFiles(fs, from, to, partitioned)
-
-  /** Replace `dir` with the fully-staged `staged` via delete + rename —
-    * never write into a dir a lazy read may still be scanning. */
-  private def swapDir(fs: org.apache.hadoop.fs.FileSystem,
-      staged: String, dir: String): Unit =
-    replaceDir(fs, new org.apache.hadoop.fs.Path(staged),
-      new org.apache.hadoop.fs.Path(dir))
-
-  /** See [[graft.util.StagedCommit.replaceDir]] (destructive step
-    * last, trash-sibling restore) — shared discipline. */
-  private def replaceDir(fs: org.apache.hadoop.fs.FileSystem,
-      staged: org.apache.hadoop.fs.Path,
-      live: org.apache.hadoop.fs.Path): Unit =
-    graft.util.StagedCommit.replaceDir(fs, staged, live)
 
   /** The buckets a query's terms live in, computed through the SAME
     * engine expression classes that wrote them (`pmod(xxhash64(token),

@@ -60,13 +60,6 @@ object CorpusQueries extends QueryModule {
       p
     }
 
-  /** vec_id 0's embedding: the probe vector of the served top-k queries. */
-  private def queryVec(s: org.apache.spark.sql.SparkSession,
-      d: String): Seq[Double] =
-    Tables.embeddings(s, d).filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0)
-
   private val semIncrIndexCache = new graft.util.SessionCache[String]
 
   /** The incremental-dedup id split point (max(vec_id)/2) — a scalar off
@@ -251,7 +244,7 @@ object CorpusQueries extends QueryModule {
     // q_ivf_kmeans_topk's in-plan filter form, same oracle.
     "q_ivf_kmeans_served" -> ((s, d) =>
       KMeansQuant.topKFromIndex(s, servedIvfLayout(s, d), model(s, d),
-        queryVec(s, d), k = 10, nprobe = 2, idCol = "vec_id",
+        SimilarityQueries.queryVec(s, d), k = 10, nprobe = 2, idCol = "vec_id",
         vecCol = "embedding", excludeId = Some(0L))),
 
     // The served layout's build, as its own query id (one-time cost,
@@ -267,7 +260,7 @@ object CorpusQueries extends QueryModule {
     // KMeansQuant.ivfTopK's in-plan form at the same nprobe.
     "q_ivf_topk" -> ((s, d) =>
       KMeansQuant.topKFromIndex(s, servedIvfLayout(s, d), model(s, d),
-        queryVec(s, d), k = 10, nprobe = 3, idCol = "vec_id",
+        SimilarityQueries.queryVec(s, d), k = 10, nprobe = 3, idCol = "vec_id",
         vecCol = "embedding", excludeId = Some(0L))),
 
     // ANN staleness monitor (KMeansQuant.stalenessByCell): per build
@@ -305,7 +298,7 @@ object CorpusQueries extends QueryModule {
     // would (the mirror probes the surviving corpus from scratch).
     "q_ivf_del_topk" -> ((s, d) =>
       KMeansQuant.topKFromIndex(s, deletedIvfLayout(s, d), model(s, d),
-        queryVec(s, d), k = 10, nprobe = 2, idCol = "vec_id",
+        SimilarityQueries.queryVec(s, d), k = 10, nprobe = 2, idCol = "vec_id",
         vecCol = "embedding", excludeId = Some(0L))),
 
     // Census after an incremental REPLACE of a deliberately-wrong build
@@ -323,7 +316,7 @@ object CorpusQueries extends QueryModule {
     // through the replace.
     "q_ivf_repl_topk" -> ((s, d) =>
       KMeansQuant.topKFromIndex(s, replacedIvfLayout(s, d), model(s, d),
-        queryVec(s, d), k = 10, nprobe = 2, idCol = "vec_id",
+        SimilarityQueries.queryVec(s, d), k = 10, nprobe = 2, idCol = "vec_id",
         vecCol = "embedding", excludeId = Some(0L))),
 
     // Census of the layout after the full staleness→refit loop (build →

@@ -49,11 +49,11 @@ object SimilarityQueries extends QueryModule {
       }
   }
 
-  /** The query vector for the ANN queries (vec_id=0's embedding) —
-    * memoized beside the index it exists to probe, so repeated probe
-    * queries don't re-run the 1-row scan job each. */
+  /** The query vector for the ANN and served IVF queries (vec_id=0's
+    * embedding; the IVF ones live in [[CorpusQueries]]) — memoized, so
+    * repeated probe queries don't re-run the 1-row scan job each. */
   private val queryVecCache = new SessionCache[Seq[Double]]
-  private def queryVec(s: SparkSession, d: String): Seq[Double] =
+  private[queries] def queryVec(s: SparkSession, d: String): Seq[Double] =
     queryVecCache.getOrElseUpdate(s, d) {
       Tables.embeddings(s, d).filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>"))

@@ -3,7 +3,9 @@
 
 Compares two BENCH_FULL.json files (as written by graft.Bench) and
 classifies per-query deltas using the per-run telemetry
-[elapsed_sec, gc_delta_ms, load1, storage_free_mb]:
+[elapsed_sec, gc_delta_ms, load1, storage_free_mb, build_sec] (records
+before build_sec carry the first four; the fifth field is not read, so
+old and new records diff alike):
 
   FAILED        every run of the query failed this round (headline -1).
   REGRESSION    min-of-N elevated AND the new min's run saw load
@@ -40,9 +42,9 @@ import sys
 
 
 def min_run(entry):
-    """The run row [elapsed, gc_ms, load1, storage_mb] with min elapsed,
-    padded to 4 fields (round-7-era records recorded only 3 — missing
-    telemetry reads as None, never as an IndexError). Failed runs
+    """The run row [elapsed, gc_ms, load1, storage_mb, ...] with min
+    elapsed, padded to at least 4 fields (round-7-era records recorded
+    only 3 — missing telemetry reads as None, never as an IndexError). Failed runs
     serialize as NEGATIVE elapsed — they never executed the query, so
     their telemetry must not adjudicate the headline."""
     ok = [r for r in entry if r[0] > 0]

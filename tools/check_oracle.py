@@ -35,6 +35,9 @@ def norm(v):
     return v
 
 def main(sf_dir, out_dir):
+    # one line per check, flushed as it lands: a redirected run shows
+    # progress instead of sitting on one stdio buffer for minutes
+    sys.stdout.reconfigure(line_buffering=True)
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
     for t in TABLES:
