@@ -14,7 +14,8 @@ import graft.sources.PartitionedParquet
   *                                  quality, fingerprints, mix
   *                                  membership — sees the exact text
   *                                  that ships)
-  *   2. quality/length gate        (TokenOps.qualityScore — row-local)
+  *   2. quality/length gate        (TokenOps.scores — row-local; 1-2
+  *                                  run as one generator, see passGate)
   *   3. exact dedup                (bag-of-words fingerprint, windowed
   *                                  deterministic survivor)
   *   4. near-dup group resolution  (MinHash LSH pairs → connected
@@ -30,9 +31,12 @@ import graft.sources.PartitionedParquet
   *   8. partitioned parquet sink   (by lang — partition-pruned reads)
   *
   * Every stage is an operator with its own oracle query and/or spec; this
-  * main adds only composition and a funnel report. Stage counts cost one
-  * extra action per stage on the materialized stage frames (localCheckpoint
-  * keeps the lineage flat so no stage recomputes its predecessors).
+  * main adds only composition and a funnel report. The gate, exact-dedup
+  * and near-dedup frames (and the optional stages') are localCheckpointed,
+  * so the lineage stays flat and no stage recomputes its predecessors; a
+  * funnel count over such a frame is two jobs under AQE. The mix is not
+  * checkpointed: it is a content-hash filter over the near-dedup
+  * checkpoint, cheap for its count, the packer and the sink to re-run.
   * Redaction adds no funnel stage: it is a projection, never a drop.
   *
   * Usage: graft.app.Curate <documentsDir> <outDir>
@@ -61,25 +65,36 @@ object Curate {
 
   /** The ROW-LOCAL prefix of the pipeline — PII redaction → quality/
     * length gate → deterministic mix membership — as one pure
-    * projection+filter transform. No aggregation, no state, no shuffle:
+    * generator+filter transform, through the same [[passGate]] as
+    * [[run]]. No aggregation, no state, no shuffle:
     * it applies UNCHANGED to a streaming frame, which is the ingest-time
     * curation shape (gate documents as they arrive; the corpus-wide
     * stages — dedup, group resolution, decontamination, caps — run as
     * periodic batch passes over what landed). Streaming==batch equality
     * is asserted in CurateSpec. */
-  def gate(docs: DataFrame, config: Config = Config()): DataFrame = {
-    val redacted =
-      if (config.redactPii)
-        docs.withColumn("text", TextClean.redact(col("text")))
-      else docs
-    val (nTok, _, quality) = TokenOps.qualityScore(col("text"))
-    val gated = redacted
-      .withColumn("n_tokens", nTok)
-      .withColumn("quality", quality)
-      .filter(col("quality") >= config.minQuality &&
-        col("n_tokens") >= config.minTokens)
-    Sampling.mixByStratum(gated, col("text"), col("lang"),
+  def gate(docs: DataFrame, config: Config = Config()): DataFrame =
+    Sampling.mixByStratum(passGate(docs, config), col("text"), col("lang"),
       config.langFractions, config.defaultFraction, config.seed)
+
+  /** PII redaction and the quality/length gate, scored once per row:
+    * `text` is replaced by its redacted form, `n_tokens` and `quality`
+    * are appended, and rows below the gate are dropped. The scores come
+    * from one [[TokenOps.scores]] struct, and the gate keeps it through
+    * a generator, `explode(filter(array(scores), pass))`, rather than a
+    * Filter over projected columns: Catalyst pushes such a Filter below
+    * the Project (and below a repartition), substituting the whole
+    * redact+tokenize tree into it, so every row ran the redaction and
+    * the split several times, in the scan's single task. No Filter sits
+    * above the generator, so none can be pushed. */
+  private[graft] def passGate(docs: DataFrame, config: Config): DataFrame = {
+    val text =
+      if (config.redactPii) TextClean.redact(col("text")) else col("text")
+    val passed = filter(array(TokenOps.scores(text)), s =>
+      s("quality") >= config.minQuality && s("n_tokens") >= config.minTokens)
+    val kept = docs.columns.map(c =>
+      if (c == "text") col("s.text").as("text") else col(c))
+    docs.select(col("*"), explode(passed).as("s"))
+      .select(kept.toSeq :+ col("s.n_tokens") :+ col("s.quality"): _*)
   }
 
   def run(spark: SparkSession, docsDir: String, outDir: String,
@@ -88,23 +103,12 @@ object Curate {
     val funnel = Seq.newBuilder[(String, Long)]
     funnel += "input" -> raw.count()
 
-    // 1. PII scrub (pure projection; no funnel stage — nothing drops)
-    val docs =
-      if (config.redactPii)
-        raw.withColumn("text", TextClean.redact(col("text")))
-      else raw
-
-    // 2. quality gate
-    val (nTok, _, quality) = TokenOps.qualityScore(col("text"))
-    val gated = docs
-      .withColumn("n_tokens", nTok)
-      .withColumn("quality", quality)
-      .filter(col("quality") >= config.minQuality &&
-        col("n_tokens") >= config.minTokens)
-      .localCheckpoint()
+    // 1-2. PII scrub and quality gate, one pass over the spread scan
+    // (the documents input may be one file: one scan task otherwise)
+    val gated = passGate(Similarity.spread(raw), config).localCheckpoint()
     funnel += "quality_gate" -> gated.count()
 
-    // 2. exact dedup (order-invariant content fingerprint)
+    // 3. exact dedup (order-invariant content fingerprint)
     val exact = Dedup.exactByFingerprint(gated,
         TokenOps.bagOfWordsFingerprint(col("text")), col("doc_id"))
       .localCheckpoint()
@@ -149,7 +153,6 @@ object Curate {
     val mixed = Sampling.mixByStratum(capped, col("text"),
         col("lang"), config.langFractions, config.defaultFraction,
         config.seed)
-      .localCheckpoint()
     funnel += "mixed" -> mixed.count()
 
     // 7. pack into training sequences

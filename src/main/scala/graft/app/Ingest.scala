@@ -14,7 +14,7 @@ import graft.streaming.Incremental
   * landing zone.
   *
   * This is the 100 TB ingest shape: documents are gated AS THEY ARRIVE
-  * (projection+filter — no state, no shuffle, no watermark needed), and
+  * (a generator and a filter — no state, no shuffle, no watermark), and
   * the corpus-wide stages (dedup, group resolution, decontamination,
   * caps — everything in [[Curate.run]] below the gate) run as periodic
   * batch passes over what landed. The checkpoint's file log is the
@@ -41,8 +41,8 @@ object Ingest {
   /** Drain the unprocessed backlog of parquet document files in
     * `landingDir` through the curation gate into `outDir`, exactly once
     * per file (checkpointed). Stateless append mode — the gate is
-    * projection+filter only, which is what makes it streamable
-    * unchanged. */
+    * row-local (a generator and a filter), which is what makes it
+    * streamable unchanged. */
   def runOnce(spark: SparkSession, landingDir: String, schema: StructType,
       checkpointDir: String, outDir: String,
       config: Curate.Config = Curate.Config()): Unit =

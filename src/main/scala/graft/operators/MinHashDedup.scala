@@ -55,15 +55,12 @@ object MinHashDedup {
     // Materialized once: the self-join references this frame twice, and
     // the upstream signature aggregation (shingle explode + 32 min-aggs)
     // would otherwise execute once per side (the SimHash/FuzzyJoin
-    // lesson). Bands-per-doc rows — signature-sized, not corpus-sized.
-    val exploded = df.select(col(idCol),
-        posexplode(col(bandsCol)).as(Seq("band_id", "band_key")))
-      .localCheckpoint()
-    val a = exploded.select(col(idCol).as("id_a"),
-      col("band_id"), col("band_key"))
-    val b = exploded.select(col(idCol).as("id_b"),
-      col("band_id"), col("band_key"))
-    a.join(b, Seq("band_id", "band_key"))
+    // lesson). One row per document; each side explodes its bands,
+    // which would hold `bands`× the rows if checkpointed exploded.
+    val banded = df.select(col(idCol), col(bandsCol)).localCheckpoint()
+    def side(id: String): DataFrame = banded.select(col(idCol).as(id),
+      posexplode(col(bandsCol)).as(Seq("band_id", "band_key")))
+    side("id_a").join(side("id_b"), Seq("band_id", "band_key"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
       .distinct()
@@ -142,10 +139,12 @@ object MinHashDedup {
       threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    val withSig = signatureAgg(df, idCol, textCol, shingleN, numHashes)
+    // a one-file corpus would shingle and hash in one scan task
+    val in = Similarity.spread(df)
+    val withSig = signatureAgg(in, idCol, textCol, shingleN, numHashes)
       .withColumn("bands", bandKeys(col("sig"), bands, r))
     val cands = candidatePairs(withSig, idCol, "bands")
-    val sets = df.select(col(idCol),
+    val sets = in.select(col(idCol),
       shingles(TokenOps.tokenize(col(textCol)), shingleN).as("sh"))
     cands
       .join(sets.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")

@@ -264,8 +264,11 @@ object Similarity {
     * round-robin repartition it (a shuffle of the INPUT rows — linear,
     * cheap against the quadratic join it spreads); at production scale
     * the scan already carries ≥ cores partitions and the plan is
-    * untouched. */
-  private[operators] def spread(df: DataFrame): DataFrame = {
+    * untouched. Only what runs after the shuffle is spread: a Filter
+    * placed above the spread is pushed below the repartition and runs,
+    * with every expression it references, before the shuffle in the
+    * input's few tasks. */
+  private[graft] def spread(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < par) df.repartition(par) else df
   }

@@ -191,19 +191,38 @@ object TokenOps {
       : (Column, Column, Column) = {
     def bound(body: (Column, Column) => Column): Column =
       graft.functions.ColumnOps.bind(tokenize(text), toks =>
-        body(size(toks).cast("double"),
-          size(filter(toks, t => t.isin(stop: _*))).cast("double")))
+        body(size(toks).cast("double"), stopCount(toks, stop)))
     val nTokens = bound((nTok, _) => nTok).cast("long")
     val stopRatio = bound((nTok, nStop) => round(nStop / nTok, 6))
-    val q = bound { (nTok, nStop) =>
-      val avgTokLen =
-        length(regexp_replace(text, " ", "")).cast("double") / nTok
-      round(
-        lit(0.5) * least(nTok / 100.0, lit(1.0)) +
-        lit(0.3) * (lit(1.0) - nStop / nTok) +
-        lit(0.2) * least(avgTokLen / 10.0, lit(1.0)), 6)
-    }
+    val q = bound(quality(text, _, _))
     (nTokens, stopRatio, q)
+  }
+
+  /** The gate's scores of one document as one struct
+    * `(text, n_tokens, quality)`, with the values of [[qualityScore]].
+    * `text` and its tokens are each LET-BOUND once per row, so an
+    * expensive `text` (a redaction chain) and the split run once however
+    * many fields are read; [[qualityScore]]'s three columns tokenize once
+    * each. `text` in the struct is the input as given. */
+  def scores(text: Column, stop: Seq[String] = englishStopwords): Column =
+    graft.functions.ColumnOps.bind(text, t =>
+      graft.functions.ColumnOps.bind(tokenize(t), toks => {
+        val nTok = size(toks).cast("double")
+        struct(t.as("text"), nTok.cast("long").as("n_tokens"),
+          quality(t, nTok, stopCount(toks, stop)).as("quality"))
+      }))
+
+  private def stopCount(toks: Column, stop: Seq[String]): Column =
+    size(filter(toks, t => t.isin(stop: _*))).cast("double")
+
+  /** The quality formula, over a text and its token and stopword counts. */
+  private def quality(text: Column, nTok: Column, nStop: Column): Column = {
+    val avgTokLen =
+      length(regexp_replace(text, " ", "")).cast("double") / nTok
+    round(
+      lit(0.5) * least(nTok / 100.0, lit(1.0)) +
+      lit(0.3) * (lit(1.0) - nStop / nTok) +
+      lit(0.2) * least(avgTokLen / 10.0, lit(1.0)), 6)
   }
 
   /** C4-style document quality flags (Raffel et al. 2020 §2.2) as one

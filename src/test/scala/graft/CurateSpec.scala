@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.app.Curate
+import graft.operators.{Similarity, TextClean}
 import graft.sources.PartitionedParquet
 
 /** The full curation pipeline composed end-to-end on the sf0.001 fixture:
@@ -107,8 +111,8 @@ class CurateSpec extends SparkSpec {
   }
 
   test("row-local gate streams: streaming output == batch output") {
-    // the gate is projection+filter only, so the SAME function runs on a
-    // file stream — ingest-time curation
+    // the gate is row-local (a generator and a filter), so the SAME
+    // function runs on a file stream — ingest-time curation
     val dir = java.nio.file.Files.createTempDirectory("graft-gate-stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf001/documents.parquet"),
@@ -141,5 +145,46 @@ class CurateSpec extends SparkSpec {
     // funnel stays monotone through the new stage
     val counts = r.funnel.map(_._2)
     assert(counts.zip(counts.tail).forall { case (a, b) => b <= a }, r.funnel)
+  }
+
+  /** The PII URL redactions in `df`'s executed plan, AQE stages included. */
+  private def urlRedactions(df: DataFrame): Int = {
+    df.collect()
+    object Plans extends AdaptiveSparkPlanHelper
+    Plans.flatMap(df.queryExecution.executedPlan)(_.expressions.flatMap(
+      _.collect { case r: RegExpReplace if r.regexp.foldable &&
+        String.valueOf(r.regexp.eval()) == TextClean.PiiUrlPattern => r })).size
+  }
+
+  test("the gate redacts each row once: one PII URL regex in the plan") {
+    val raw = Tables.documents(spark, sf001)
+    assert(urlRedactions(Curate.gate(raw)) === 1)
+    // the frame Curate.run checkpoints
+    assert(urlRedactions(
+      Curate.passGate(Similarity.spread(raw), Curate.Config())) === 1)
+  }
+
+  test("the gate stage of a one-file input runs in defaultParallelism tasks") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    val sc = spark.sparkContext
+    assert(Tables.documents(spark, sf001).rdd.getNumPartitions === 1)
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stages.add(e.stageInfo.name -> e.stageInfo.numTasks)
+    }
+    sc.addSparkListener(listener)
+    try Curate.run(spark, sf001,
+      java.nio.file.Files.createTempDirectory("graft-curate-par").toString)
+    finally {
+      org.apache.spark.ListenerBusAccess.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    // the gate is run's first checkpoint; its stages carry its call site
+    import scala.jdk.CollectionConverters._
+    val checkpoints = stages.asScala.toSeq
+      .filter(_._1.startsWith("localCheckpoint at Curate.scala"))
+    val gate = checkpoints.filter(_._1 == checkpoints.head._1)
+    assert(gate.map(_._2).max === sc.defaultParallelism, checkpoints)
   }
 }

@@ -82,6 +82,16 @@ class TokenOpsSpec extends SparkSpec {
     assert(out(1) > out(2), s"content-heavy doc should outscore stopword soup: $out")
   }
 
+  test("scores struct carries qualityScore's n_tokens and quality") {
+    val (n, _, q) = TokenOps.qualityScore($"text")
+    val s = TokenOps.scores($"text")
+    val docs = Tables.documents(spark, sf001)
+    val diff = docs.select($"text", n.as("n"), q.as("q"), s.as("s"))
+      .filter(!($"s.text" <=> $"text") ||
+        !($"s.n_tokens" <=> $"n") || !($"s.quality" <=> $"q"))
+    assert(docs.count() > 0 && diff.count() === 0)
+  }
+
   test("gopher rules: clean prose passes, degenerate docs fail the right rule") {
     val df = Seq(
       // 1: clean 12-token prose -> pass

@@ -17,7 +17,13 @@ BENCHMARK.json declares: each side's median and quartiles, the change's
 wins (ties count for neither side), whether the medians differ by more
 than the parent's quartile spread, and whether the change's median is
 worse than the parent's by more than the metric's bound. It also counts
-failed runs and failed operations per side.
+failed runs and failed operations per side, and lists each pair's timed
+iteration counts beside its `cache_peak_mb`. `attempted` counts the
+untimed warm-up's operations too, so a side ran
+(attempted - warm-up ops) / ops per iteration timed iterations
+(`OPS_PER_ITERATION`). The cache total grows with every iteration, so
+pairs whose sides ran different counts are flagged: their `cache_peak_mb`
+does not compare like with like.
 
 `--jsonl` appends one JSON row per run as it finishes. `--dry-run`
 checks the summary on canned rows and runs no benchmark.
@@ -30,6 +36,11 @@ import subprocess
 import sys
 
 SIDES = ("parent", "change")
+
+# (warm-up ops, ops per timed iteration) of each perfbench workload: the
+# chain's warm-up skips LinearSVC, the query suite's makes two passes
+OPS_PER_ITERATION = {"sentiment_chain": (6, 7), "curate_corpus": (1, 1),
+                     "query_suite": (18, 9)}
 
 
 def seeds_arg(text):
@@ -60,6 +71,15 @@ def run_once(root, workload, seed, seconds):
             "metrics": {k: v["value"] for k, v in res.get("metrics", {}).items()}}
 
 
+def timed_iterations(row):
+    """Timed iterations of one run row, None for an unknown workload or a
+    run that reported no operations."""
+    warm, per = OPS_PER_ITERATION.get(row["workload"], (None, None))
+    if per is None or row["attempted"] <= warm:
+        return None
+    return (row["attempted"] - warm) / per
+
+
 def quartiles(xs):
     if len(xs) < 2:
         return (xs[0], xs[0]) if xs else (float("nan"), float("nan"))
@@ -74,7 +94,15 @@ def summarize(rows, decls):
     for r in rows:
         by.setdefault((r["workload"], r["seed"]), {})[r["side"]] = r
     pairs = [p for _, p in sorted(by.items()) if len(p) == 2]
-    out = {"pairs": len(pairs), "metrics": {}, "failures": {}}
+    out = {"pairs": len(pairs), "metrics": {}, "failures": {}, "iterations": []}
+    for (workload, seed), p in sorted(by.items()):
+        if len(p) == 2:
+            its = {side: timed_iterations(p[side]) for side in SIDES}
+            out["iterations"].append({
+                "workload": workload, "seed": seed, "iterations": its,
+                "cache_peak_mb": {side: p[side]["metrics"].get("cache_peak_mb")
+                                  for side in SIDES},
+                "differ": its["parent"] != its["change"]})
     for side in SIDES:
         out["failures"][side] = {
             "runs": sum(1 for p in pairs if p[side]["rc"] != 0),
@@ -117,6 +145,16 @@ def report(s):
             f"{m['rel']:>+7.1%} {wins:>6} "
             f"{'yes' if m['beyond_spread'] else 'no':>8} "
             f"{'WORSE' if m['over_bound'] else 'ok':>7}")
+    def num(x, fmt):
+        return "-" if x is None else format(x, fmt)
+    lines.append(f"{'seed':>6} {'iterations parent/change':>24} "
+                 f"{'cache_peak_mb parent/change':>28}")
+    for r in s["iterations"]:
+        its, mb = r["iterations"], r["cache_peak_mb"]
+        lines.append(
+            f"{r['seed']:>6} {num(its['parent'], 'g') + '/' + num(its['change'], 'g'):>24} "
+            f"{num(mb['parent'], '.4g') + '/' + num(mb['change'], '.4g'):>28}"
+            + ("  iterations differ" if r["differ"] else ""))
     for side, f in s["failures"].items():
         lines.append(f"{side}: {f['runs']} failed runs, "
                      f"{f['ops']}/{f['attempted']} failed operations")
@@ -135,12 +173,17 @@ def self_test():
     for i, seed in enumerate(range(1, 11)):
         for side in SIDES:
             up = side == "change"
-            rows.append({"workload": "w", "seed": seed, "side": side, "rc": 0,
-                         "attempted": 7, "failed": 0, "metrics": {
+            rows.append({"workload": "curate_corpus", "seed": seed, "side": side,
+                         "rc": 0, "failed": 0,
+                         # 1 warm-up op + 6 timed iterations, 7 on the
+                         # change's side of the last pair
+                         "attempted": 8 if up and seed == 10 else 7,
+                         "metrics": {
                              # the change wins 9 pairs and ties the tenth
                              "ops_per_s": 1.0 + 0.01 * i + (0.5 if up and i else 0),
                              # and is 40% slower on p50 in every pair
-                             "op_p50_s": 1.4 if up else 1.0}})
+                             "op_p50_s": 1.4 if up else 1.0,
+                             "cache_peak_mb": 20.0 if up else 24.0}})
     rows.append(dict(rows[0], seed=99))  # an unpaired run is ignored
     s = summarize(rows, decls)
     ops, p50 = s["metrics"]["ops_per_s"], s["metrics"]["op_p50_s"]
@@ -152,10 +195,21 @@ def self_test():
     assert ops["beyond_spread"] and not ops["over_bound"], ops
     assert (p50["wins"], p50["losses"]) == (0, 10), p50
     assert p50["beyond_spread"] and p50["over_bound"], p50
-    assert s["failures"]["change"] == {"runs": 0, "ops": 0, "attempted": 70}
+    assert s["failures"]["change"] == {"runs": 0, "ops": 0, "attempted": 71}
+    its = s["iterations"]
+    assert [r["seed"] for r in its] == list(range(1, 11)), its
+    assert its[0]["iterations"] == {"parent": 6, "change": 6}, its[0]
+    assert its[0]["cache_peak_mb"] == {"parent": 24.0, "change": 20.0}, its[0]
+    assert [r["seed"] for r in its if r["differ"]] == [10], its
+    assert its[9]["iterations"] == {"parent": 6, "change": 7}, its[9]
+    assert timed_iterations({"workload": "sentiment_chain", "attempted": 20}) == 2
+    assert timed_iterations({"workload": "curate_corpus", "attempted": 0}) is None
+    text = report(s)
+    assert text.count("iterations differ") == 1, text
+    assert "6/7" in text and "24/20" in text, text
     assert [order(seed) for seed in (11, 12)] == [SIDES, SIDES[::-1]]
     assert seeds_arg("11-13,20") == [11, 12, 13, 20]
-    print(report(s))
+    print(text)
     print("self-test OK")
 
 
