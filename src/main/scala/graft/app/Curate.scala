@@ -114,9 +114,10 @@ object Curate {
       .localCheckpoint()
     funnel += "exact_dedup" -> exact.count()
 
-    // 4. near-dup groups -> survivors
-    val pairs = MinHashDedup.nearDuplicates(exact, "doc_id", "text",
-      threshold = config.jaccardThreshold)
+    // 4. near-dup groups -> survivors (spread: the exact-dedup window
+    // leaves few partitions, and the shingle explode would run in them)
+    val pairs = MinHashDedup.nearDuplicates(Similarity.spread(exact),
+      "doc_id", "text", threshold = config.jaccardThreshold)
     val resolved = DedupGroups.resolve(exact, "doc_id", pairs)
       .localCheckpoint()
     funnel += "near_dedup" -> resolved.count()

@@ -139,12 +139,10 @@ object MinHashDedup {
       threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    // a one-file corpus would shingle and hash in one scan task
-    val in = Similarity.spread(df)
-    val withSig = signatureAgg(in, idCol, textCol, shingleN, numHashes)
+    val withSig = signatureAgg(df, idCol, textCol, shingleN, numHashes)
       .withColumn("bands", bandKeys(col("sig"), bands, r))
     val cands = candidatePairs(withSig, idCol, "bands")
-    val sets = in.select(col(idCol),
+    val sets = df.select(col(idCol),
       shingles(TokenOps.tokenize(col(textCol)), shingleN).as("sh"))
     cands
       .join(sets.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")

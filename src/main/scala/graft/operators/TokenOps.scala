@@ -199,17 +199,18 @@ object TokenOps {
   }
 
   /** The gate's scores of one document as one struct
-    * `(text, n_tokens, quality)`, with the values of [[qualityScore]].
+    * `(text, n_tokens, quality)`, with the values of [[qualityScore]]
+    * under its default stoplist.
     * `text` and its tokens are each LET-BOUND once per row, so an
     * expensive `text` (a redaction chain) and the split run once however
     * many fields are read; [[qualityScore]]'s three columns tokenize once
     * each. `text` in the struct is the input as given. */
-  def scores(text: Column, stop: Seq[String] = englishStopwords): Column =
+  def scores(text: Column): Column =
     graft.functions.ColumnOps.bind(text, t =>
       graft.functions.ColumnOps.bind(tokenize(t), toks => {
         val nTok = size(toks).cast("double")
         struct(t.as("text"), nTok.cast("long").as("n_tokens"),
-          quality(t, nTok, stopCount(toks, stop)).as("quality"))
+          quality(t, nTok, stopCount(toks, englishStopwords)).as("quality"))
       }))
 
   private def stopCount(toks: Column, stop: Seq[String]): Column =

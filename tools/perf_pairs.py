@@ -18,12 +18,10 @@ wins (ties count for neither side), whether the medians differ by more
 than the parent's quartile spread, and whether the change's median is
 worse than the parent's by more than the metric's bound. It also counts
 failed runs and failed operations per side, and lists each pair's timed
-iteration counts beside its `cache_peak_mb`. `attempted` counts the
-untimed warm-up's operations too, so a side ran
-(attempted - warm-up ops) / ops per iteration timed iterations
-(`OPS_PER_ITERATION`). The cache total grows with every iteration, so
-pairs whose sides ran different counts are flagged: their `cache_peak_mb`
-does not compare like with like.
+iteration counts (the `iterations` of each run's `--record` file) beside
+its `cache_peak_mb`. The cache total grows with every iteration, so pairs
+whose sides ran different counts are flagged: their `cache_peak_mb` does
+not compare like with like.
 
 `--jsonl` appends one JSON row per run as it finishes. `--dry-run`
 checks the summary on canned rows and runs no benchmark.
@@ -34,13 +32,9 @@ import os
 import statistics
 import subprocess
 import sys
+import tempfile
 
 SIDES = ("parent", "change")
-
-# (warm-up ops, ops per timed iteration) of each perfbench workload: the
-# chain's warm-up skips LinearSVC, the query suite's makes two passes
-OPS_PER_ITERATION = {"sentiment_chain": (6, 7), "curate_corpus": (1, 1),
-                     "query_suite": (18, 9)}
 
 
 def seeds_arg(text):
@@ -57,27 +51,26 @@ def order(seed):
 
 
 def run_once(root, workload, seed, seconds):
-    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
-    p = subprocess.run(cmd, cwd=root, stdout=subprocess.PIPE,
-                       stderr=subprocess.DEVNULL, text=True)
+    with tempfile.TemporaryDirectory() as tmp:
+        record = os.path.join(tmp, "record.json")
+        cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+               "--seed", str(seed), "--seconds", str(seconds), "--trace", "0",
+               "--record", record]
+        p = subprocess.run(cmd, cwd=root, stdout=subprocess.PIPE,
+                           stderr=subprocess.DEVNULL, text=True)
+        try:
+            with open(record) as f:
+                iterations = json.load(f)["iterations"]
+        except (OSError, ValueError, KeyError):
+            iterations = None
     lines = p.stdout.strip().splitlines()
     try:
         res = json.loads(lines[-1])
     except (IndexError, ValueError):
         res = {"attempted": 0, "failed": 0, "metrics": {}}
     return {"rc": p.returncode, "attempted": res.get("attempted", 0),
-            "failed": res.get("failed", 0),
+            "failed": res.get("failed", 0), "iterations": iterations,
             "metrics": {k: v["value"] for k, v in res.get("metrics", {}).items()}}
-
-
-def timed_iterations(row):
-    """Timed iterations of one run row, None for an unknown workload or a
-    run that reported no operations."""
-    warm, per = OPS_PER_ITERATION.get(row["workload"], (None, None))
-    if per is None or row["attempted"] <= warm:
-        return None
-    return (row["attempted"] - warm) / per
 
 
 def quartiles(xs):
@@ -97,7 +90,7 @@ def summarize(rows, decls):
     out = {"pairs": len(pairs), "metrics": {}, "failures": {}, "iterations": []}
     for (workload, seed), p in sorted(by.items()):
         if len(p) == 2:
-            its = {side: timed_iterations(p[side]) for side in SIDES}
+            its = {side: p[side]["iterations"] for side in SIDES}
             out["iterations"].append({
                 "workload": workload, "seed": seed, "iterations": its,
                 "cache_peak_mb": {side: p[side]["metrics"].get("cache_peak_mb")
@@ -174,10 +167,10 @@ def self_test():
         for side in SIDES:
             up = side == "change"
             rows.append({"workload": "curate_corpus", "seed": seed, "side": side,
-                         "rc": 0, "failed": 0,
-                         # 1 warm-up op + 6 timed iterations, 7 on the
-                         # change's side of the last pair
-                         "attempted": 8 if up and seed == 10 else 7,
+                         "rc": 0, "failed": 0, "attempted": 7,
+                         # 6 timed iterations, 7 on the change's side of
+                         # the last pair
+                         "iterations": 7 if up and seed == 10 else 6,
                          "metrics": {
                              # the change wins 9 pairs and ties the tenth
                              "ops_per_s": 1.0 + 0.01 * i + (0.5 if up and i else 0),
@@ -195,15 +188,13 @@ def self_test():
     assert ops["beyond_spread"] and not ops["over_bound"], ops
     assert (p50["wins"], p50["losses"]) == (0, 10), p50
     assert p50["beyond_spread"] and p50["over_bound"], p50
-    assert s["failures"]["change"] == {"runs": 0, "ops": 0, "attempted": 71}
+    assert s["failures"]["change"] == {"runs": 0, "ops": 0, "attempted": 70}
     its = s["iterations"]
     assert [r["seed"] for r in its] == list(range(1, 11)), its
     assert its[0]["iterations"] == {"parent": 6, "change": 6}, its[0]
     assert its[0]["cache_peak_mb"] == {"parent": 24.0, "change": 20.0}, its[0]
     assert [r["seed"] for r in its if r["differ"]] == [10], its
     assert its[9]["iterations"] == {"parent": 6, "change": 7}, its[9]
-    assert timed_iterations({"workload": "sentiment_chain", "attempted": 20}) == 2
-    assert timed_iterations({"workload": "curate_corpus", "attempted": 0}) is None
     text = report(s)
     assert text.count("iterations differ") == 1, text
     assert "6/7" in text and "24/20" in text, text
