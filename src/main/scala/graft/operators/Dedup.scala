@@ -24,10 +24,15 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   /** Deterministic exact dedup: keep the row with the smallest `tiebreak`
-    * per distinct combination of `keys`. */
-  def exact(df: DataFrame, keys: Seq[String], tiebreak: Column): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(tiebreak.asc)
-    df.withColumn("__rn", row_number().over(w))
+    * per distinct combination of `keys`. With `groupSizeCol`, each
+    * survivor also carries its key group's row count (a second window
+    * over the same partitioning: no extra shuffle), so the survivors'
+    * sum of it is the input's row count. */
+  def exact(df: DataFrame, keys: Seq[String], tiebreak: Column,
+      groupSizeCol: Option[String] = None): DataFrame = {
+    val part = Window.partitionBy(keys.map(col): _*)
+    val ranked = df.withColumn("__rn", row_number().over(part.orderBy(tiebreak.asc)))
+    groupSizeCol.fold(ranked)(c => ranked.withColumn(c, count(lit(1)).over(part)))
       .filter(col("__rn") === 1)
       .drop("__rn")
   }

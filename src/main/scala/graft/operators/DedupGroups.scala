@@ -16,10 +16,13 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *    tiny fraction of the corpus (dup-rate × corpus, post-LSH), so the
   *    edge list — NOT the corpus — is collected to the driver and solved
   *    with union-find in O(E α(E)), then broadcast back as a mapping.
-  *    One collect of the already-materialized pair set replaces a
-  *    multi-round join loop whose per-round fixed cost (2 shuffles + a
-  *    checkpoint + a count) dwarfs the actual work at this size. Even at
-  *    100 TB corpus scale, 2M duplicate PAIRS is ~32 MB — driver-safe.
+  *    One collect, bounded at [[CollectThreshold]] + 1 rows, both picks
+  *    the engine and IS the edge list: the pair set (often an expensive
+  *    similarity join) runs once, with no checkpoint and no count job,
+  *    and replaces a multi-round join loop whose per-round fixed cost (2
+  *    shuffles + a checkpoint + a count) dwarfs the actual work at this
+  *    size. Even at 100 TB corpus scale, 2M duplicate PAIRS is ~32 MB —
+  *    driver-safe.
   *  - '''large graphs''': iterative min-label propagation with pointer
   *    jumping (comp-of-comp), converging in O(log diameter) rounds;
   *    each round is one neighbor-min shuffle + one self-join. For
@@ -27,7 +30,13 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *    extend to large-star/small-star (Kiveris et al., "Connected
   *    Components in MapReduce and Beyond", SoCC'14). Lineage per round
   *    is cut with localCheckpoint (iterative self-joins otherwise stack
-  *    exponentially growing plans).
+  *    exponentially growing plans). The pair set is checkpointed first
+  *    (the bounded collect's rows are not the whole of it).
+  *
+  * [[resolve]] drops the non-survivors with an anti-join against the
+  * loser set: broadcast from the driver's labels on the small path (one
+  * narrow stage over the input, cheap for several readers to re-run),
+  * and materialized on the distributed path, where it is a shuffle join.
   */
 object DedupGroups {
 
@@ -54,25 +63,31 @@ object DedupGroups {
   def connectedComponents(ids: DataFrame, idCol: String, pairs: DataFrame,
       maxRounds: Int = 25,
       collectThreshold: Long = CollectThreshold): DataFrame = {
-    // Materialize the pair set BEFORE branching on its size (and before
-    // mirroring it in the distributed path): `pairs` is often an
-    // expensive similarity join, and both the count and the downstream
-    // consumption must not re-execute it.
-    val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint()
-    val nEdges = p.count()
-    val (labels, small) =
-      if (nEdges <= collectThreshold) (driverComponents(p), true)
-      else (distributedComponents(p, maxRounds), false)
+    val (labels, small) = pairComponents(pairs, maxRounds, collectThreshold)
     ids.select(col(idCol).as("id"))
       .join(if (small) broadcast(labels) else labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
   }
 
+  /** (id, comp) over the vertices of `pairs` only, and whether the
+    * labels came from the driver path (a small LocalRelation). One
+    * collect of at most `collectThreshold` + 1 edges picks the path; on
+    * the driver path it is the whole edge list, so `pairs` runs once. */
+  private def pairComponents(pairs: DataFrame, maxRounds: Int,
+      collectThreshold: Long): (DataFrame, Boolean) = {
+    val p = pairs.select(col("id_a"), col("id_b"))
+    val edges = p.limit(math.min(collectThreshold + 1, Int.MaxValue).toInt)
+      .collect()
+    if (edges.length <= collectThreshold)
+      (driverComponents(p, edges), true)
+    else (distributedComponents(p.localCheckpoint(), maxRounds), false)
+  }
+
   /** Driver-side union-find over a collected edge list: path-compressed
     * find, union by attachment, then one pass labeling every vertex with
     * its component's min id. Returns a LocalRelation (id, comp) typed
-    * like the edge columns. */
-  private def driverComponents(p: DataFrame): DataFrame = {
+    * like `p`'s edge columns. */
+  private def driverComponents(p: DataFrame, edges: Array[Row]): DataFrame = {
     val spark = p.sparkSession
     val parent = new java.util.HashMap[Any, Any]()
     def find(x: Any): Any = {
@@ -82,7 +97,7 @@ object DedupGroups {
       while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
       r
     }
-    p.collect().foreach { row =>
+    edges.foreach { row =>
       if (!row.isNullAt(0) && !row.isNullAt(1)) {
         val a = row.get(0); val b = row.get(1)
         if (!parent.containsKey(a)) parent.put(a, a)
@@ -179,15 +194,21 @@ object DedupGroups {
     * `df` — a pair set mentioning foreign ids (e.g. pairs computed
     * against a superset corpus) would otherwise let a foreign id win
     * the component min, making every `df` row of that component
-    * non-survivor and dropping the whole group. */
+    * non-survivor and dropping the whole group.
+    *
+    * The drop is an anti-join against the losers (pair vertices whose
+    * component is not themselves): broadcast on the driver path, so the
+    * result is one narrow stage over `df`; checkpointed on the
+    * distributed path, where the anti-join shuffles `df`. */
   def resolve(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
     val ids = df.select(col(idCol))
     val guarded = pairs
       .join(ids.select(col(idCol).as("id_a")).distinct(), Seq("id_a"), "left_semi")
       .join(ids.select(col(idCol).as("id_b")).distinct(), Seq("id_b"), "left_semi")
-    val comps = connectedComponents(ids, idCol, guarded)
-    df.join(comps.filter(col("comp") =!= col("id"))
-        .select(col("id").as(idCol)),
-      Seq(idCol), "left_anti")
+    val (labels, small) = pairComponents(guarded, 25, CollectThreshold)
+    val losers = labels.filter(col("comp") =!= col("id"))
+      .select(col("id").as(idCol))
+    if (small) df.join(broadcast(losers), Seq(idCol), "left_anti")
+    else df.join(losers, Seq(idCol), "left_anti").localCheckpoint()
   }
 }

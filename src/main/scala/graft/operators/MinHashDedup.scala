@@ -2,17 +2,24 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Columns
+import graft.functions.MinHashBandsExpr
 
 /** MinHash + LSH near-duplicate detection over text (the standard
   * shingle → minhash → band → bucket-join cascade).
   *
-  * Everything up to the bucket join is ROW-LOCAL — shingles, the H-wide
-  * minhash signature, and the band keys are computed as HOF expressions
-  * inside one projection (no fitting job, no shuffle, no UDF). The only
-  * shuffles are the band-bucket self-join (keys are 64-bit hashes →
-  * uniformly distributed, no skew) and the final candidate verification
-  * join. That is the correct shape at 100 TB: cost scales with
-  * n·bands + Σ bucket² instead of n².
+  * Everything up to the bucket join is ROW-LOCAL: the shingles are
+  * higher-order-function expressions over the token array, and the
+  * H-wide minhash signature and its band keys are ONE expression
+  * ([[bandsOf]], [[graft.functions.MinHashBandsExpr]]) that reads each
+  * shingle once — no fitting job, no shuffle, no UDF. The only shuffles
+  * are the band-bucket self-join (keys are 64-bit hashes → uniformly
+  * distributed, no skew) and the candidate verification joins, which
+  * shingle only the documents in a candidate pair. That is the correct
+  * shape at 100 TB: cost scales with n·bands + Σ bucket² instead of n².
+  * A caller that already holds the tokens (graft.app.Curate, from its
+  * quality gate) derives the band column from them and runs
+  * [[candidatePairs]] and [[verifyPairs]] itself.
   *
   * Hash function: xxhash64 (Spark built-in, deterministic across runs and
   * executors). Seeded per-hash by prepending the hash index to the input.
@@ -36,29 +43,38 @@ object MinHashDedup {
     array_distinct(rawShingles(tokens, n))
 
   /** H-wide minhash signature: sig_i = min over shingles of
-    * xxhash64(i, shingle). Row-local. */
+    * xxhash64(i, shingle). Row-local, one `transform` per hash: the
+    * reference [[bandsOf]]'s kernel is tested against. */
   def signature(shingleCol: Column, numHashes: Int): Column =
     array((0 until numHashes).map { i =>
       array_min(transform(shingleCol, s => xxhash64(lit(i), s)))
     }: _*)
 
-  /** LSH band keys: hash of each r-row slice of the signature. */
+  /** LSH band keys: hash of each r-row slice of the signature (with
+    * [[signature]], the reference form of [[bandsOf]]). */
   def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
     array((0 until bands).map { j =>
       xxhash64(lit(j), slice(sig, j * rowsPerBand + 1, rowsPerBand))
     }: _*)
 
+  /** The LSH band keys of a token array: MinHash over its distinct word
+    * `shingleN`-gram shingles, computed by one expression
+    * ([[graft.functions.MinHashBandsExpr]], equal to
+    * `bandKeys(signature(shingles(tokens)))`). Null for a document
+    * shorter than `shingleN` tokens: it has no shingles and never becomes
+    * a candidate. */
+  def bandsOf(tokens: Column, shingleN: Int = 3, numHashes: Int = 32,
+      bands: Int = 8): Column =
+    Columns.of(MinHashBandsExpr(
+      Columns.expr(shingles(tokens, shingleN)), numHashes, bands))
+
   /** Candidate pairs: documents sharing at least one band bucket.
-    * Returns (id_a, id_b) with id_a < id_b, distinct. */
+    * Returns (id_a, id_b) with id_a < id_b, distinct. `df` is read once
+    * per join side, so pass a materialized frame (or one cheap to
+    * re-run); a null band array yields no rows. */
   def candidatePairs(df: DataFrame, idCol: String, bandsCol: String)
       : DataFrame = {
-    // Materialized once: the self-join references this frame twice, and
-    // the upstream signature aggregation (shingle explode + 32 min-aggs)
-    // would otherwise execute once per side (the SimHash/FuzzyJoin
-    // lesson). One row per document; each side explodes its bands,
-    // which would hold `bands`× the rows if checkpointed exploded.
-    val banded = df.select(col(idCol), col(bandsCol)).localCheckpoint()
-    def side(id: String): DataFrame = banded.select(col(idCol).as(id),
+    def side(id: String): DataFrame = df.select(col(idCol).as(id),
       posexplode(col(bandsCol)).as(Seq("band_id", "band_key")))
     side("id_a").join(side("id_b"), Seq("band_id", "band_key"))
       .filter(col("id_a") < col("id_b"))
@@ -66,22 +82,24 @@ object MinHashDedup {
       .distinct()
   }
 
-  /** Signature via explode + 32 codegen'd min-aggregates (ONE shuffle on
-    * the doc id). The row-local HOF form ([[signature]]) is semantically
-    * identical but must not feed further derived columns: CollapseProject
-    * inlines the whole shingle expression tree into every one of the 32
-    * hash uses and again into every band key (measured: `lower()` alone
-    * evaluated ~300x per row, interpreted). The aggregate form computes
-    * shingles exactly once and keeps everything in whole-stage codegen. */
-  def signatureAgg(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int): DataFrame = {
-    val ex = df.select(col(idCol),
-      explode(shingles(TokenOps.tokenize(col(textCol)), shingleN)).as("s"))
-    val mins = (0 until numHashes).map(i =>
-      min(xxhash64(lit(i), col("s"))).as(s"__h$i"))
-    ex.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
-      .select(col(idCol),
-        array((0 until numHashes).map(i => col(s"__h$i")): _*).as("sig"))
+  /** EXACT Jaccard verification of candidate pairs: (id_a, id_b, jaccard)
+    * for the pairs of `cands` whose distinct `shingleN`-gram shingle sets
+    * have jaccard >= threshold. Each side's text is joined to the pairs
+    * first and shingled after, so only documents in a candidate pair are
+    * shingled, not every row of `df`. */
+  def verifyPairs(cands: DataFrame, df: DataFrame, idCol: String,
+      textCol: String, shingleN: Int, threshold: Double): DataFrame = {
+    def side(s: String): DataFrame =
+      df.select(col(idCol).as(s"id_$s"), col(textCol).as(s"text_$s"))
+    def sh(s: String): Column =
+      shingles(TokenOps.tokenize(col(s"text_$s")), shingleN)
+    cands.join(side("a"), "id_a").join(side("b"), "id_b")
+      .select(col("id_a"), col("id_b"), sh("a").as("sh_a"), sh("b").as("sh_b"))
+      .withColumn("jaccard", round(
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+        size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 6))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
   /** EXACT Jaccard similarity join with lossless prefix filtering.
@@ -133,24 +151,17 @@ object MinHashDedup {
   /** Full near-dup pipeline: tokenize → shingle → minhash → band →
     * candidates → EXACT Jaccard verification on candidates only.
     * Output: (id_a, id_b, jaccard) for pairs with jaccard >= threshold.
+    * The (id, bands) frame is materialized once, one row per document,
+    * because the band self-join reads it on both sides.
     */
   def nearDuplicates(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val withSig = signatureAgg(df, idCol, textCol, shingleN, numHashes)
-      .withColumn("bands", bandKeys(col("sig"), bands, r))
-    val cands = candidatePairs(withSig, idCol, "bands")
-    val sets = df.select(col(idCol),
-      shingles(TokenOps.tokenize(col(textCol)), shingleN).as("sh"))
-    cands
-      .join(sets.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sets.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("jaccard", round(
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-        size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    val banded = df.select(col(idCol), bandsOf(TokenOps.tokenize(
+        col(textCol)), shingleN, numHashes, bands).as("bands"))
+      .localCheckpoint()
+    verifyPairs(candidatePairs(banded, idCol, "bands"), df, idCol, textCol,
+      shingleN, threshold)
   }
 }

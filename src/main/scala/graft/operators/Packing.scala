@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,13 +23,15 @@ import org.apache.spark.sql.functions._
   */
 object Packing {
 
-  /** (id, shard, seq_id, n_tokens) per document. */
-  def packSequences(df: DataFrame, idCol: String, textCol: String,
+  /** (id, shard, seq_id, n_tokens) per document, where `nTokens` is the
+    * document's token count (e.g. [[TokenOps.tokenCount]] of its text,
+    * or a count the caller already holds). */
+  def packSequences(df: DataFrame, idCol: String, nTokens: Column,
       tokensPerSeq: Int, shards: Int = 32): DataFrame = {
     val w = Window.partitionBy(col("shard")).orderBy(col(idCol))
     df.select(col(idCol),
         pmod(col(idCol), lit(shards)).as("shard"),
-        TokenOps.tokenCount(col(textCol)).as("n_tokens"))
+        nTokens.cast("long").as("n_tokens"))
       .withColumn("cum", sum(col("n_tokens")).over(w))
       .withColumn("seq_id",
         floor((col("cum") - col("n_tokens")) / lit(tokensPerSeq.toDouble))

@@ -182,7 +182,12 @@ object TokenOps {
     * whitespace-run split). Word-order-permuted duplicates collide — the
     * cheap first-pass signal in a dedup cascade before MinHash. */
   def bagOfWordsFingerprint(text: Column): Column =
-    md5(concat_ws(" ", array_sort(array_distinct(tokenize(text)))))
+    fingerprintOf(tokenize(text))
+
+  /** [[bagOfWordsFingerprint]] of already-[[tokenize]]d text, for callers
+    * that hold the tokens (the [[scores]] struct carries them). */
+  def fingerprintOf(tokens: Column): Column =
+    md5(concat_ws(" ", array_sort(array_distinct(tokens))))
 
   /** Deterministic document quality score in [0,1] from length, stopword
     * ratio, and mean token length (heuristics only — no RNG, no model),
@@ -199,17 +204,20 @@ object TokenOps {
   }
 
   /** The gate's scores of one document as one struct
-    * `(text, n_tokens, quality)`, with the values of [[qualityScore]]
-    * under its default stoplist.
+    * `(text, tokens, n_tokens, quality)`, with the values of
+    * [[qualityScore]] under its default stoplist.
     * `text` and its tokens are each LET-BOUND once per row, so an
     * expensive `text` (a redaction chain) and the split run once however
     * many fields are read; [[qualityScore]]'s three columns tokenize once
-    * each. `text` in the struct is the input as given. */
+    * each. `text` in the struct is the input as given, and `tokens` is
+    * its [[tokenize]] array, for signals derived from the same split
+    * ([[fingerprintOf]], MinHash band keys). */
   def scores(text: Column): Column =
     graft.functions.ColumnOps.bind(text, t =>
       graft.functions.ColumnOps.bind(tokenize(t), toks => {
         val nTok = size(toks).cast("double")
-        struct(t.as("text"), nTok.cast("long").as("n_tokens"),
+        struct(t.as("text"), toks.as("tokens"),
+          nTok.cast("long").as("n_tokens"),
           quality(t, nTok, stopCount(toks, englishStopwords)).as("quality"))
       }))
 

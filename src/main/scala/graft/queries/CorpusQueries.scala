@@ -187,6 +187,20 @@ object CorpusQueries extends QueryModule {
   private val curatedFullCache =
     new graft.util.SessionCache[org.apache.spark.sql.DataFrame]
 
+  /** The two semantic-curation queries' first stages: Curate's
+    * quality/length gate without the PII scrub (one scoring pass per
+    * row), then exact dedup on the bag-of-words fingerprint of the
+    * gate's tokens; (doc_id, text, source, n_tokens, quality). */
+  private def curatedGate(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val gated = graft.app.Curate.passGate(docs,
+      graft.app.Curate.Config(redactPii = false))
+    graft.operators.Dedup.exactByFingerprint(gated,
+        TokenOps.fingerprintOf(col("tokens")), col("doc_id"))
+      .select(col("doc_id"), col("text"), col("source"), col("n_tokens"),
+        col("quality"))
+  }
+
   /** One BPE training per (session, dataset) — MERGES bounded
     * aggregations over the vocabulary-sized symbol table; the merge
     * table itself is MERGES rows. */
@@ -545,13 +559,7 @@ object CorpusQueries extends QueryModule {
     // over one materialized stage, zero repeated windows).
     "q_curate_semantic" -> ((s, d) => {
       val curated = curatedCache.getOrElseUpdate(s, d) {
-        val (nTok, _, q) = TokenOps.qualityScore(col("text"))
-        val gated = Tables.documents(s, d)
-          .select(col("doc_id"), col("text"), col("source"),
-            nTok.as("n_tokens"), q.as("quality"))
-          .filter(col("quality") >= 0.55 && col("n_tokens") >= 5)
-        val deduped = graft.operators.Dedup.exactByFingerprint(gated,
-          TokenOps.bagOfWordsFingerprint(col("text")), col("doc_id"))
+        val deduped = curatedGate(Tables.documents(s, d))
         val semDropped = SemDedup.pairs(Tables.embeddings(s, d), "vec_id",
             "embedding", model(s, d), SEMTAU,
             guardMemoKey = Some(s"semdedup|$d"))
@@ -589,13 +597,7 @@ object CorpusQueries extends QueryModule {
           .select(col("doc_id"),
             graft.operators.TextClean.normalizeNfc(dirty).as("text"),
             col("source"))
-        val (nTok, _, qual) = TokenOps.qualityScore(col("text"))
-        val gated = normed
-          .select(col("doc_id"), col("text"), col("source"),
-            nTok.as("n_tokens"), qual.as("quality"))
-          .filter(col("quality") >= 0.55 && col("n_tokens") >= 5)
-        val deduped = graft.operators.Dedup.exactByFingerprint(gated,
-          TokenOps.bagOfWordsFingerprint(col("text")), col("doc_id"))
+        val deduped = curatedGate(normed)
         val semDropped = SemDedup.pairs(Tables.embeddings(s, d), "vec_id",
             "embedding", model(s, d), SEMTAU,
             guardMemoKey = Some(s"semdedup|$d"))

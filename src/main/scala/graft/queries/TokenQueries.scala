@@ -276,20 +276,14 @@ object TokenQueries extends QueryModule {
     // Composite curation pipeline — the operators composed the way a
     // training-data pass actually runs them: quality/length gate →
     // exact dedup by bag-of-words fingerprint (deterministic min-doc_id
-    // survivor) → curated rows. One projection + one window shuffle.
-    // Bench note: ~2.5s of this query's local time is one-time Janino
-    // compilation (predicate pushdown substitutes the quality HOF tree
-    // into the filter, quadrupling generated-code size); execution after
-    // compile measures ~0.5s at sf0.1 and the compile cost is constant
-    // in data size — a non-issue at cluster scale.
+    // survivor) → curated rows. The gate is Curate.passGate's generator
+    // (no PII scrub), which scores each row once; the fingerprint reads
+    // the gate's tokens. One projection + one window shuffle.
     "q_curate" -> ((s, d) => {
-      val (nTok, _, q) = TokenOps.qualityScore(col("text"))
-      val gated = Tables.documents(s, d)
-        .select(col("doc_id"), col("text"),
-          nTok.as("n_tokens"), q.as("quality"))
-        .filter(col("quality") >= 0.55 && col("n_tokens") >= 5)
+      val gated = graft.app.Curate.passGate(Tables.documents(s, d),
+        graft.app.Curate.Config(redactPii = false))
       graft.operators.Dedup.exactByFingerprint(gated,
-          TokenOps.bagOfWordsFingerprint(col("text")), col("doc_id"))
+          TokenOps.fingerprintOf(col("tokens")), col("doc_id"))
         .select(col("doc_id"), col("n_tokens"), col("quality"))
         .orderBy(col("doc_id"))
     }),
@@ -378,8 +372,8 @@ object TokenQueries extends QueryModule {
     "q_pack_sequences" -> ((s, d) =>
       graft.operators.Packing.packStats(
           graft.operators.Packing.packSequences(
-            Tables.documents(s, d), "doc_id", "text",
-            tokensPerSeq = 200, shards = 8))
+            Tables.documents(s, d), "doc_id",
+            TokenOps.tokenCount(col("text")), tokensPerSeq = 200, shards = 8))
         .orderBy(col("shard"), col("seq_id"))),
 
     // Benchmark decontamination: drop documents whose bag-of-words

@@ -26,6 +26,15 @@ class CurateSpec extends SparkSpec {
     assert(counts.last > 0)
   }
 
+  test("a run leaves the caller's session serializable") {
+    // closures that capture the session (an ML model holding its
+    // training summary) serialize it; the funnel's observations must not
+    // leave it holding an unserializable ObservationManager
+    assert(result.funnel.nonEmpty)
+    new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream())
+      .writeObject(spark)
+  }
+
   test("curated sink round-trips partitioned by lang") {
     val back = PartitionedParquet.read(spark, s"$outDir/curated")
     assert(back.count() === result.curated.count())
@@ -161,17 +170,18 @@ class CurateSpec extends SparkSpec {
     assert(urlRedactions(Curate.gate(raw)) === 1)
     // the frame Curate.run checkpoints
     assert(urlRedactions(
-      Curate.passGate(Similarity.spread(raw), Curate.Config())) === 1)
+      Curate.dedupedGate(Similarity.spread(raw), Curate.Config())) === 1)
   }
 
   test("the gate stage of a one-file input runs in defaultParallelism tasks") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
     val sc = spark.sparkContext
     assert(Tables.documents(spark, sf001).rdd.getNumPartitions === 1)
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Seq[String], Int)]
     val listener = new SparkListener {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        stages.add(e.stageInfo.name -> e.stageInfo.numTasks)
+        stages.add(e.stageInfo.rddInfos.flatMap(_.scope.map(_.name)) ->
+          e.stageInfo.numTasks)
     }
     sc.addSparkListener(listener)
     try Curate.run(spark, sf001,
@@ -180,11 +190,75 @@ class CurateSpec extends SparkSpec {
       org.apache.spark.ListenerBusAccess.drain(sc)
       sc.removeSparkListener(listener)
     }
-    // the gate is run's first checkpoint; its stages carry its call site
+    // the gate runs in the map stage of the checkpointed exact-dedup
+    // frame's exchange: the stage that holds the gate's generator
     import scala.jdk.CollectionConverters._
-    val checkpoints = stages.asScala.toSeq
-      .filter(_._1.startsWith("localCheckpoint at Curate.scala"))
-    val gate = checkpoints.filter(_._1 == checkpoints.head._1)
-    assert(gate.map(_._2).max === sc.defaultParallelism, checkpoints)
+    val gate = stages.asScala.toSeq.filter(_._1.contains("Generate"))
+    assert(gate.nonEmpty && gate.map(_._2).max === sc.defaultParallelism,
+      stages.asScala.toSeq)
+  }
+
+  /** The funnel recomputed with the pipeline's own definitions, applied
+    * one stage at a time: the gate as a Filter over `qualityScore`'s
+    * columns of the redacted text, exact dedup on the text's
+    * fingerprint, MinHash pairs over the survivors' text. */
+  private def recomputedFunnel(config: Curate.Config): Seq[(String, Long)] = {
+    import graft.operators._
+    val raw = Tables.documents(spark, sf001)
+    val redacted = raw.withColumn("text", TextClean.redact($"text"))
+    val (nTok, _, q) = TokenOps.qualityScore($"text")
+    val gated = redacted.withColumn("n_tokens", nTok).withColumn("quality", q)
+      .filter($"quality" >= config.minQuality && $"n_tokens" >= config.minTokens)
+      .localCheckpoint()
+    val exact = Dedup.exactByFingerprint(gated,
+      TokenOps.bagOfWordsFingerprint($"text"), $"doc_id").localCheckpoint()
+    val near = DedupGroups.resolve(exact, "doc_id",
+      MinHashDedup.nearDuplicates(exact, "doc_id", "text",
+        threshold = config.jaccardThreshold)).localCheckpoint()
+    val capped = config.maxPerSource.map(k => Sampling.capPerStratum(near,
+      "doc_id", $"text", "source", k, config.seed))
+    val mixed = Sampling.mixByStratum(capped.getOrElse(near), $"text",
+      $"lang", config.langFractions, config.defaultFraction, config.seed)
+    Seq("input" -> raw.count(), "quality_gate" -> gated.count(),
+      "exact_dedup" -> exact.count(), "near_dedup" -> near.count()) ++
+      capped.map(c => "source_cap" -> c.count()) :+ ("mixed" -> mixed.count())
+  }
+
+  test("the funnel equals its counts recomputed stage by stage") {
+    assert(result.funnel === recomputedFunnel(Curate.Config()))
+    val capped = Curate.Config(maxPerSource = Some(3))
+    val r = Curate.run(spark, sf001,
+      java.nio.file.Files.createTempDirectory("graft-curate-cap2").toString,
+      capped)
+    assert(r.funnel === recomputedFunnel(capped))
+  }
+
+  test("a run checkpoints one corpus-sized frame") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
+    import org.apache.spark.storage.RDDBlockId
+    val sc = spark.sparkContext
+    // bytes per (rdd, block), the last update of each block
+    val blocks = new java.util.concurrent.ConcurrentHashMap[(Int, String), Long]
+    val listener = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        e.blockUpdatedInfo.blockId match {
+          case b: RDDBlockId => blocks.put(b.rddId -> b.name,
+            e.blockUpdatedInfo.memSize + e.blockUpdatedInfo.diskSize)
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try Curate.run(spark, sf001,
+      java.nio.file.Files.createTempDirectory("graft-curate-ckpt").toString)
+    finally {
+      org.apache.spark.ListenerBusAccess.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val perRdd = blocks.asScala.toSeq.groupMapReduce(_._1._1)(_._2)(_ + _)
+    // corpus-sized: at least half the largest checkpointed frame (the
+    // band table and the pair list are far below that)
+    val corpusSized = perRdd.values.count(_ * 2 >= perRdd.values.max)
+    assert(corpusSized === 1, perRdd)
   }
 }

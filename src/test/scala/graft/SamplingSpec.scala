@@ -55,8 +55,9 @@ class SamplingSpec extends SparkSpec {
 
   test("packSequences: every doc assigned once, greedy fill respects budget starts") {
     import graft.operators.Packing
-    val packed = Packing.packSequences(docs, "doc_id", "text",
-      tokensPerSeq = 200, shards = 8)
+    val packed = Packing.packSequences(docs, "doc_id",
+      graft.operators.TokenOps.tokenCount($"text"), tokensPerSeq = 200,
+      shards = 8)
     assert(packed.count() === docs.count())
     // a doc's sequence start offset lies inside that sequence's window
     val bad = packed

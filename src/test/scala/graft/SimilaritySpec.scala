@@ -254,16 +254,40 @@ class SimilaritySpec extends SparkSpec {
     assert(agg === hof)
   }
 
-  test("minhash signatureAgg equals row-local signature form") {
-    val docs = Tables.documents(spark, sf001).limit(50)
-    val hof = docs.select($"doc_id", MinHashDedup.signature(
-        MinHashDedup.shingles(TokenOps.tokenize($"text"), 3), 8).as("sig"))
-      .as[(Long, Seq[Long])].collect().toMap
-    val agg = MinHashDedup.signatureAgg(docs, "doc_id", "text", 3, 8)
-      .as[(Long, Seq[Long])].collect().toMap
-    assert(agg === hof.filter(_._2.nonEmpty)
-      .map { case (k, v) => k -> v }.filter { case (k, _) => agg.contains(k) })
-    assert(agg.forall { case (k, v) => hof(k) === v })
+  test("minhash band kernel equals bandKeys(signature(shingles)) on sf001") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import org.apache.spark.sql.graftbridge.Columns
+    import graft.functions.MinHashBandsExpr
+    // sf001's documents, one under 3 tokens (no shingles) and one whose
+    // shingles repeat
+    val repeated = "a b c a b c a b c a b c d"
+    val docs = Tables.documents(spark, sf001).select($"doc_id", $"text")
+      .union(Seq((-1L, "too short"), (-2L, repeated)).toDF("doc_id", "text"))
+    val toks = TokenOps.tokenize($"text")
+    val sh = MinHashDedup.shingles(toks, 3)
+    val got = docs.select($"doc_id",
+        MinHashDedup.bandKeys(MinHashDedup.signature(sh, 32), 8, 4).as("ref"),
+        MinHashDedup.bandsOf(toks).as("kernel"),
+        Columns.of(MinHashBandsExpr(
+          Columns.expr(MinHashDedup.rawShingles(toks, 3)), 32, 8)).as("raw"))
+      .as[(Long, Seq[Long], Option[Seq[Long]], Option[Seq[Long]])]
+      .collect().map(r => r._1 -> r).toMap
+    assert(got.size === docs.count())
+    // no shingles: no band keys, so no candidate (the reference's keys
+    // would hash an all-null signature, equal across all such documents)
+    assert(got(-1L)._3.isEmpty && got(-1L)._4.isEmpty)
+    val rest = got - -1L
+    assert(rest.values.forall(r => r._3.contains(r._2)),
+      rest.values.filterNot(r => r._3.contains(r._2)).take(3).toSeq)
+    // a repeated shingle does not move a minimum
+    assert(rest.values.forall(r => r._4 == r._3))
+    // the interpreted path is the generated path's function
+    val lit = Literal.create(Seq("a b c", "b c a", "c a b", "a b c", "b c d"),
+      ArrayType(StringType))
+    val interp = MinHashBandsExpr(lit, 32, 8).eval()
+      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray()
+    assert(interp.toSeq === got(-2L)._3.get)
   }
 
   test("prefix-filtered exact jaccard equals inverted-index formulation") {

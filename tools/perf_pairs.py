@@ -2,7 +2,7 @@
 """Alternated parent/change pairs of the repo benchmark, summarized.
 
     python3 tools/perf_pairs.py PARENT_DIR CHANGE_DIR --workload W \\
-        --seeds 11-20 [--seconds 15] [--jsonl ROWS.jsonl]
+        --seeds 11-20 [--seconds 15] [--jsonl ROWS.jsonl] [--traced SEED]
     python3 tools/perf_pairs.py --dry-run
 
 PARENT_DIR and CHANGE_DIR are two checkouts. Each is built first
@@ -23,8 +23,14 @@ its `cache_peak_mb`. The cache total grows with every iteration, so pairs
 whose sides ran different counts are flagged: their `cache_peak_mb` does
 not compare like with like.
 
+`--traced SEED` adds one `--trace 1` run per side on that seed (parent
+first) and prints every per-layer `app.*` counter whose value differs
+between the sides: where a saving or a cost appeared. With `--traced`,
+`--seeds` may be left out.
+
 `--jsonl` appends one JSON row per run as it finishes. `--dry-run`
-checks the summary on canned rows and runs no benchmark.
+checks the summary and the traced table on canned rows and runs no
+benchmark.
 """
 import argparse
 import json
@@ -50,12 +56,12 @@ def order(seed):
     return SIDES if seed % 2 else SIDES[::-1]
 
 
-def run_once(root, workload, seed, seconds):
+def run_once(root, workload, seed, seconds, trace=0):
     with tempfile.TemporaryDirectory() as tmp:
         record = os.path.join(tmp, "record.json")
         cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-               "--seed", str(seed), "--seconds", str(seconds), "--trace", "0",
-               "--record", record]
+               "--seed", str(seed), "--seconds", str(seconds), "--trace",
+               str(trace), "--record", record]
         p = subprocess.run(cmd, cwd=root, stdout=subprocess.PIPE,
                            stderr=subprocess.DEVNULL, text=True)
         try:
@@ -154,6 +160,25 @@ def report(s):
     return "\n".join(lines)
 
 
+def traced_diff(parent, change):
+    """The `app.*` counters of two traced runs' metrics whose values
+    differ, sorted by name: (name, parent, change); a counter one side
+    lacks reads None there."""
+    names = sorted(n for n in set(parent) | set(change) if n.startswith("app."))
+    return [(n, parent.get(n), change.get(n)) for n in names
+            if parent.get(n) != change.get(n)]
+
+
+def traced_report(rows):
+    def num(x):
+        return "-" if x is None else format(x, ".4g")
+    lines = [f"{'counter':<28} {'parent':>10} {'change':>10} {'rel':>8}"]
+    for name, a, b in rows:
+        rel = f"{(b - a) / a:+.1%}" if a and b is not None else "-"
+        lines.append(f"{name:<28} {num(a):>10} {num(b):>10} {rel:>8}")
+    return "\n".join(lines)
+
+
 def declarations(root):
     with open(os.path.join(root, "BENCHMARK.json")) as f:
         return json.load(f)["end_to_end"]
@@ -200,7 +225,18 @@ def self_test():
     assert "6/7" in text and "24/20" in text, text
     assert [order(seed) for seed in (11, 12)] == [SIDES, SIDES[::-1]]
     assert seeds_arg("11-13,20") == [11, 12, 13, 20]
+    diff = traced_diff(
+        {"app.curate.jobs": 36.0, "app.curate.tasks": 54.0,
+         "app.score.jobs": 5.0, "app.curate.spill_mb": 0.0, "ops_per_s": 0.2},
+        {"app.curate.jobs": 23.0, "app.curate.tasks": 54.0,
+         "app.curate.spill_mb": 0.0, "app.curate.wall_s": 3.1, "ops_per_s": 0.3})
+    assert diff == [("app.curate.jobs", 36.0, 23.0),
+                    ("app.curate.wall_s", None, 3.1),
+                    ("app.score.jobs", 5.0, None)], diff
+    table = traced_report(diff)
+    assert "-36.1%" in table and table.count("\n") == 3, table
     print(text)
+    print(table)
     print("self-test OK")
 
 
@@ -212,19 +248,23 @@ def main():
     ap.add_argument("--seeds", type=seeds_arg)
     ap.add_argument("--seconds", type=float, default=15)
     ap.add_argument("--jsonl", help="append one JSON row per run here")
+    ap.add_argument("--traced", type=int, metavar="SEED",
+                    help="also diff one traced run per side on this seed")
     ap.add_argument("--dry-run", action="store_true",
                     help="self-test the summary on canned rows")
     a = ap.parse_args()
     if a.dry_run:
         return self_test()
-    if not (a.parent and a.change and a.workload and a.seeds):
-        ap.error("PARENT_DIR, CHANGE_DIR, --workload and --seeds are required")
+    if not (a.parent and a.change and a.workload and
+            (a.seeds or a.traced is not None)):
+        ap.error("PARENT_DIR, CHANGE_DIR, --workload and --seeds or --traced "
+                 "are required")
     roots = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
     for root in roots.values():
         subprocess.run([sys.executable, "perfbench/build.py"], cwd=root, check=True,
                        stdout=subprocess.DEVNULL)
     rows = []
-    for seed in a.seeds:
+    for seed in a.seeds or []:
         for side in order(seed):
             r = dict(run_once(roots[side], a.workload, seed, a.seconds),
                      workload=a.workload, seed=seed, side=side)
@@ -233,7 +273,13 @@ def main():
             if a.jsonl:
                 with open(a.jsonl, "a") as f:
                     f.write(json.dumps(r) + "\n")
-    print(report(summarize(rows, declarations(roots["parent"]))))
+    if rows:
+        print(report(summarize(rows, declarations(roots["parent"]))))
+    if a.traced is not None:
+        traced = {side: run_once(roots[side], a.workload, a.traced, a.seconds,
+                                 trace=1)["metrics"] for side in SIDES}
+        print(f"traced seed {a.traced}: app.* counters that differ")
+        print(traced_report(traced_diff(traced["parent"], traced["change"])))
     return 0
 
 
